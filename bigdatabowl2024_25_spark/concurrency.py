@@ -19,9 +19,14 @@ the one sanctioned way the suite overlaps such work, so the pattern
 stays greppable and bounded.
 
 Thread-safety notes: DataFrame/Column construction is py4j calls
-(released GIL during JVM work); job-description/group properties are
-thread-local in Spark, so concurrent builders do not clobber each
-other's labels. Builders must not mutate shared Python state.
+(released GIL during JVM work). Spark's local properties (job
+description, job group, scheduler pool, any caller label) are
+thread-local, and in PySpark's pinned-thread mode a new Python thread
+starts with none of them: each builder is therefore wrapped with
+``pyspark.inheritable_thread_target`` in the calling thread, so it
+runs with its own copy of the caller's properties, and concurrent
+builders do not clobber each other's labels. Builders must not mutate
+shared Python state.
 """
 
 from __future__ import annotations
@@ -29,6 +34,10 @@ from __future__ import annotations
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from typing import TypeVar
+
+from pyspark import inheritable_thread_target
+from pyspark.errors import PySparkRuntimeError
+from pyspark.sql import SparkSession
 
 T = TypeVar("T")
 
@@ -54,8 +63,21 @@ def build_concurrently(
     wording fix)."""
     if len(builders) <= 1:
         return {k: fn() for k, fn in builders.items()}
+    try:
+        # active(), not getActiveSession(): a nested call runs in a
+        # builder thread, which has no active session of its own but
+        # does carry the inherited properties to pass on
+        session = SparkSession.active()
+    except PySparkRuntimeError:  # no Spark session: no labels to carry
+        session = None
+    # one wrap per builder: each gets its own copy of the properties,
+    # taken here in the calling thread
+    targets = {
+        k: fn if session is None else inheritable_thread_target(session)(fn)
+        for k, fn in builders.items()
+    }
     with ThreadPoolExecutor(
         max_workers=min(MAX_WORKERS, len(builders))
     ) as pool:
-        futures = {k: pool.submit(fn) for k, fn in builders.items()}
+        futures = {k: pool.submit(fn) for k, fn in targets.items()}
         return {k: f.result() for k, f in futures.items()}

@@ -394,17 +394,23 @@ def hash_sets(hashes: DataFrame, id_col: str) -> DataFrame:
     hashes collapsed into ONE array row (round 16). This is the
     verify-stage layout: a candidate pair's intersection becomes a
     single in-row `array_intersect` (JVM hash-set, codegen) instead of
-    the old explode-join-reaggregate — which shuffled
-    Σ_cand |S(a)| exploded rows and re-aggregated them per pair, the
-    dominant term of the funnel's quadratic candidate stage (guide
-    §2.3 "shuffle keys and metadata instead of payloads": here the
-    per-doc set IS the metadata, moved once per side instead of once
-    per candidate×shingle). Array order is irrelevant: intersection
-    SIZE and set size are order-free."""
+    the old explode-join-reaggregate. The shuffle volume does not
+    shrink much: the first verify join attaches a's array to every
+    candidate pair, and those arrays ride the second join's exchange
+    (keyed by id_b), so a's hashes still cross a shuffle once per
+    candidate — the Σ_cand |S(a)| values the exploded form moved, now
+    packed into arrays. The saving is the per-pair re-aggregation (a
+    groupBy over the exploded join's rows), which is gone. Array order
+    is irrelevant: intersection SIZE and set size are order-free."""
     return hashes.groupBy(F.col(id_col).alias("doc")).agg(
         F.collect_list("h").alias("hs"),
         F.count("*").alias("n"),
     )
+
+
+def _check_threshold(threshold: float) -> None:
+    if not threshold > 0:
+        raise ValueError(f"threshold must be > 0, got {threshold!r}")
 
 
 def jaccard_pairs(
@@ -423,7 +429,12 @@ def jaccard_pairs(
     identical Jaccard doubles; candidates with zero overlap now score
     0.0 instead of vanishing pre-filter — indistinguishable after the
     positive-threshold filter. Pass a precomputed `hashes` relation to
-    share the subtree with the signature stage."""
+    share the subtree with the signature stage.
+
+    Raises ValueError unless `threshold` > 0 (checked in Python,
+    before any plan is built): at 0 every zero-overlap candidate pair
+    would pass the filter as a 0.0 "near duplicate"."""
+    _check_threshold(threshold)
     if hashes is None:
         hashes = shingle_hashes(shingled, id_col)
     sets = hash_sets(hashes, id_col)
@@ -483,7 +494,12 @@ def containment_pairs(
     candidate join + the shared verify joins — all on 8-byte shingle
     hashes and doc ids; document text never moves. Candidate volume is
     Σ_prefix df(h), bounded by the rare-first order, never n².
+
+    Raises ValueError unless `threshold` > 0 (checked in Python,
+    before any plan is built): at 0 the prefix length n − ⌈0·n⌉ + 1
+    exceeds every set and the filter keeps every pair.
     """
+    _check_threshold(threshold)
     if hashes is None:
         hashes = shingle_hashes(shingled, id_col)
     ex = hashes.withColumnRenamed(id_col, "doc")

@@ -3,13 +3,22 @@ aggregate by route × coverage × second.
 
 The reference's chunked process pool (50k rows, cores−1 workers,
 `radius_model.R:210-255`, X3) disappears: `score_openness` is a
-mapInPandas operator and Spark's scheduler is the chunker. The
+mapInPandas operator over one partition per core (see Scale). The
 windowed dense_rank (`:257-261`, W1) and group mean (`:265-268`, A1)
 run as ordinary window/agg over the scored output.
 
-Scale: the kernel is embarrassingly parallel — repartition by
-(gameId, playId) up front so the subsequent secondId window reuses the
-same exchange, then one Arrow round-trip per batch.
+Scale: the kernel is embarrassingly parallel, and its input is tiny in
+bytes but heavy in Python compute (a Monte-Carlo draw per row). AQE
+sizes partitions by bytes, so it coalesces a keyed
+`repartition(cols)` exchange of a sub-MB input into ONE task and the
+kernel runs on one core. The kernel input is therefore repartitioned to
+an explicit count — the context's default parallelism, one task per
+core (`local[N]`'s N; not `spark.sql.shuffle.partitions`, which a plain
+session leaves at 200 near-empty Python tasks) — and AQE never coalesces a
+shuffle whose partition count the plan states. The hash key is the
+full row identity, which spreads rows more evenly than the few
+(gameId, playId) keys of a small batch; the output does not depend on
+the layout, because the kernel seeds each row from its identity.
 """
 
 from __future__ import annotations
@@ -36,7 +45,10 @@ def build_radius_data(
         F.coalesce(F.col("fx"), F.col("x")).alias("fx"),
         F.coalesce(F.col("fy"), F.col("y")).alias("fy"),
         "defenders",
-    ).repartition("gameId", "playId")
+    ).repartition(
+        cleaned_player_data.sparkSession.sparkContext.defaultParallelism,
+        "gameId", "playId", "nflId", "frameId",
+    )
     scored = score_openness(kernel_in, density=density)
     out = cleaned_player_data.join(
         scored, ["gameId", "playId", "nflId", "frameId"], "inner"

@@ -71,3 +71,36 @@ def test_concurrent_spark_actions_match_serial(spark):
     serial = {"agg": agg(), "ckpt": ckpt()}
     parallel = build_concurrently({"agg": agg, "ckpt": ckpt})
     assert parallel == serial
+
+
+def test_builders_inherit_caller_local_properties(spark):
+    """Builder threads run with the caller's Spark local properties
+    (job description, job group, any label), nested calls included,
+    and the wrap emits no "Spark session is not provided" warning."""
+    import warnings
+
+    sc = spark.sparkContext
+
+    def label():
+        return sc.getLocalProperty("bdb.test.label")
+
+    sc.setLocalProperty("bdb.test.label", "caller")
+    try:
+        with warnings.catch_warnings():
+            warnings.simplefilter("error", UserWarning)
+            out = build_concurrently(
+                {
+                    "a": label,
+                    "b": label,
+                    "nested": lambda: build_concurrently(
+                        {"c": label, "d": label}
+                    ),
+                }
+            )
+    finally:
+        sc.setLocalProperty("bdb.test.label", None)
+    assert out == {
+        "a": "caller",
+        "b": "caller",
+        "nested": {"c": "caller", "d": "caller"},
+    }

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import itertools
 
+import pytest
 from pyspark.sql import functions as F
 
 from bigdatabowl2024_25_spark.operators.dedup import (
@@ -157,3 +158,26 @@ def test_hash_sets_verify_matches_exploded_join(spark):
             assert abs(got[(a, b)] - j) < 1e-12, (a, b)
         else:
             assert (a, b) not in got
+
+
+@pytest.mark.parametrize("threshold", [0.0, -0.5])
+def test_pair_scorers_reject_non_positive_threshold(spark, threshold):
+    """threshold <= 0 is refused before any plan is built: ValueError,
+    and no Spark job runs."""
+    df = spark.createDataFrame(
+        list(DOCS.items()), "doc_id long, text string"
+    )
+    sh = with_shingles(df, "text", "doc_id")
+    cands = spark.createDataFrame([(0, 1)], "id_a long, id_b long")
+    sc = spark.sparkContext
+    sc.setJobGroup("test_threshold_check", "threshold check")
+    try:
+        with pytest.raises(ValueError, match="threshold must be > 0"):
+            jaccard_pairs(cands, sh, "doc_id", threshold=threshold)
+        with pytest.raises(ValueError, match="threshold must be > 0"):
+            containment_pairs(sh, "doc_id", threshold=threshold)
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    assert sc.statusTracker().getJobIdsForGroup("test_threshold_check") == []

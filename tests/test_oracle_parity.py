@@ -38,6 +38,11 @@ _DEFAULT_TIER = {
     "q94_codec_roundtrip",      # multimodal codecs
     "q95_source_sink_roundtrip",  # sources/sinks
 }
+# a renamed query must fail collection loudly, not drop silently into
+# the slow tier
+assert _DEFAULT_TIER <= set(suite.QUERIES), sorted(
+    _DEFAULT_TIER - set(suite.QUERIES)
+)
 
 
 @pytest.mark.parametrize(

@@ -82,6 +82,68 @@ def test_ball_anchoring(cpd):
     assert abs(row.fy - 26.6) < 1e-9
 
 
+def _kernel_input(df):
+    """After `df` was collected: the final AQE plan's nodes between the
+    openness kernel (MapInPandas) and its shuffle exchange, and the
+    exchange itself."""
+
+    def children(n):
+        if n.getClass().getSimpleName().endswith("QueryStageExec"):
+            return [n.plan()]
+        ch = n.children()
+        return [ch.apply(i) for i in range(ch.size())]
+
+    stack = [df._jdf.queryExecution().executedPlan().executedPlan()]
+    while stack:
+        n = stack.pop()
+        if n.nodeName() == "MapInPandas":
+            path, n = [], children(n)[0]
+            while n.nodeName() != "Exchange":
+                path.append(n)
+                n = children(n)[0]
+            return path, n
+        stack.extend(children(n))
+    raise AssertionError("no MapInPandas in the final plan")
+
+
+def test_kernel_exchange_not_coalesced(spark, cpd):
+    """AQE sizes partitions by bytes and packs a keyed exchange of the
+    sub-MB kernel input into one task; the explicit partition count
+    keeps one kernel task per core (fixture: 6 plays). density 2.0,
+    not the `radius` fixture's 3.0: a plan equal to a cached one would
+    read the cache instead of running the kernel."""
+    df = radius_stage.build_radius_data(cpd, density=2.0)
+    df.collect()
+    path, exchange = _kernel_input(df)
+    assert not any(
+        n.nodeName() == "AQEShuffleRead" and n.hasCoalescedPartition()
+        for n in path
+    )
+    assert (
+        exchange.outputPartitioning().numPartitions()
+        == spark.sparkContext.defaultParallelism
+    )
+
+
+def test_radius_data_partition_invariant(spark, cpd, radius, monkeypatch):
+    """The kernel seeds each row from its identity: running it on one
+    partition gives the same radius_data as one partition per core."""
+    monkeypatch.setattr(
+        type(spark.sparkContext), "defaultParallelism", property(lambda sc: 1)
+    )
+    one = radius_stage.build_radius_data(cpd, density=3.0)
+    rows = one.collect()
+    monkeypatch.undo()
+    assert _kernel_input(one)[1].outputPartitioning().numPartitions() == 1
+
+    def key(r):
+        return r.gameId, r.playId, r.nflId, r.frameId
+
+    per_core = radius.select(one.columns).collect()
+    assert len(rows) == len(per_core) > 0
+    assert {key(r): r for r in rows} == {key(r): r for r in per_core}
+
+
 def test_radius_data(radius):
     assert radius.count() > 0
     assert_unique_key(radius, ["gameId", "playId", "frameId", "nflId"])
@@ -170,7 +232,20 @@ def test_full_dag_materialized(spark, t, tmp_path):
     stage persists, reads back, and feeds the next; stage keys hold."""
     from bigdatabowl2024_25_spark.pipelines.dag import run_dag
 
-    out = run_dag(spark, t, str(tmp_path / "stages"), density=3.0)
+    # run_dag writes its stages from builder threads: every job it
+    # starts must still carry the caller's job group
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("test_run_dag", "run_dag stage writes")
+    try:
+        out = run_dag(spark, t, str(tmp_path / "stages"), density=3.0)
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+    assert tracker.getJobIdsForGroup("test_run_dag")
     expected = {
         "cleaned_player_data",
         "radius_data",
