@@ -1,22 +1,27 @@
-"""Connected components by iterative min-label propagation — the
-clustering stage of the dedup pipeline (near-dup PAIRS from LSH/
-Jaccard become GROUPS; one keeper survives per group).
+"""Connected components — the clustering stage of the dedup pipeline
+(near-dup PAIRS from LSH/Jaccard become GROUPS; one keeper survives
+per group). One entry point, `connected_components`, with two
+executions chosen by edge count:
 
-Each round every node adopts the minimum label among itself and its
-neighbors; convergence takes O(component diameter) rounds — near-dup
-clusters are shallow (pairs all share a common origin), so a handful
-of rounds suffices at any corpus size. Each round is one join + one
-aggregate on the node key; intermediate labels are persisted so the
-lineage doesn't grow exponentially across iterations (the classic
-iterative-Spark footgun).
+- at or below `SMALL_GRAPH_EDGES` symmetric edges, union-find in ONE
+  mapInPandas task (the post-funnel pair list is tiny next to the
+  corpus; distributed rounds would be pure job scheduling);
+- above it, iterative min-label propagation: each round every node
+  adopts the minimum label among itself and its neighbors, as one
+  join + one aggregate on the node key, until no label changes —
+  at most component diameter + 1 rounds. Near-dup clusters are
+  shallow (pairs share a common origin), so a handful of rounds
+  suffices at any corpus size. Intermediate labels are persisted,
+  and every `CHECKPOINT_EVERY` rounds checkpointed, so the lineage
+  stays bounded (the classic iterative-Spark footgun).
 
-This is the small-diameter regime of connected components; for
-general graphs with long chains use the large-star/small-star
-algorithm — same primitive operations, fewer rounds.
+Checkpoints are reliable (files under `sc.setCheckpointDir`) when the
+deployment set a checkpoint dir, and `localCheckpoint` otherwise.
 """
 
 from __future__ import annotations
 
+import itertools
 import logging
 
 from pyspark.sql import DataFrame
@@ -24,6 +29,12 @@ from pyspark.sql import functions as F
 
 _log = logging.getLogger(__name__)
 _release_failed_once = False
+
+#: symmetric edge count at or below which one union-find task solves
+#: the whole graph instead of the distributed min-label loop
+SMALL_GRAPH_EDGES = 5_000_000
+#: min-label rounds between lineage-truncating checkpoints
+CHECKPOINT_EVERY = 5
 
 
 def _release_checkpoint(df: DataFrame) -> None:
@@ -53,27 +64,16 @@ def _release_checkpoint(df: DataFrame) -> None:
             )
 
 
-def _checkpoint(df: DataFrame, mode: str) -> DataFrame:
-    """Eager lineage-truncating checkpoint in the selected mode.
-
-    - ``local``: `localCheckpoint` — executor-storage blocks, no extra
-      I/O, but unrecoverable if an executor dies (lineage is gone).
-      Right for local[n] and restartable batch jobs.
-    - ``reliable``: `checkpoint` to the SparkContext's checkpoint dir
-      (caller must `sc.setCheckpointDir(...)` first — typically HDFS/
-      object storage on a real cluster) — survives executor loss,
-      which a 1000-executor multi-hour CC run needs.
-    """
-    if mode == "reliable":
-        sc = df.sparkSession.sparkContext
-        if sc.getCheckpointDir() is None:
-            raise ValueError(
-                "checkpoint_mode='reliable' requires "
-                "sc.setCheckpointDir(<fault-tolerant path>) first"
-            )
+def _checkpoint(df: DataFrame) -> DataFrame:
+    """Eager lineage-truncating checkpoint. Reliable
+    (`df.checkpoint`, files under the SparkContext's checkpoint dir —
+    survives executor loss, which a 1000-executor multi-hour CC run
+    needs) when the deployment has called `sc.setCheckpointDir(...)`;
+    otherwise `localCheckpoint` — executor-storage blocks, no extra
+    I/O, unrecoverable if an executor dies (lineage is gone), right
+    for local[n] and restartable batch jobs."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
         return df.checkpoint(eager=True)
-    if mode != "local":
-        raise ValueError(f"unknown checkpoint_mode {mode!r}")
     return df.localCheckpoint()
 
 
@@ -124,60 +124,48 @@ def _components_single_task(sym: DataFrame) -> DataFrame:
 
 
 def connected_components(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iter: int = 20,
-    checkpoint_every: int = 5,
-    small_graph_threshold: int = 5_000_000,
-    checkpoint_mode: str = "local",
+    edges: DataFrame, src: str = "id_a", dst: str = "id_b"
 ) -> DataFrame:
     """(node, component) for every node in `edges`, component = min
-    node id reachable. Converges early when a round changes nothing.
+    node id reachable.
 
     Size-adaptive execution: the symmetric edge set is counted once
-    (it is persisted anyway); at or below `small_graph_threshold`
-    edges the whole problem routes to `_components_single_task` —
-    after an LSH funnel the verified near-dup pair list is typically
-    orders of magnitude smaller than the corpus, and 5M edges in one
-    union-find task costs seconds, while six distributed rounds of
-    joins cost the same in pure job scheduling. Above the threshold
-    (a 100 TB corpus with billions of candidate pairs) the iterative
-    min-label loop below does the work with bounded per-round state;
-    pass small_graph_threshold=0 to force it.
+    (it is persisted anyway); at or below `SMALL_GRAPH_EDGES` edges
+    the whole problem routes to `_components_single_task` — after an
+    LSH funnel the verified near-dup pair list is typically orders of
+    magnitude smaller than the corpus, and 5M edges in one union-find
+    task costs seconds, while six distributed rounds of joins cost the
+    same in pure job scheduling. Above it (a 100 TB corpus with
+    billions of candidate pairs) the min-label loop below does the
+    work with bounded per-round state, until a round changes no label
+    (at most component diameter + 1 rounds).
 
     persist() keeps each round's DATA from recomputing, but the logical
-    plan still deepens linearly with rounds — on a long-chain graph
-    (diameter ≈ max_iter) the planner cost itself becomes the
-    bottleneck, so every `checkpoint_every` rounds the labels are
-    localCheckpoint()ed, truncating lineage to a leaf.
+    plan still deepens linearly with rounds — on a long-chain graph the
+    planner cost itself becomes the bottleneck, so every
+    `CHECKPOINT_EVERY` rounds the labels are checkpointed
+    (`_checkpoint`: reliable when a checkpoint dir is set, local
+    otherwise), truncating lineage to a leaf.
 
     Checkpoint lifecycle: `unpersist()` is a NO-OP on a checkpointed
     DataFrame, so superseded checkpoint blocks would pile up in
     executor storage across long runs; each eager checkpoint therefore
     explicitly releases the previous one (safe: eager ⇒ the new
     blocks are fully materialized before the old lineage anchor is
-    dropped). The newest checkpoint backs the RETURNED DataFrame and
-    is left alive — its blocks are freed when the caller drops the
-    result and the ContextCleaner collects it.
-
-    `checkpoint_mode` selects the durability trade-off (see
-    `_checkpoint`): the default ``local`` keeps blocks in executor
-    storage — fast, but losing an executor mid-run loses them
-    unrecoverably (lineage was truncated; nothing to recompute from),
-    fine on local[n] and restartable batch jobs; ``reliable`` writes
-    each checkpoint to `sc.setCheckpointDir`'s fault-tolerant path,
-    which a 1000-executor multi-hour run should use."""
+    dropped; a no-op for reliable checkpoints, whose files are
+    cleaned with the checkpoint dir). The newest checkpoint backs the
+    RETURNED DataFrame and is left alive — its blocks are freed when
+    the caller drops the result and the ContextCleaner collects it."""
     sym = edges.select(
         F.col(src).alias("a"), F.col(dst).alias("b")
     ).unionByName(
         edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
     )
     sym = sym.distinct().persist()
-    if sym.count() <= small_graph_threshold:
+    if sym.count() <= SMALL_GRAPH_EDGES:
         out = _components_single_task(sym)
         # materialize before dropping the cached edges it reads
-        out = _checkpoint(out, checkpoint_mode)
+        out = _checkpoint(out)
         sym.unpersist()
         return out
     labels = (
@@ -187,7 +175,7 @@ def connected_components(
         .persist()
     )
     last_cp: DataFrame | None = None
-    for i in range(max_iter):
+    for rnd in itertools.count(1):
         msgs = (
             sym.join(labels, sym["a"] == labels["node"])
             .select(F.col("b").alias("node"), "component")
@@ -213,18 +201,14 @@ def connected_components(
             )
         )
         release_at_round_end = None
-        if (i + 1) % checkpoint_every == 0:
+        if rnd % CHECKPOINT_EVERY == 0:
             # eager: truncates the logical plan AND materializes
-            new_full = _checkpoint(new_full, checkpoint_mode)
+            new_full = _checkpoint(new_full)
             # the old checkpoint can only be released at round end:
             # this round's changed-count reads the previous round's
             # labels, whose (possibly partially-cached) lineage
-            # anchors on the old checkpoint. (Release applies to
-            # local mode's executor blocks; reliable-mode files are
-            # cleaned with the checkpoint dir.)
-            if checkpoint_mode == "local":
-                release_at_round_end = last_cp
-            last_cp = new_full
+            # anchors on the old checkpoint
+            release_at_round_end, last_cp = last_cp, new_full
         else:
             new_full = new_full.persist()
         changed = (
@@ -242,135 +226,3 @@ def connected_components(
             break
     sym.unpersist()
     return labels.select("node", "component")
-
-
-def _symmetric(edges: DataFrame, src: str, dst: str) -> DataFrame:
-    sym = edges.select(
-        F.col(src).alias("u"), F.col(dst).alias("v")
-    ).unionByName(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-    return sym.filter(F.col("u") != F.col("v")).distinct()
-
-
-def _fingerprint(edges: DataFrame) -> tuple:
-    """Cheap deterministic edge-set fingerprint for convergence:
-    (count, sum of per-edge xxhash64). Used only to detect 'no change
-    between rounds' — both rounds' sets are produced by the same
-    deterministic transform, so equality of fingerprints across
-    consecutive rounds means equality of sets up to a 64-bit-collision
-    of SUMS of distinct sets, negligible against the cost of an
-    exceptAll anti-join every round."""
-    row = edges.agg(
-        F.count(F.lit(1)).alias("n"),
-        # decimal sum: a plain long sum of 64-bit hashes overflows
-        # under ANSI mode
-        F.sum(
-            F.xxhash64(F.col("a"), F.col("b")).cast("decimal(38,0)")
-        ).alias("h"),
-    ).collect()[0]
-    return (row.n, row.h)
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iter: int = 30,
-    checkpoint_every: int = 1,
-    checkpoint_mode: str = "local",
-) -> DataFrame:
-    """(node, component) via alternating large-star / small-star
-    contraction (Kiveris et al., "Connected Components in MapReduce
-    and Beyond") — the deep-graph complement to `connected_components`:
-    min-label propagation needs O(diameter) rounds, this needs
-    O(log n) regardless of diameter, at the cost of two grouped
-    passes per round.
-
-    - large-star: every node points its LARGER neighbors at the
-      minimum of its closed neighborhood;
-    - small-star: every node and its SMALLER neighbors contract onto
-      their minimum.
-
-    Each pass is one groupBy(min) + one broadcast-free equi-join on
-    the node key — the same shuffle primitives as min-label, so the
-    100 TB posture is identical (hash-partition on node id, AQE skew
-    split on hot hubs). Converges when the edge set is a star forest
-    (fixed point of both passes), detected by an edge-set
-    fingerprint; labels are then child→root plus root→root.
-
-    Use this for general/deep graphs (web link graphs, long chains);
-    `connected_components` stays the default for the shallow
-    clusters of the dedup funnel, where its single pass per round
-    wins on constant factors.
-
-    checkpoint_every defaults to 1 (every round), unlike min-label's
-    5: a star round references the previous edge set ~16 times
-    (sym×2 → mins/join ×2 → oriented/smins ×2 each), so the LOGICAL
-    plan multiplies ~16× per round — persist() truncates recompute
-    but not the analyzer's tree, and two un-checkpointed rounds
-    already push Catalyst's clone into heap exhaustion (measured).
-    The eager checkpoint costs nothing extra here: the fingerprint
-    action would materialize the round anyway.
-    """
-    cur = _symmetric(edges, src, dst).select(
-        F.col("u").alias("a"), F.col("v").alias("b")
-    ).persist()
-    all_nodes = (
-        cur.select(F.col("a").alias("node")).distinct().persist()
-    )
-    all_nodes.count()
-    last_cp: DataFrame | None = None
-    fp = _fingerprint(cur)
-    for i in range(max_iter):
-        # --- large-star: (v, m) for v ∈ Γ(u), v > u; m = min(Γ⁺(u)) --
-        sym = cur.unionByName(
-            cur.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        )
-        mins = sym.groupBy("a").agg(F.min("b").alias("mn"))
-        m = F.least(F.col("a"), F.col("mn"))
-        large = (
-            sym.join(mins, "a")
-            .filter(F.col("b") > F.col("a"))
-            .select(F.col("b").alias("a"), m.alias("b"))
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
-        )
-        # --- small-star over (u, v<u): contract {u} ∪ N₋(u) onto min --
-        oriented = large.select(
-            F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b")
-        ).distinct()
-        smins = oriented.groupBy("a").agg(F.min("b").alias("mn"))
-        small = (
-            oriented.join(smins, "a")
-            .select(F.col("b").alias("a"), F.col("mn").alias("b"))
-            .unionByName(
-                smins.select(F.col("a"), F.col("mn").alias("b"))
-            )
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
-        )
-        release_at_round_end = None
-        if (i + 1) % checkpoint_every == 0:
-            small = _checkpoint(small, checkpoint_mode)
-            if checkpoint_mode == "local":
-                release_at_round_end = last_cp
-            last_cp = small
-        else:
-            small = small.persist()
-        new_fp = _fingerprint(small)
-        cur.unpersist()
-        cur = small
-        if release_at_round_end is not None:
-            _release_checkpoint(release_at_round_end)
-        if new_fp == fp:
-            break
-        fp = new_fp
-    # star forest → labels: children point at roots; roots (and any
-    # node whose component stayed itself) label themselves
-    children = cur.select(
-        F.col("a").alias("node"), F.col("b").alias("component")
-    )
-    labels = all_nodes.join(children, "node", "left").select(
-        "node", F.coalesce("component", F.col("node")).alias("component")
-    )
-    all_nodes.unpersist()
-    return labels

@@ -391,7 +391,7 @@ def lsh_candidates(
 
 def hash_sets(hashes: DataFrame, id_col: str) -> DataFrame:
     """(doc, hs array<bigint>, n) — each document's distinct shingle
-    hashes collapsed into ONE array row (round 16). This is the
+    hashes collapsed into ONE array row (round 16), n = |hs|. This is the
     verify-stage layout: a candidate pair's intersection becomes a
     single in-row `array_intersect` (JVM hash-set, codegen) instead of
     the old explode-join-reaggregate. The shuffle volume does not
@@ -401,11 +401,14 @@ def hash_sets(hashes: DataFrame, id_col: str) -> DataFrame:
     candidate — the Σ_cand |S(a)| values the exploded form moved, now
     packed into arrays. The saving is the per-pair re-aggregation (a
     groupBy over the exploded join's rows), which is gone. Array order
-    is irrelevant: intersection SIZE and set size are order-free."""
+    is irrelevant: intersection SIZE and set size are order-free.
+
+    The arrays are SETS (`collect_set`) and n is their size, so a
+    duplicated (doc, h) input row cannot inflate n while
+    `array_intersect` dedups — which would bias Jaccard low."""
     return hashes.groupBy(F.col(id_col).alias("doc")).agg(
-        F.collect_list("h").alias("hs"),
-        F.count("*").alias("n"),
-    )
+        F.collect_set("h").alias("hs")
+    ).withColumn("n", F.size("hs").cast("long"))
 
 
 def _check_threshold(threshold: float) -> None:
@@ -509,8 +512,11 @@ def containment_pairs(
     ranked = (
         ex.join(dfreq, ["h"])
         .withColumn(
+            # dense_rank numbers DISTINCT shingles: a duplicated
+            # (doc, h) row shares its rank, so the prefix below always
+            # holds the n − ⌈t·n⌉ + 1 distinct shingles the proof needs
             "rn",
-            F.row_number().over(
+            F.dense_rank().over(
                 Window.partitionBy("doc").orderBy("df", "h")
             ),
         )

@@ -1,4 +1,4 @@
-"""Link-graph centrality — fixed-point PageRank.
+"""Link-graph centrality — fixed-point PageRank, TrustRank and HITS.
 
 Why it's here: large-scale corpus pipelines weight domains by
 web-graph centrality (Common Crawl publishes harmonic-centrality
@@ -11,13 +11,13 @@ solves for connected components. PageRank adds the weighted-propagation
 variant.
 
 Determinism: ranks are **scaled integers** (``rank ≈ pagerank ×
-scale``). Every operation is integer arithmetic — ``div`` for the
+SCALE``). Every operation is integer arithmetic — ``div`` for the
 per-edge share, exact bigint sums, damping as a ``num/den`` rational —
 so the result is bit-identical on any engine and partitioning, and a
 DuckDB oracle can re-derive it with the same unrolled arithmetic
 (float PageRank would die on order-dependent double sums). The floor
 divisions leak ≤1 unit of mass per node per round — a ~1e-9 relative
-perturbation at the default scale, irrelevant for a ranking signal and
+perturbation at ``SCALE``, irrelevant for a ranking signal and
 the price of exactness.
 
 Scale: per iteration, one shuffle for the contribution aggregate
@@ -27,8 +27,15 @@ makes the per-round shuffle a map-side zip at cluster scale. Out-degree
 and the node list are computed once. The dangling mass is a 1-row
 aggregate broadcast back (crossJoin of a scalar). Plan depth grows
 linearly per round, and each rank is referenced twice (contributions +
-dangling), so rounds beyond ``eager_every`` are cut with
-``localCheckpoint`` exactly like ``components.py``'s min-label loop.
+dangling), so every round is cut with ``localCheckpoint`` — eagerly
+every ``EAGER_EVERY`` rounds — like ``components.py``'s min-label loop.
+
+One recurrence: TrustRank (Gyöngyi et al., VLDB 2004) is PageRank with
+teleport and dangling mass restricted to a seed set S, and PageRank is
+the case S = every node. `_seeded_rank` holds that recurrence once;
+`pagerank` and `trustrank` differ only in the seed set they pass.
+Damping, scale and the eager-cut cadence are module constants, shared
+with the ``oracle_*_sql`` generators that re-derive the results.
 """
 
 from __future__ import annotations
@@ -36,13 +43,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: rank unit: 1.0 of probability mass == SCALE units
-DEFAULT_SCALE = 10**12
+#: rank unit (pagerank/trustrank): 1.0 of probability mass == SCALE units
+SCALE = 10**12
+#: hub/authority unit: each side's scores sum to ~HITS_SCALE
+HITS_SCALE = 10**9
+#: damping as a rational, DAMPING_NUM/DAMPING_DEN = 0.85
+DAMPING_NUM, DAMPING_DEN = 17, 20
+#: every EAGER_EVERY-th per-round lineage cut is eager (see `_cut`)
+EAGER_EVERY = 4
 
 
 def _cut(df: DataFrame, eager: bool) -> DataFrame:
     """Lineage cut for the per-round loop frames (ranks/auths/hubs):
-    ``localCheckpoint`` — lazy between ``eager_every`` marks, eager at
+    ``localCheckpoint`` — lazy between ``EAGER_EVERY`` marks, eager at
     them (the failure-domain bound: a mid-chain loss never recomputes
     more than that many rounds).
 
@@ -77,76 +90,94 @@ def _cut(df: DataFrame, eager: bool) -> DataFrame:
     return df.localCheckpoint(eager=eager)
 
 
-def pagerank(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    *,
-    iterations: int = 3,
-    damping_num: int = 17,
-    damping_den: int = 20,
-    scale: int = DEFAULT_SCALE,
-    eager_every: int = 4,
-) -> DataFrame:
-    """Fixed-point PageRank over a directed edge list.
+def _edges_and_nodes(
+    edges: DataFrame, src: str, dst: str
+) -> tuple[DataFrame, DataFrame]:
+    """(e, nodes): the edge list as (src, dst) behind a lazy
+    localCheckpoint, and its distinct node list.
 
-    ``edges`` must already be distinct (src, dst) pairs — multigraph
-    weighting is the caller's policy decision. Returns
-    ``(node, rank_scaled)`` where ``rank_scaled / scale`` approximates
-    the PageRank probability with damping ``damping_num/damping_den``
-    (default 17/20 = 0.85). Dangling nodes (no out-edges) redistribute
-    their mass uniformly, the standard correction.
+    NULL endpoints are dropped at the door: kept, a NULL "node"
+    half-joins through the rounds (NULL never equi-joins, but groupBy
+    keeps it as a key), so it would receive rank while its out-edges
+    are mis-read as dangling — and in hits its mass enters the L1
+    total while the node itself drops from the output join, silently
+    deflating every other score.
 
-    Per round, for previous ranks r:
-        share(e)  = r[e.src] div outdeg[e.src]
-        contrib(v)= Σ share(e) over e.dst = v           (exact bigint)
-        dangling  = Σ r[v] over v with outdeg 0
-        r'(v)     = (den-num)·scale div (den·N)
-                    + num·(contrib(v) + dangling div N) div den
-
-    Every round past ``eager_every`` is materialized with
-    ``localCheckpoint`` so the doubly-referenced rank lineage cannot
-    grow exponentially (same guard as `components.connected_components`;
-    the driver-facing q74 branch stays at 3 lazy rounds).
-    """
-    if iterations < 1:
-        raise ValueError("iterations must be >= 1")
-    # NULL endpoints are dropped at the door: kept, a NULL "node"
-    # half-joins through the rounds (NULL never equi-joins, but
-    # groupBy keeps it as a key), so it would receive rank while its
-    # out-edges are mis-read as dangling — and in hits its mass
-    # enters the L1 total while the node itself drops from the
-    # output join, silently deflating every other score
+    The edge list is read several times (node list twice, out-degree,
+    one join per round), so it is materialized once to
+    executor-local storage instead of re-deriving the upstream
+    subtree per reference — the same cut GraphX makes; for
+    fault-tolerant long runs route the INPUT through a reliable
+    checkpoint first (components.connected_components pattern)."""
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     e = e.filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-    # The edge list is read 3 + iterations times (node list twice,
-    # out-degree, one share-join per round). Materialize it once to
-    # executor-local storage instead of re-deriving the upstream
-    # subtree per reference — the same cut GraphX makes; for
-    # fault-tolerant long runs route the INPUT through a reliable
-    # checkpoint first (components.connected_components pattern).
     e = e.localCheckpoint(eager=False)
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
     )
+    return e, nodes
+
+
+def _seeded_rank(
+    e: DataFrame,
+    nodes: DataFrame,
+    seeds: DataFrame | None,
+    iterations: int,
+) -> DataFrame:
+    """The shared PageRank/TrustRank recurrence → (node, rank_scaled).
+
+    ``seeds`` is the in-graph seed set S (a distinct ``node`` column),
+    or None for S = every node (PageRank: ``is_seed = 1``, no seed
+    join). With ns = |S|, per round, for previous ranks r:
+        share(e)  = r[e.src] div outdeg[e.src]
+        contrib(v)= Σ share(e) over e.dst = v           (exact bigint)
+        dangling  = Σ r[v] over v with outdeg 0
+        r'(v)     = [v∈S]·(den−num)·scale div (den·ns)
+                    + num·(contrib(v) + [v∈S]·(dangling div ns)) div den
+    from r0(v) = [v∈S]·(scale div ns). An empty S fails LOUDLY at
+    execution; with S = every node it never fires (an empty graph
+    has no row to evaluate it on)."""
     outdeg = e.groupBy(F.col("src").alias("node")).agg(
         F.count("*").alias("deg")
     )
-    # node list + degree are reused every round: keep them one plan
-    base = nodes.join(outdeg, "node", "left").select(
-        "node", F.coalesce("deg", F.lit(0)).alias("deg")
+    base = nodes.join(outdeg, "node", "left")
+    if seeds is None:
+        is_seed = F.lit(1)
+    else:
+        base = base.join(seeds.withColumn("__s", F.lit(1)), "node", "left")
+        is_seed = F.coalesce("__s", F.lit(0))
+    # node list + degree + seed flag are reused every round: one plan
+    base = base.select(
+        "node",
+        F.coalesce("deg", F.lit(0)).alias("deg"),
+        is_seed.alias("is_seed"),
+    ).localCheckpoint(eager=False)
+    counts = base.agg(
+        F.coalesce(F.sum("is_seed"), F.lit(0)).alias("ns")
     )
-    base = base.localCheckpoint(eager=False)
-    n_nodes = base.agg(F.count("*").alias("n"))
-
-    teleport_num = (damping_den - damping_num) * scale
-    ranks = base.join(n_nodes).select(
+    tele_num = (DAMPING_DEN - DAMPING_NUM) * SCALE
+    guard = F.when(
+        F.col("ns") == 0,
+        F.raise_error(
+            F.lit(
+                "trustrank: no seed intersects the graph's node set — "
+                "a silent all-zero trust vector would read as "
+                "'everything is spam'; pass at least one in-graph seed"
+            )
+        ).cast("bigint"),
+    )
+    # r0: all teleport mass on the seeds (the classic init d = 1_S/|S|)
+    ranks = base.join(counts).select(
         "node",
         "deg",
-        F.expr(f"{scale} div n").alias("rank_scaled"),
-        "n",
+        "is_seed",
+        "ns",
+        F.coalesce(
+            guard,
+            F.expr(f"is_seed * ({SCALE} div ns)").cast("bigint"),
+        ).alias("rank_scaled"),
     )
     for i in range(iterations):
         shares = e.join(
@@ -162,18 +193,21 @@ def pagerank(
             F.coalesce(F.sum("rank_scaled"), F.lit(0)).alias("dm")
         )
         ranks = (
-            ranks.select("node", "deg", "n")
+            ranks.select("node", "deg", "is_seed", "ns")
             .join(contrib, "node", "left")
             .join(dangling)
             .select(
                 "node",
                 "deg",
-                "n",
+                "is_seed",
+                "ns",
                 (
-                    F.expr(f"{teleport_num} div ({damping_den} * n)")
+                    F.expr(
+                        f"is_seed * ({tele_num} div ({DAMPING_DEN} * ns))"
+                    )
                     + F.expr(
-                        f"{damping_num} * (coalesce(contrib, 0)"
-                        f" + (dm div n)) div {damping_den}"
+                        f"{DAMPING_NUM} * (coalesce(contrib, 0)"
+                        f" + is_seed * (dm div ns)) div {DAMPING_DEN}"
                     )
                 ).alias("rank_scaled"),
             )
@@ -182,25 +216,39 @@ def pagerank(
         # join, dangling aggregate, next-round base), so an uncut plan
         # TRIPLES per round — 3^n subtree copies (observed: 9 KB → 28
         # KB per extra round; the composed-pipeline OOM lesson from
-        # pipelines/corpus._fanout applies). `_cut` persists each
-        # round (physical-plan leaf, no re-execution per reference —
-        # see _cut for why persist, not lazy localCheckpoint) and
-        # every `eager_every` rounds checkpoints eagerly so the
-        # LOGICAL tree stays bounded and a failure mid-chain never
-        # recomputes more than that many rounds.
+        # pipelines/corpus._fanout applies). `_cut` checkpoints each
+        # round lazily (see _cut for why not persist) and every
+        # `EAGER_EVERY` rounds eagerly, so the LOGICAL tree stays
+        # bounded and a failure mid-chain never recomputes more than
+        # that many rounds.
         if (i + 1) < iterations:
-            ranks = _cut(ranks, (i + 1) % eager_every == 0)
+            ranks = _cut(ranks, (i + 1) % EAGER_EVERY == 0)
     return ranks.select("node", "rank_scaled")
 
 
-def oracle_pagerank_sql(
-    edges_cte: str,
+def pagerank(
+    edges: DataFrame,
+    src: str = "src",
+    dst: str = "dst",
     *,
     iterations: int = 3,
-    damping_num: int = 17,
-    damping_den: int = 20,
-    scale: int = DEFAULT_SCALE,
-) -> str:
+) -> DataFrame:
+    """Fixed-point PageRank over a directed edge list.
+
+    ``edges`` must already be distinct (src, dst) pairs — multigraph
+    weighting is the caller's policy decision. Returns
+    ``(node, rank_scaled)`` where ``rank_scaled / SCALE`` approximates
+    the PageRank probability with damping ``DAMPING_NUM/DAMPING_DEN``
+    (17/20 = 0.85). Dangling nodes (no out-edges) redistribute their
+    mass uniformly, the standard correction. The recurrence is
+    `_seeded_rank`'s with every node a seed."""
+    if iterations < 1:
+        raise ValueError("iterations must be >= 1")
+    e, nodes = _edges_and_nodes(edges, src, dst)
+    return _seeded_rank(e, nodes, None, iterations)
+
+
+def oracle_pagerank_sql(edges_cte: str, *, iterations: int = 3) -> str:
     """DuckDB CTE block re-deriving `pagerank` by unrolled iteration.
 
     ``edges_cte`` must be a SELECT yielding distinct (src, dst).
@@ -209,7 +257,7 @@ def oracle_pagerank_sql(
     ``//`` in DuckDB and ``div`` in Spark agree on the non-negative
     values used here.
     """
-    tele = (damping_den - damping_num) * scale
+    tele = (DAMPING_DEN - DAMPING_NUM) * SCALE
     parts = [
         f"pr_edges AS (SELECT * FROM ({edges_cte}) __e "
         "WHERE src IS NOT NULL AND dst IS NOT NULL)",
@@ -222,7 +270,7 @@ def oracle_pagerank_sql(
             ) d ON d.src = nn.node
         )""",
         "pr_n AS (SELECT COUNT(*) AS n FROM pr_base)",
-        f"pr_r0 AS (SELECT node, deg, CAST({scale} // n AS BIGINT) AS r"
+        f"pr_r0 AS (SELECT node, deg, CAST({SCALE} // n AS BIGINT) AS r"
         " FROM pr_base, pr_n)",
     ]
     for i in range(1, iterations + 1):
@@ -243,9 +291,9 @@ def oracle_pagerank_sql(
         parts.append(
             f"""pr_r{i} AS (
             SELECT b.node, b.deg,
-                   CAST({tele} // ({damping_den} * pr_n.n)
-                        + {damping_num} * (COALESCE(c.c, 0)
-                          + (pr_d{i}.dm // pr_n.n)) // {damping_den}
+                   CAST({tele} // ({DAMPING_DEN} * pr_n.n)
+                        + {DAMPING_NUM} * (COALESCE(c.c, 0)
+                          + (pr_d{i}.dm // pr_n.n)) // {DAMPING_DEN}
                         AS BIGINT) AS r
             FROM pr_base b
             LEFT JOIN pr_c{i} c ON c.node = b.node, pr_n, pr_d{i}
@@ -260,8 +308,6 @@ def hits(
     dst: str = "dst",
     *,
     iterations: int = 2,
-    scale: int = 10**9,
-    eager_every: int = 4,
     broadcast_scores: bool = False,
 ) -> DataFrame:
     """Fixed-point HITS (Kleinberg 1999) hubs & authorities over a
@@ -297,7 +343,7 @@ def hits(
     sums broadcast back (crossJoin of a scalar). Same per-round
     lineage-cut policy as `pagerank` (scores referenced twice per
     round → lazy localCheckpoint each round, eager every
-    ``eager_every``)."""
+    ``EAGER_EVERY``). ``scale`` above is ``HITS_SCALE``."""
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
     # broadcast_scores=True hints every score-onto-edges join (and the
@@ -308,20 +354,7 @@ def hits(
     # there, bucket edges by src AND dst so each keyed join is a
     # map-side zip instead.
     _maybe_b = F.broadcast if broadcast_scores else (lambda d: d)
-    # NULL endpoints are dropped at the door: kept, a NULL "node"
-    # half-joins through the rounds (NULL never equi-joins, but
-    # groupBy keeps it as a key), so it would receive rank while its
-    # out-edges are mis-read as dangling — and in hits its mass
-    # enters the L1 total while the node itself drops from the
-    # output join, silently deflating every other score
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    e = e.filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-    e = e.localCheckpoint(eager=False)
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
+    e, nodes = _edges_and_nodes(edges, src, dst)
     nodes = nodes.localCheckpoint(eager=False)
 
     def _renorm(raw: DataFrame, col: str) -> DataFrame:
@@ -338,7 +371,7 @@ def hits(
                 "node",
                 F.coalesce(
                     F.expr(
-                        f"(CAST({col} AS DECIMAL(38,0)) * {scale})"
+                        f"(CAST({col} AS DECIMAL(38,0)) * {HITS_SCALE})"
                         " div greatest(__t, CAST(1 AS DECIMAL(38,0)))"
                     ),
                     F.lit(0).cast("bigint"),
@@ -346,7 +379,7 @@ def hits(
             )
         )
 
-    hubs = nodes.select("node", F.lit(scale).cast("bigint").alias("h"))
+    hubs = nodes.select("node", F.lit(HITS_SCALE).cast("bigint").alias("h"))
     auths = None
     for i in range(iterations):
         a_raw = (
@@ -371,7 +404,7 @@ def hits(
         )
         hubs = _renorm(h_raw, "h")
         if (i + 1) < iterations:
-            hubs = _cut(hubs, (i + 1) % eager_every == 0)
+            hubs = _cut(hubs, (i + 1) % EAGER_EVERY == 0)
     return (
         hubs.join(auths, "node")
         .select(
@@ -382,12 +415,7 @@ def hits(
     )
 
 
-def oracle_hits_sql(
-    edges_cte: str,
-    *,
-    iterations: int = 2,
-    scale: int = 10**9,
-) -> str:
+def oracle_hits_sql(edges_cte: str, *, iterations: int = 2) -> str:
     """DuckDB CTE block re-deriving `hits` by unrolled iteration in
     HUGEINT (mirrors the decimal(38,0) Spark arithmetic; `//` and
     Spark's `div` agree on the non-negative values used here). Emits
@@ -407,7 +435,7 @@ def oracle_hits_sql(
                 UNION ALL SELECT dst FROM ht_edges
             )
         )""",
-        f"ht_h0 AS (SELECT node, CAST({scale} AS HUGEINT) AS h"
+        f"ht_h0 AS (SELECT node, CAST({HITS_SCALE} AS HUGEINT) AS h"
         " FROM ht_nodes)",
     ]
     for i in range(1, iterations + 1):
@@ -421,7 +449,7 @@ def oracle_hits_sql(
         parts.append(
             f"""ht_a{i} AS (
             SELECT n.node,
-                   CAST(COALESCE(r.ar * {scale} // GREATEST(
+                   CAST(COALESCE(r.ar * {HITS_SCALE} // GREATEST(
                        (SELECT SUM(ar) FROM ht_ar{i}),
                        CAST(1 AS HUGEINT)), 0) AS BIGINT) AS a
             FROM ht_nodes n LEFT JOIN ht_ar{i} r ON r.node = n.node
@@ -437,7 +465,7 @@ def oracle_hits_sql(
         parts.append(
             f"""ht_h{i} AS (
             SELECT n.node,
-                   CAST(COALESCE(r.hr * {scale} // GREATEST(
+                   CAST(COALESCE(r.hr * {HITS_SCALE} // GREATEST(
                        (SELECT SUM(hr) FROM ht_hr{i}),
                        CAST(1 AS HUGEINT)), 0) AS BIGINT) AS h
             FROM ht_nodes n LEFT JOIN ht_hr{i} r ON r.node = n.node
@@ -454,134 +482,40 @@ def trustrank(
     seed_col: str = "node",
     *,
     iterations: int = 2,
-    damping_num: int = 17,
-    damping_den: int = 20,
-    scale: int = DEFAULT_SCALE,
-    eager_every: int = 4,
 ) -> DataFrame:
     """TrustRank (Gyöngyi, Garcia-Molina & Pedersen, VLDB 2004):
     PageRank with the teleport restricted to a curated SEED set — the
     standard spam-demotion / source-trust signal of web-corpus
     pipelines (trust flows out of hand-vetted good sites; link farms
-    far from every seed starve). Identical recurrence to `pagerank`
-    except teleport AND dangling mass land uniformly on the seeds
-    instead of all nodes:
-
-        r'(v) = [v∈S]·(den−num)·scale div (den·|S|)
-                + num·(contrib(v) + [v∈S]·(dangling div |S|)) div den
+    far from every seed starve). The `_seeded_rank` recurrence
+    `pagerank` runs, with teleport AND dangling mass landing
+    uniformly on the seeds instead of all nodes.
 
     ``seeds`` rows not present in the graph are ignored (semi-join);
     an empty effective seed set fails LOUDLY at execution (a silent
     all-zero trust vector would read as "everything is spam").
-    Same integer-exact / oracle-replayable discipline and per-round
-    lineage-cut policy as `pagerank`; NULL-endpoint edges are dropped
-    at the door the same way. Returns (node, rank_scaled)."""
+    NULL-endpoint edges are dropped at the door like `pagerank`'s.
+    Returns (node, rank_scaled)."""
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    e = e.filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-    e = e.localCheckpoint(eager=False)
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
+    e, nodes = _edges_and_nodes(edges, src, dst)
     sd = (
         seeds.select(F.col(seed_col).alias("node"))
         .filter(F.col("node").isNotNull())
         .distinct()
         .join(nodes, "node", "semi")
     )
-    outdeg = e.groupBy(F.col("src").alias("node")).agg(
-        F.count("*").alias("deg")
-    )
-    base = (
-        nodes.join(outdeg, "node", "left")
-        .join(sd.withColumn("__s", F.lit(1)), "node", "left")
-        .select(
-            "node",
-            F.coalesce("deg", F.lit(0)).alias("deg"),
-            F.coalesce("__s", F.lit(0)).alias("is_seed"),
-        )
-    )
-    base = base.localCheckpoint(eager=False)
-    counts = base.agg(
-        F.coalesce(F.sum("is_seed"), F.lit(0)).alias("ns")
-    )
-    tele_num = (damping_den - damping_num) * scale
-    guard = F.when(
-        F.col("ns") == 0,
-        F.raise_error(
-            F.lit(
-                "trustrank: no seed intersects the graph's node set — "
-                "a silent all-zero trust vector would read as "
-                "'everything is spam'; pass at least one in-graph seed"
-            )
-        ).cast("bigint"),
-    )
-    # r0: all teleport mass on the seeds (the classic init d = 1_S/|S|)
-    ranks = base.join(counts).select(
-        "node",
-        "deg",
-        "is_seed",
-        "ns",
-        F.coalesce(
-            guard,
-            F.expr(f"is_seed * ({scale} div ns)").cast("bigint"),
-        ).alias("rank_scaled"),
-    )
-    for i in range(iterations):
-        shares = e.join(
-            ranks.select(
-                F.col("node").alias("src"), "deg", "rank_scaled"
-            ),
-            "src",
-        ).select("dst", F.expr("rank_scaled div deg").alias("share"))
-        contrib = shares.groupBy(F.col("dst").alias("node")).agg(
-            F.sum("share").alias("contrib")
-        )
-        dangling = ranks.filter(F.col("deg") == 0).agg(
-            F.coalesce(F.sum("rank_scaled"), F.lit(0)).alias("dm")
-        )
-        ranks = (
-            ranks.select("node", "deg", "is_seed", "ns")
-            .join(contrib, "node", "left")
-            .join(dangling)
-            .select(
-                "node",
-                "deg",
-                "is_seed",
-                "ns",
-                (
-                    F.expr(
-                        f"is_seed * ({tele_num} div ({damping_den} * ns))"
-                    )
-                    + F.expr(
-                        f"{damping_num} * (coalesce(contrib, 0)"
-                        f" + is_seed * (dm div ns)) div {damping_den}"
-                    )
-                ).alias("rank_scaled"),
-            )
-        )
-        if (i + 1) < iterations:
-            ranks = _cut(ranks, (i + 1) % eager_every == 0)
-    return ranks.select("node", "rank_scaled")
+    return _seeded_rank(e, nodes, sd, iterations)
 
 
 def oracle_trustrank_sql(
-    edges_cte: str,
-    seeds_cte: str,
-    *,
-    iterations: int = 2,
-    damping_num: int = 17,
-    damping_den: int = 20,
-    scale: int = DEFAULT_SCALE,
+    edges_cte: str, seeds_cte: str, *, iterations: int = 2
 ) -> str:
     """DuckDB CTE block re-deriving `trustrank` by unrolled iteration
     (``tr_edges/tr_base/tr_ns/tr_r0..tr_r{k}``; final ranks are
     ``SELECT node, r FROM tr_r{k}``). ``seeds_cte`` yields a `node`
     column; out-of-graph seeds are dropped like the operator does."""
-    tele = (damping_den - damping_num) * scale
+    tele = (DAMPING_DEN - DAMPING_NUM) * SCALE
     parts = [
         f"tr_edges AS (SELECT * FROM ({edges_cte}) __e "
         "WHERE src IS NOT NULL AND dst IS NOT NULL)",
@@ -603,7 +537,7 @@ def oracle_trustrank_sql(
         )""",
         "tr_ns AS (SELECT SUM(is_seed) AS ns FROM tr_base)",
         f"tr_r0 AS (SELECT node, deg, is_seed,"
-        f" CAST(is_seed * ({scale} // ns) AS BIGINT) AS r"
+        f" CAST(is_seed * ({SCALE} // ns) AS BIGINT) AS r"
         " FROM tr_base, tr_ns)",
     ]
     for i in range(1, iterations + 1):
@@ -624,10 +558,10 @@ def oracle_trustrank_sql(
         parts.append(
             f"""tr_r{i} AS (
             SELECT b.node, b.deg, b.is_seed,
-                   CAST(b.is_seed * ({tele} // ({damping_den} * tr_ns.ns))
-                        + {damping_num} * (COALESCE(c.c, 0)
+                   CAST(b.is_seed * ({tele} // ({DAMPING_DEN} * tr_ns.ns))
+                        + {DAMPING_NUM} * (COALESCE(c.c, 0)
                           + b.is_seed * (tr_d{i}.dm // tr_ns.ns))
-                          // {damping_den}
+                          // {DAMPING_DEN}
                         AS BIGINT) AS r
             FROM tr_base b
             LEFT JOIN tr_c{i} c ON c.node = b.node, tr_ns, tr_d{i}

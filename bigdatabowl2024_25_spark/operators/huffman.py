@@ -208,6 +208,10 @@ def huff_decode(
         return np.empty(0, dtype=np.int64)
     if n_symbols == 0:
         raise ValueError(f"{what}: non-empty table for empty message")
+    # every code is at least 1 bit long: a (corrupt) symbol count above
+    # the bit count must not reach the output allocation below
+    if n_symbols > n_bits:
+        raise ValueError(f"{what}: more symbols than stream bits")
     # rebuild canonical lengths/codes and check Kraft validity: after
     # level L the running code must fit L bits, else the table lies
     c_lens = np.repeat(np.arange(1, _MAX_LEN + 1), counts)
@@ -239,7 +243,10 @@ def huff_decode(
     # copy — never a 2-D (n_bits, 16) materialization (a sliding-
     # window matmul would transiently cost 8-32 bytes/bit on large
     # payloads)
-    n_all = len(bits)
+    # one window past the last bit, so a stream that ends before
+    # n_symbols are decoded reads a window at cursor == n_bits and
+    # fails the length check below instead of indexing past the end
+    n_all = len(bits) + 1
     windows = np.zeros(n_all, dtype=np.uint16)
     for k in range(_MAX_LEN):
         windows |= padded[k : k + n_all].astype(np.uint16) << (

@@ -87,25 +87,6 @@ def quality_keep(
     return (n > 0) & (logit >= F.lit(thr_scaled).cast("bigint") * n)
 
 
-def quality_filter(
-    df: DataFrame,
-    text_col: str,
-    weights_scaled: list[int],
-    *,
-    threshold: float,
-    scale: int = DEFAULT_SCALE,
-) -> DataFrame:
-    """Keep rows whose mean-token logit clears the threshold."""
-    return df.filter(
-        quality_keep(
-            F.col(text_col),
-            weights_scaled,
-            threshold=threshold,
-            scale=scale,
-        )
-    )
-
-
 def bucket_counts(
     df: DataFrame, text_col: str, id_col: str, dim: int
 ) -> DataFrame:

@@ -14,13 +14,8 @@ shuffle per stage.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, WindowSpec
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def play_window(*partition: str, order_by: list[Column | str] | None = None) -> WindowSpec:
-    w = Window.partitionBy(*partition)
-    return w.orderBy(*order_by) if order_by else w
 
 
 def dense_rank_id(

@@ -1038,27 +1038,15 @@ def q73_simhash(spark, sf_dir):
 )
 def q74_near_dup_clusters(spark, sf_dir):
     """End of the dedup funnel: verified near-dup pairs → connected
-    components (iterative min-label propagation) → (node, component).
+    components (`components.connected_components`) → (node, component).
     The component id IS the keeper (min doc id). Oracle re-derives
     components via a recursive transitive-closure CTE — an independent
     algorithm for the same semantics.
 
-    Round 9: this parity run routes through
-    `checkpoint_mode="reliable"` (eager `checkpoint()` to a real
-    checkpoint dir — the fault-tolerant production path for long CC
-    runs) so that mode stays under the driver's value-hash oracle
-    instead of bit-rotting behind the default `local` mode. The graph
-    is funnel-sized, so the extra disk write is a few KB."""
-    import tempfile
-
+    'pr'/'hub'/'auth'/'trust' score the customer→supplier link graph
+    with `graph.pagerank`, `graph.hits` and `graph.trustrank`; the
+    oracle replays each one's integer recurrence."""
     from ..operators.components import connected_components
-
-    if spark.sparkContext.getCheckpointDir() is None:
-        # leaked per-run on purpose: the returned DataFrame is backed
-        # by these checkpoint files until the driver collects it
-        spark.sparkContext.setCheckpointDir(
-            tempfile.mkdtemp(prefix="bdb_q74_ckpt_")
-        )
     from ..concurrency import build_concurrently
 
     # q74/q75 cluster on the SYMMETRIC jaccard pairs only — containment
@@ -1069,7 +1057,7 @@ def q74_near_dup_clusters(spark, sf_dir):
             .filter(F.col("kind") == "jaccard")
             .select("id_a", "id_b")
         )
-        return connected_components(pairs, checkpoint_mode="reliable")
+        return connected_components(pairs)
 
     # 'pr' (round 9): fixed-point PageRank (`graph.pagerank`) over the
     # customer→supplier link graph — the web-graph centrality signal a

@@ -1,16 +1,20 @@
 """connected_components: correctness on adversarial graph shapes and
-the lineage-truncation (localCheckpoint) path.
+the lineage-truncation (checkpoint) path.
 
 The oracle-gated q74 covers the realistic shallow near-dup clusters;
 these tests cover the shapes that stress the ITERATION itself — a long
 chain whose diameter forces many rounds straight through several
-checkpoint boundaries."""
+checkpoint boundaries. The `distributed` fixture sets
+`SMALL_GRAPH_EDGES = 0`, so every edge set takes the min-label loop
+instead of the single-task union-find."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
+import os
 
+import pytest
+
+from bigdatabowl2024_25_spark.operators import components
 from bigdatabowl2024_25_spark.operators.components import connected_components
 
 
@@ -18,19 +22,32 @@ def _labels(df):
     return {r.node: r.component for r in df.collect()}
 
 
-def test_long_chain_through_checkpoints(spark):
-    """A 0-1-2-...-24 path graph: diameter 24, min-label needs many
-    rounds, crossing the every-5-rounds localCheckpoint repeatedly.
-    Every node must still land in component 0."""
-    n = 25
+@pytest.fixture
+def distributed(monkeypatch):
+    monkeypatch.setattr(components, "SMALL_GRAPH_EDGES", 0)
+
+
+def _clear_checkpoint_dir(sc):
+    # the Scala var setter name contains '$', hence getattr
+    getattr(sc._jsc.sc(), "checkpointDir_$eq")(
+        sc._jvm.scala.Option.apply(None)
+    )
+
+
+def test_long_chain_through_checkpoints(spark, distributed):
+    """A 0-1-2-...-29 path graph: diameter 29, so min-label needs 30
+    rounds (plus one that changes nothing), crossing the every-5-rounds
+    checkpoint six times. There is no round cap: every node must land
+    in component 0, including the far end of the chain."""
+    n = 30
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
     )
-    out = _labels(connected_components(edges, max_iter=n, small_graph_threshold=0))
+    out = _labels(connected_components(edges))
     assert out == {i: 0 for i in range(n)}
 
 
-def test_two_chains_and_a_clique(spark):
+def test_two_chains_and_a_clique(spark, distributed):
     """Mixed shapes in one edge set: two disjoint chains + a clique;
     components must not leak across."""
     chain_a = [(i, i + 1) for i in range(0, 9)]          # 0..9
@@ -39,92 +56,22 @@ def test_two_chains_and_a_clique(spark):
     edges = spark.createDataFrame(
         chain_a + chain_b + clique, "id_a long, id_b long"
     )
-    out = _labels(connected_components(edges, max_iter=15, small_graph_threshold=0))
+    out = _labels(connected_components(edges))
     assert all(out[i] == 0 for i in range(10))
     assert all(out[i] == 100 for i in range(100, 110))
     assert all(out[i] == 200 for i in range(200, 205))
 
 
-def test_early_convergence_star(spark):
-    """A star graph converges in one round regardless of size — the
-    early-exit must fire long before max_iter."""
+def test_early_convergence_star(spark, distributed):
+    """A star graph converges in one round regardless of size."""
     edges = spark.createDataFrame(
         [(0, i) for i in range(1, 40)], "id_a long, id_b long"
     )
-    out = _labels(connected_components(edges, max_iter=20, small_graph_threshold=0))
+    out = _labels(connected_components(edges))
     assert set(out.values()) == {0}
 
 
-def test_checkpoint_cadence_is_semantics_free(spark):
-    """Different checkpoint cadences give identical results — the
-    truncation never changes semantics. (There is deliberately no
-    un-checkpointed control at this depth: every round references the
-    previous labels twice, so an untruncated logical plan DOUBLES per
-    round and ~8 checkpoint-free rounds OOM a 1 GB driver on plan
-    metadata alone — measured here; that failure mode is exactly why
-    checkpoint_every exists.)"""
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(6)], "id_a long, id_b long"
-    )
-    a = _labels(connected_components(edges, max_iter=8, checkpoint_every=1, small_graph_threshold=0))
-    b = _labels(connected_components(edges, max_iter=8, checkpoint_every=2, small_graph_threshold=0))
-    c = _labels(connected_components(edges, max_iter=8, checkpoint_every=5, small_graph_threshold=0))
-    assert a == b == c == {i: 0 for i in range(7)}
-
-
-def test_star_matches_minlabel_on_random_graph(spark):
-    """large-star/small-star must produce the identical labeling as
-    min-label propagation on an arbitrary graph (deterministic
-    LCG-generated edges, mixed component shapes)."""
-    from bigdatabowl2024_25_spark.operators.components import (
-        connected_components_star,
-    )
-
-    seed, edges_py = 1234567, []
-    for _ in range(300):
-        seed = (seed * 1103515245 + 12345) % (2**31)
-        a = seed % 120
-        seed = (seed * 1103515245 + 12345) % (2**31)
-        b = seed % 120
-        if a != b:
-            edges_py.append((a, b))
-    edges = spark.createDataFrame(edges_py, "id_a long, id_b long")
-    want = _labels(connected_components(edges, max_iter=50, small_graph_threshold=0))
-    got = _labels(connected_components_star(edges))
-    assert got == want
-
-
-def test_star_deep_chain_few_rounds(spark):
-    """A 0-1-...-63 path: diameter 63. Min-label would need 64 rounds;
-    large-star/small-star must finish well inside max_iter=12
-    (O(log n)) and still label every node 0."""
-    from bigdatabowl2024_25_spark.operators.components import (
-        connected_components_star,
-    )
-
-    n = 64
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
-    )
-    out = _labels(connected_components_star(edges, max_iter=12))
-    assert out == {i: 0 for i in range(n)}
-
-
-def test_star_isolated_pair_and_clique(spark):
-    from bigdatabowl2024_25_spark.operators.components import (
-        connected_components_star,
-    )
-
-    clique = [(a, b) for a in range(10, 15) for b in range(a + 1, 15)]
-    edges = spark.createDataFrame(
-        [(0, 1)] + clique, "id_a long, id_b long"
-    )
-    out = _labels(connected_components_star(edges))
-    assert out[0] == 0 and out[1] == 0
-    assert all(out[i] == 10 for i in range(10, 15))
-
-
-def test_small_graph_fast_path_equals_iterative(spark):
+def test_small_graph_fast_path_equals_iterative(spark, monkeypatch):
     """The single-task union-find fast path (default for small edge
     sets) must label identically to the iterative min-label loop."""
     seed, edges_py = 424242, []
@@ -137,64 +84,35 @@ def test_small_graph_fast_path_equals_iterative(spark):
             edges_py.append((a, b))
     edges = spark.createDataFrame(edges_py, "id_a long, id_b long")
     fast = _labels(connected_components(edges))  # default: fast path
-    slow = _labels(
-        connected_components(edges, max_iter=60, small_graph_threshold=0)
-    )
+    monkeypatch.setattr(components, "SMALL_GRAPH_EDGES", 0)
+    slow = _labels(connected_components(edges))
     assert fast == slow
 
 
-def test_reliable_checkpoint_mode(spark, tmp_path):
-    """checkpoint_mode='reliable': labels identical to local mode, and
-    checkpoint files actually land in the checkpoint dir (executor-loss
-    survivability at cluster scale). Also: reliable without a
-    checkpoint dir fails fast with a clear error."""
-    import os
-
-    from bigdatabowl2024_25_spark.operators.components import (
-        connected_components_star,
-    )
-
+def test_reliable_checkpoint_mode(spark, tmp_path, monkeypatch):
+    """Checkpoints follow the deployment's checkpoint dir: with none
+    set they are local and the labels are right; with one set, on both
+    the distributed loop and the single-task path, checkpoint files
+    land in it (executor-loss survivability at cluster scale) and the
+    labels are identical."""
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(12)] + [(20, 21), (21, 22)],
         ["id_a", "id_b"],
     )
+    want = {i: 0 for i in range(13)} | {20: 20, 21: 20, 22: 20}
     sc = spark.sparkContext
-    # clear any checkpoint dir a previous test left behind (the q74
-    # suite sets one session-wide; the adversarial-layout sweep runs
-    # it before this file since round 10) so the fail-fast branch is
-    # actually exercised
-    getattr(sc._jsc.sc(), "checkpointDir_$eq")(
-        sc._jvm.scala.Option.apply(None)
-    )
-    with pytest.raises(ValueError, match="setCheckpointDir"):
-        connected_components(
-            edges, small_graph_threshold=0, checkpoint_every=1,
-            checkpoint_mode="reliable",
-        ).collect()
-    cp = str(tmp_path / "cc_checkpoints")
-    sc.setCheckpointDir(cp)
+    # clear any checkpoint dir a previous test left behind so the
+    # local branch is actually exercised
+    _clear_checkpoint_dir(sc)
+    fast = _labels(connected_components(edges))
+    monkeypatch.setattr(components, "SMALL_GRAPH_EDGES", 0)
+    assert _labels(connected_components(edges)) == fast == want
+    cp = tmp_path / "cc_checkpoints"
+    sc.setCheckpointDir(str(cp))
     try:
-        a = _labels(
-            connected_components(
-                edges, max_iter=20, checkpoint_every=2,
-                small_graph_threshold=0, checkpoint_mode="reliable",
-            )
-        )
-        b = _labels(
-            connected_components(
-                edges, max_iter=20, checkpoint_every=2,
-                small_graph_threshold=0, checkpoint_mode="local",
-            )
-        )
-        assert a == b
-        # the small-graph fast path and star variant honor it too
-        c = _labels(
-            connected_components(edges, checkpoint_mode="reliable")
-        )
-        d = _labels(
-            connected_components_star(edges, checkpoint_mode="reliable")
-        )
-        assert c == a and d == a
+        assert _labels(connected_components(edges)) == want
+        monkeypatch.undo()
+        assert _labels(connected_components(edges)) == want
         walked = [
             f for _, _, fs in os.walk(cp) for f in fs if not f.startswith(".")
         ]
@@ -202,24 +120,17 @@ def test_reliable_checkpoint_mode(spark, tmp_path):
     finally:
         # tmp_path vanishes after the test; later localCheckpoint users
         # are unaffected, but reset state for suite hygiene anyway
-        # (the Scala var setter name contains '$', hence getattr)
-        getattr(sc._jsc.sc(), "checkpointDir_$eq")(
-            sc._jvm.scala.Option.apply(None)
-        )
+        _clear_checkpoint_dir(sc)
 
 
-def test_unknown_checkpoint_mode_rejected(spark):
-    edges = spark.createDataFrame([(1, 2)], ["id_a", "id_b"])
-    with pytest.raises(ValueError, match="checkpoint_mode"):
-        connected_components(edges, checkpoint_mode="s3-magic").collect()
-
-
-def test_q74_pipeline_under_reliable_checkpointing(spark, tmp_path):
-    """VERDICT r7 stretch: the production CC path (reliable
+def test_q74_pipeline_under_reliable_checkpointing(
+    spark, tmp_path, monkeypatch
+):
+    """The production CC path at cluster scale (reliable
     checkpointing, distributed min-label loop) must reproduce the q74
     suite query's labels on the REAL dedup-funnel edge set — not just
     on toy graphs — so the cluster configuration can't bit-rot while
-    the parity suite exercises only local mode."""
+    the parity suite exercises only the single-task path."""
     from bigdatabowl2024_25_spark import suite
 
     suite.load_all()
@@ -234,20 +145,23 @@ def test_q74_pipeline_under_reliable_checkpointing(spark, tmp_path):
         for r in suite.QUERIES["q74_near_dup_clusters"](spark, sf).collect()
         if r.kind == "cc"  # round 9 added the 'pr' PageRank branch
     }
+    monkeypatch.setattr(components, "SMALL_GRAPH_EDGES", 0)
+    # every graph with an edge takes at least 2 rounds (one that
+    # relabels, one that changes nothing), so a cadence of 2 puts a
+    # reliable checkpoint inside the loop even for shallow clusters
+    monkeypatch.setattr(components, "CHECKPOINT_EVERY", 2)
     sc = spark.sparkContext
-    sc.setCheckpointDir(str(tmp_path / "cc_ckpt"))
+    cp = tmp_path / "cc_ckpt"
+    sc.setCheckpointDir(str(cp))
     try:
         got = {
             (r.node, r.component)
-            for r in connected_components(
-                pairs,
-                small_graph_threshold=0,  # force the distributed loop
-                checkpoint_every=2,
-                checkpoint_mode="reliable",
-            ).collect()
+            for r in connected_components(pairs).collect()
         }
     finally:
-        getattr(sc._jsc.sc(), "checkpointDir_$eq")(
-            sc._jvm.scala.Option.apply(None)
-        )
+        _clear_checkpoint_dir(sc)
     assert got == expected
+    walked = [
+        f for _, _, fs in os.walk(cp) for f in fs if not f.startswith(".")
+    ]
+    assert walked, "no reliable checkpoint files written"

@@ -127,7 +127,10 @@ def test_hash_sets_verify_matches_exploded_join(spark):
     (`hash_sets`) must produce the exact intersection/size integers
     the old explode-join-reaggregate produced — including candidates
     with ZERO overlap, which the old inner-join form dropped before
-    the threshold filter and the new form scores as 0.0."""
+    the threshold filter and the new form scores as 0.0. The second
+    input duplicates some (doc, h) rows: the sets' precondition is
+    enforced, so the sizes and scores must not move (a row count as n
+    would bias Jaccard low, since array_intersect dedups)."""
     from bigdatabowl2024_25_spark.operators.dedup import hash_sets
 
     df = spark.createDataFrame(
@@ -135,29 +138,57 @@ def test_hash_sets_verify_matches_exploded_join(spark):
     )
     sh = with_shingles(df, "text", "doc_id")
     hashes = shingle_hashes(sh, "doc_id")
-    sets = {
-        r["doc"]: (set(r["hs"]), r["n"])
-        for r in hash_sets(hashes, "doc_id").collect()
-    }
+    dup = hashes.unionAll(hashes.filter(F.col("doc_id").isin(0, 1)))
     ref = _shingle_sets(DOCS)
-    for i, s in ref.items():
-        assert sets[i][1] == len(sets[i][0]) == len(s)
     # all unordered candidate pairs, including zero-overlap ones
     cands = spark.createDataFrame(
         [(a, b) for a in DOCS for b in DOCS if a < b],
         "id_a long, id_b long",
     )
-    got = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in jaccard_pairs(cands, sh, "doc_id", threshold=0.01).collect()
-    }
-    for (a, b) in [(a, b) for a in DOCS for b in DOCS if a < b]:
-        sa, sb = ref[a], ref[b]
-        j = len(sa & sb) / len(sa | sb)
-        if j >= 0.01:
-            assert abs(got[(a, b)] - j) < 1e-12, (a, b)
-        else:
-            assert (a, b) not in got
+    for h in (hashes, dup):
+        sets = {
+            r["doc"]: (set(r["hs"]), r["n"])
+            for r in hash_sets(h, "doc_id").collect()
+        }
+        for i, s in ref.items():
+            assert sets[i][1] == len(sets[i][0]) == len(s)
+        got = {
+            (r["id_a"], r["id_b"]): r["jaccard"]
+            for r in jaccard_pairs(
+                cands, sh, "doc_id", threshold=0.01, hashes=h
+            ).collect()
+        }
+        for (a, b) in [(a, b) for a in DOCS for b in DOCS if a < b]:
+            sa, sb = ref[a], ref[b]
+            j = len(sa & sb) / len(sa | sb)
+            if j >= 0.01:
+                assert abs(got[(a, b)] - j) < 1e-12, (a, b)
+            else:
+                assert (a, b) not in got
+
+
+def test_containment_duplicate_hash_rows(spark):
+    """Duplicated (doc, h) rows must not shorten the prefix filter's
+    distinct prefix. The snippet's rarest shingle ("g h zz", df 1) is
+    the one it does not share with the page, and its prefix holds
+    5 − ⌈0.8·5⌉ + 1 = 2 shingles. Numbering raw rows, the duplicated
+    snippet's prefix would be that shingle twice, and the pair
+    (containment 4/5) would be lost without error."""
+    docs = {10: "a b c d e f g h i j", 11: "c d e f g h zz"}
+    df = spark.createDataFrame(
+        list(docs.items()), "doc_id long, text string"
+    )
+    sh = with_shingles(df, "text", "doc_id")
+    hashes = shingle_hashes(sh, "doc_id")
+    dup = hashes.unionAll(hashes.filter(F.col("doc_id") == 11))
+    for h in (hashes, dup):
+        got = {
+            (r.id_a, r.id_b): r.containment
+            for r in containment_pairs(
+                sh, "doc_id", threshold=T, hashes=h
+            ).collect()
+        }
+        assert got == {(11, 10): 0.8}
 
 
 @pytest.mark.parametrize("threshold", [0.0, -0.5])

@@ -17,7 +17,7 @@ from collections import Counter, defaultdict
 import duckdb
 
 from bigdatabowl2024_25_spark.operators.graph import (
-    DEFAULT_SCALE,
+    SCALE,
     oracle_pagerank_sql,
     pagerank,
 )
@@ -27,7 +27,7 @@ from bigdatabowl2024_25_spark.operators.graph import (
 EDGES = [(2, 1), (3, 1), (3, 2), (2, 3), (1, 4), (1, 5)]
 
 
-def ref_pagerank(edges, iterations, scale=DEFAULT_SCALE, num=17, den=20):
+def ref_pagerank(edges, iterations, scale=SCALE, num=17, den=20):
     nodes = sorted({s for s, _ in edges} | {d for _, d in edges})
     outdeg = Counter(s for s, _ in edges)
     n = len(nodes)
@@ -58,9 +58,7 @@ def test_pagerank_partition_invariance_and_checkpoint_path(spark):
     for parts in (1, 5):
         got = {
             r.node: r.rank_scaled
-            for r in pagerank(
-                df.repartition(parts), iterations=6, eager_every=2
-            ).collect()
+            for r in pagerank(df.repartition(parts), iterations=6).collect()
         }
         assert got == want
 
@@ -71,7 +69,7 @@ def test_pagerank_mass_and_ordering(spark):
         r.node: r.rank_scaled for r in pagerank(df, iterations=8).collect()
     }
     # floor divisions only ever LOSE mass, ≤ a few units per node/round
-    assert 0.99 * DEFAULT_SCALE < sum(got.values()) <= DEFAULT_SCALE
+    assert 0.99 * SCALE < sum(got.values()) <= SCALE
     # node 1 is the hub: everyone links to it
     assert got[1] == max(got.values())
 
@@ -137,9 +135,7 @@ def test_hits_partition_invariance(spark):
     df = spark.createDataFrame(H_EDGES, "src bigint, dst bigint")
     h, a = ref_hits(H_EDGES, 5)
     for parts in (1, 7):
-        rows = hits(
-            df.repartition(parts), iterations=5, eager_every=2
-        ).collect()
+        rows = hits(df.repartition(parts), iterations=5).collect()
         assert {r.node: r.hub_scaled for r in rows} == h
         assert {r.node: r.auth_scaled for r in rows} == a
 
@@ -204,6 +200,12 @@ def test_null_endpoint_edges_are_dropped(spark):
         want = sorted(map(tuple, op(clean, iterations=2).collect()))
         assert got == want
         assert not any(r[0] is None for r in got)
+    # every row NULL: no nodes, so no rows — and the seed guard pagerank
+    # shares with trustrank (S = every node = empty here) never fires
+    all_null = spark.createDataFrame(
+        [(1, None), (None, 2), (None, None)], "src bigint, dst bigint"
+    )
+    assert pagerank(all_null, iterations=2).collect() == []
 
     vals = "(1,2),(2,NULL),(NULL,3),(3,1),(2,3)"
     block = oracle_pagerank_sql(
@@ -222,7 +224,7 @@ def test_null_endpoint_edges_are_dropped(spark):
 # ---- TrustRank -------------------------------------------------------
 
 def ref_trustrank(
-    edges, seeds, iterations, scale=DEFAULT_SCALE, num=17, den=20
+    edges, seeds, iterations, scale=SCALE, num=17, den=20
 ):
     nodes = sorted({s for s, _ in edges} | {d for _, d in edges})
     seeds = sorted(set(seeds) & set(nodes))

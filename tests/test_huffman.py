@@ -83,6 +83,13 @@ def test_bad_inputs_and_corrupt_blocks():
         huff_decode(good, 5)
     with pytest.raises(ValueError):
         huff_decode(good, 7)
+    # a stream that ends exactly on a byte (2-bit codes, 16 bits) and
+    # runs out of symbols, and a symbol count no allocation could hold
+    aligned = huff_encode(np.array([0, 1, 2, 3] * 2))
+    with pytest.raises(ValueError, match="corrupt"):
+        huff_decode(aligned, 9)
+    with pytest.raises(ValueError, match="more symbols"):
+        huff_decode(aligned, 2**40)
     # corrupt distinct-count
     bad = bytearray(good)
     bad[0] ^= 0xFF

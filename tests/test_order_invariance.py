@@ -152,14 +152,14 @@ def test_lsh_near_dup_layout_invariant(spark):
 
 
 @pytest.mark.slow
-def test_star_cc_layout_invariant(spark):
-    """large-star/small-star labels are min-reductions — layout-free
-    by construction; pin it (the fingerprint-based convergence check
-    must not be perturbed by partitioning either)."""
-    from bigdatabowl2024_25_spark.operators.components import (
-        connected_components_star,
-    )
+def test_min_label_cc_layout_invariant(spark, monkeypatch):
+    """Min-label connected-component labels are min-reductions —
+    layout-free by construction; pin it on the distributed loop (the
+    changed-label convergence check must not be perturbed by
+    partitioning either)."""
+    from bigdatabowl2024_25_spark.operators import components
 
+    monkeypatch.setattr(components, "SMALL_GRAPH_EDGES", 0)
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(30)]
         + [(100 + i, 100 + (i + 1) % 6) for i in range(6)],
@@ -172,10 +172,12 @@ def test_star_cc_layout_invariant(spark):
         edges.orderBy(F.col("id_b").desc()),
     ):
         got = sorted(
-            map(tuple, connected_components_star(layout).collect())
+            map(tuple, components.connected_components(layout).collect())
         )
         if base is None:
             base = got
         else:
             assert got == base
-    assert base
+    assert dict(base) == {i: 0 for i in range(31)} | {
+        100 + i: 100 for i in range(6)
+    }
