@@ -55,7 +55,6 @@ def partial_radius(
     bx: np.ndarray,
     by: np.ndarray,
     n_angles: int = N_ANGLES,
-    method: str = "closed_form",
 ) -> np.ndarray:
     """X1, closed form. Inputs are 1-D arrays of N rows; returns
     (N, n_angles) reachable radii.
@@ -64,20 +63,10 @@ def partial_radius(
     With w = p0 − b this is the positive root of
     (bs² − s²)·r² − 2s²(u·w)·r − s²|w|² = 0.
 
-    `method="optimizer"` routes to `partial_radius_optimizer` — the
-    reference's iterative-solver path (`radius_model.R:47-54`) kept
-    behind this flag for parity testing per SURVEY §7; production
-    always uses the closed form (~10⁴× cheaper, identical semantics,
-    pinned by tests/test_kernels parity)."""
-    if method == "optimizer":
-        return partial_radius_optimizer(
-            player_speed, px, py, ball_speed, bx, by, n_angles
-        )
-    if method != "closed_form":
-        raise ValueError(
-            f"partial_radius: unknown method {method!r} "
-            "(want 'closed_form' or 'optimizer')"
-        )
+    The reference's iterative-solver path (`radius_model.R:47-54`) is
+    `partial_radius_optimizer`, the parity tests' reference per SURVEY
+    §7; this closed form is ~10⁴× cheaper with identical semantics
+    (pinned by tests/test_kernels parity)."""
     s = np.asarray(player_speed, dtype=np.float64)[:, None]
     bs = np.asarray(ball_speed, dtype=np.float64)[:, None]
     wx = (np.asarray(px, dtype=np.float64) - np.asarray(bx, dtype=np.float64))[
@@ -112,7 +101,8 @@ def partial_radius_optimizer(
     iters: int = 80,
 ) -> np.ndarray:
     """X1 via the reference's OPTIMIZER path (`radius_model.R:47-54`),
-    kept behind a flag for parity tests per SURVEY §7. The reference
+    kept as the parity tests' reference per SURVEY §7 (no production
+    caller). The reference
     runs L-BFGS-B per heading over (time, ball_angle) to find the
     interception point — at the optimum the ball flies straight at the
     player's position, so the problem reduces to the 1-D boundary

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..boundary import BoundaryCaches, release
 from .text import tokens
 
 
@@ -218,8 +219,9 @@ def bpe_train(
     one select: a 32k-merge web-scale vocabulary no longer schedules
     32k sequential Spark jobs (pass `stats` to read back
     `round_trips`; falls back to 1 merge/round automatically whenever
-    pairs interact). The vocab is localCheckpoint-compacted per batch
-    to keep lineage flat. Both paths are pinned merge-for-merge equal
+    pairs interact). The vocab is cut (`boundary.cut`) per batch to
+    keep lineage flat, and every cut is released before the function
+    returns. Both paths are pinned merge-for-merge equal
     in tests/test_bpe.py."""
     freqs = word_frequencies(df, text_col)
     vocab = freqs.withColumn(
@@ -241,91 +243,89 @@ def _train_merges(
     """The size-adaptive count-scored merge loop shared by `bpe_train`
     (char symbols + end-of-word) and `byte_bpe_train` (byte-unicode
     symbols, no marker): input is any (syms array<string>, n) vocab
-    table; the symbol scheme is entirely the caller's."""
-    # one extra 1-row agg on the already-aggregated vocab table decides
-    # the path; its cost is the groupBy we pay either way. Gate on
-    # TOTAL SYMBOLS too, not just rows: 65k distinct "words" that are
-    # huge unbroken tokens (base64 blobs, minified JS) would pass a
-    # row-count gate and still OOM the driver collect
-    vocab = vocab.localCheckpoint()
-    vstats = vocab.agg(
-        F.count("*").alias("n"),
-        F.coalesce(F.sum(F.size("syms")), F.lit(0)).alias("total_syms"),
-    ).collect()[0]
-    if (
-        vstats.n <= small_vocab_threshold
-        and vstats.total_syms <= 64 * small_vocab_threshold
-    ):
-        rows = vocab.collect()
-        return _bpe_train_local(
-            [(list(r.syms), r.n) for r in rows], n_merges
-        )
-    from .components import _release_checkpoint
-
-    prev_ckpt = vocab
-    topk = 64
-
-    # alias-safety inventory for the batching lemma (round-12 ADVICE):
-    # every multi-char symbol that exists now or can come to exist —
-    # initial multi-char symbols (e.g. bpe_train's '</w>' marker; byte
-    # BPE has none) plus each accepted merge's product. The initial
-    # scan is one distinct on the vocab-sized table; its result is
-    # alphabet-bounded for every symbol scheme shipped here, but an
-    # adversarial caller could seed millions of multi-char symbols, so
-    # past 10k the inventory is declared unknown (products=None) and
-    # batching self-disables to the always-exact 1-merge-per-trip loop.
-    init_multi = (
-        vocab.select(F.explode("syms").alias("s"))
-        .filter(F.length("s") > 1)
-        .distinct()
-        .take(10_001)
-    )
-    products = (
-        None if len(init_multi) > 10_000 else {r.s for r in init_multi}
-    )
-
-    merges: list[tuple[str, str]] = []
-    while len(merges) < n_merges:
-        pairs = (
-            vocab.select(
-                F.explode(
-                    F.zip_with(
-                        F.slice(F.col("syms"), 1, F.size("syms") - 1),
-                        F.slice(F.col("syms"), 2, F.size("syms") - 1),
-                        lambda x, y: F.struct(
-                            x.alias("a"), y.alias("b")
-                        ),
-                    )
-                ).alias("p"),
-                "n",
+    table; the symbol scheme is entirely the caller's. The vocab cuts
+    live in one `BoundaryCaches` scope: none outlives the call."""
+    with BoundaryCaches() as bc:
+        # one extra 1-row agg on the already-aggregated vocab table decides
+        # the path; its cost is the groupBy we pay either way. Gate on
+        # TOTAL SYMBOLS too, not just rows: 65k distinct "words" that are
+        # huge unbroken tokens (base64 blobs, minified JS) would pass a
+        # row-count gate and still OOM the driver collect
+        vocab = bc.cut(vocab)
+        vstats = vocab.agg(
+            F.count("*").alias("n"),
+            F.coalesce(F.sum(F.size("syms")), F.lit(0)).alias("total_syms"),
+        ).collect()[0]
+        if (
+            vstats.n <= small_vocab_threshold
+            and vstats.total_syms <= 64 * small_vocab_threshold
+        ):
+            rows = vocab.collect()
+            return _bpe_train_local(
+                [(list(r.syms), r.n) for r in rows], n_merges
             )
-            .groupBy("p.a", "p.b")
-            .agg(F.sum("n").alias("cnt"))
+        topk = 64
+
+        # alias-safety inventory for the batching lemma (round-12 ADVICE):
+        # every multi-char symbol that exists now or can come to exist —
+        # initial multi-char symbols (e.g. bpe_train's '</w>' marker; byte
+        # BPE has none) plus each accepted merge's product. The initial
+        # scan is one distinct on the vocab-sized table; its result is
+        # alphabet-bounded for every symbol scheme shipped here, but an
+        # adversarial caller could seed millions of multi-char symbols, so
+        # past 10k the inventory is declared unknown (products=None) and
+        # batching self-disables to the always-exact 1-merge-per-trip loop.
+        init_multi = (
+            vocab.select(F.explode("syms").alias("s"))
+            .filter(F.length("s") > 1)
+            .distinct()
+            .take(10_001)
         )
-        rows = pairs.orderBy(
-            F.col("cnt").desc(), F.col("a").asc(), F.col("b").asc()
-        ).limit(topk).collect()
-        if stats is not None:
-            stats["round_trips"] = stats.get("round_trips", 0) + 1
-        batch = _safe_merge_batch(
-            rows, full=len(rows) < topk, products=products
+        products = (
+            None if len(init_multi) > 10_000 else {r.s for r in init_multi}
         )
-        batch = batch[: n_merges - len(merges)]
-        if not batch:
-            break  # nothing left worth merging (best cnt < 2)
-        col = F.col("syms")
-        for r in batch:
-            merges.append((r.a, r.b))
-            if products is not None:
-                products.add(r.a + r.b)
-            col = _merge_pair(col, r.a, r.b)
-        # one select applies the whole batch as composed folds, then a
-        # localCheckpoint flattens lineage (1 job per BATCH, not per
-        # merge); superseded blocks released to bound storage
-        vocab = vocab.select(col.alias("syms"), "n").localCheckpoint()
-        _release_checkpoint(prev_ckpt)
-        prev_ckpt = vocab
-    return merges
+
+        merges: list[tuple[str, str]] = []
+        while len(merges) < n_merges:
+            pairs = (
+                vocab.select(
+                    F.explode(
+                        F.zip_with(
+                            F.slice(F.col("syms"), 1, F.size("syms") - 1),
+                            F.slice(F.col("syms"), 2, F.size("syms") - 1),
+                            lambda x, y: F.struct(
+                                x.alias("a"), y.alias("b")
+                            ),
+                        )
+                    ).alias("p"),
+                    "n",
+                )
+                .groupBy("p.a", "p.b")
+                .agg(F.sum("n").alias("cnt"))
+            )
+            rows = pairs.orderBy(
+                F.col("cnt").desc(), F.col("a").asc(), F.col("b").asc()
+            ).limit(topk).collect()
+            if stats is not None:
+                stats["round_trips"] = stats.get("round_trips", 0) + 1
+            batch = _safe_merge_batch(
+                rows, full=len(rows) < topk, products=products
+            )
+            batch = batch[: n_merges - len(merges)]
+            if not batch:
+                break  # nothing left worth merging (best cnt < 2)
+            col = F.col("syms")
+            for r in batch:
+                merges.append((r.a, r.b))
+                if products is not None:
+                    products.add(r.a + r.b)
+                col = _merge_pair(col, r.a, r.b)
+            # one select applies the whole batch as composed folds, then a
+            # cut flattens lineage (1 job per BATCH, not per merge);
+            # superseded blocks released to bound storage
+            prev, vocab = vocab, bc.cut(vocab.select(col.alias("syms"), "n"))
+            release(prev)
+        return merges
 
 
 #: marker/separator control chars for the string-rewriting encoder —
@@ -658,81 +658,87 @@ def wordpiece_train(
     vocab = freqs.select(
         _wp_symbols(F.col("word"), cont).alias("syms"), "n"
     )
-    vocab = vocab.localCheckpoint()
-    stats = vocab.agg(
-        F.count("*").alias("n"),
-        F.coalesce(F.sum(F.size("syms")), F.lit(0)).alias("total_syms"),
-    ).collect()[0]
-    # the initial alphabet is bounded by the character set (plain +
-    # ##-continued forms), so this collect is a few KB on any corpus
-    alphabet = sorted(
-        r.s
-        for r in vocab.select(
-            F.explode("syms").alias("s")
-        ).distinct().collect()
-    )
-    if (
-        stats.n <= small_vocab_threshold
-        and stats.total_syms <= 64 * small_vocab_threshold
-    ):
-        rows = vocab.collect()
-        merges = _wordpiece_train_local(
-            [(list(r.syms), r.n) for r in rows], n_merges, cont
+    with BoundaryCaches() as bc:
+        vocab = bc.cut(vocab)
+        stats = vocab.agg(
+            F.count("*").alias("n"),
+            F.coalesce(F.sum(F.size("syms")), F.lit(0)).alias("total_syms"),
+        ).collect()[0]
+        # the initial alphabet is bounded by the character set (plain +
+        # ##-continued forms), so this collect is a few KB on any corpus
+        alphabet = sorted(
+            r.s
+            for r in vocab.select(
+                F.explode("syms").alias("s")
+            ).distinct().collect()
         )
-        return alphabet + [a + _wp_strip(b, cont) for a, b in merges]
-    from .components import _release_checkpoint
-
-    prev_ckpt = vocab
-    merges = []
-    for i in range(n_merges):
-        sym_counts = (
-            vocab.select(F.explode("syms").alias("s"), "n")
-            .groupBy("s")
-            .agg(F.sum("n").alias("sn"))
-        )
-        pairs = (
-            vocab.select(
-                F.explode(
-                    F.zip_with(
-                        F.slice(F.col("syms"), 1, F.size("syms") - 1),
-                        F.slice(F.col("syms"), 2, F.size("syms") - 1),
-                        lambda x, y: F.struct(x.alias("a"), y.alias("b")),
-                    )
-                ).alias("p"),
+        if (
+            stats.n <= small_vocab_threshold
+            and stats.total_syms <= 64 * small_vocab_threshold
+        ):
+            rows = vocab.collect()
+            merges = _wordpiece_train_local(
+                [(list(r.syms), r.n) for r in rows], n_merges, cont
+            )
+            return alphabet + [a + _wp_strip(b, cont) for a, b in merges]
+        prev_ckpt = vocab
+        merges = []
+        for i in range(n_merges):
+            sym_counts = (
+                vocab.select(F.explode("syms").alias("s"), "n")
+                .groupBy("s")
+                .agg(F.sum("n").alias("sn"))
+            )
+            pairs = (
+                vocab.select(
+                    F.explode(
+                        F.zip_with(
+                            F.slice(F.col("syms"), 1, F.size("syms") - 1),
+                            F.slice(F.col("syms"), 2, F.size("syms") - 1),
+                            lambda x, y: F.struct(x.alias("a"), y.alias("b")),
+                        )
+                    ).alias("p"),
+                    "n",
+                )
+                .groupBy("p.a", "p.b")
+                .agg(F.sum("n").alias("cnt"))
+            )
+            sa = sym_counts.select(
+                F.col("s").alias("a"), F.col("sn").alias("na")
+            )
+            sb = sym_counts.select(
+                F.col("s").alias("b"), F.col("sn").alias("nb")
+            )
+            scored = (
+                pairs.join(F.broadcast(sa), "a")
+                .join(F.broadcast(sb), "b")
+                .withColumn(
+                    "score",
+                    F.col("cnt").cast("double")
+                    / (
+                        F.col("na").cast("double")
+                        * F.col("nb").cast("double")
+                    ),
+                )
+            )
+            best = scored.orderBy(
+                F.col("score").desc(), F.col("a").asc(), F.col("b").asc()
+            ).limit(1).collect()
+            if not best:  # no adjacent pairs left; no min-count stop —
+                break     # rare pairs scoring highest IS WordPiece
+            a, b = best[0].a, best[0].b
+            merges.append((a, b))
+            vocab = vocab.select(
+                _merge_pair(
+                    F.col("syms"), a, b, merged=a + _wp_strip(b, cont)
+                ).alias("syms"),
                 "n",
             )
-            .groupBy("p.a", "p.b")
-            .agg(F.sum("n").alias("cnt"))
-        )
-        sa = sym_counts.select(F.col("s").alias("a"), F.col("sn").alias("na"))
-        sb = sym_counts.select(F.col("s").alias("b"), F.col("sn").alias("nb"))
-        scored = (
-            pairs.join(F.broadcast(sa), "a")
-            .join(F.broadcast(sb), "b")
-            .withColumn(
-                "score",
-                F.col("cnt").cast("double")
-                / (F.col("na").cast("double") * F.col("nb").cast("double")),
-            )
-        )
-        best = scored.orderBy(
-            F.col("score").desc(), F.col("a").asc(), F.col("b").asc()
-        ).limit(1).collect()
-        if not best:  # no adjacent pairs left; no min-count stop —
-            break     # rare pairs scoring highest IS WordPiece
-        a, b = best[0].a, best[0].b
-        merges.append((a, b))
-        vocab = vocab.select(
-            _merge_pair(
-                F.col("syms"), a, b, merged=a + _wp_strip(b, cont)
-            ).alias("syms"),
-            "n",
-        )
-        if (i + 1) % 8 == 0:
-            vocab = vocab.localCheckpoint()
-            _release_checkpoint(prev_ckpt)
-            prev_ckpt = vocab
-    return alphabet + [a + _wp_strip(b, cont) for a, b in merges]
+            if (i + 1) % 8 == 0:
+                vocab = bc.cut(vocab)
+                release(prev_ckpt)
+                prev_ckpt = vocab
+        return alphabet + [a + _wp_strip(b, cont) for a, b in merges]
 
 
 def _wp_word_pieces(
@@ -1225,115 +1231,118 @@ def unigram_train(
     marker to `unigram_encode`. The marker must be absent from the
     corpus (checked against the distinct-word table — vocab-sized,
     one bounded job) or decode would hallucinate spaces."""
-    freqs = word_frequencies(df, text_col).localCheckpoint()
-    if word_marker is not None:
-        if len(word_marker) != 1:
-            raise ValueError(
-                "unigram_train: word_marker must be a single char "
-                f"(got {word_marker!r})"
+    with BoundaryCaches() as bc:
+        freqs = bc.cut(word_frequencies(df, text_col))
+        if word_marker is not None:
+            if len(word_marker) != 1:
+                raise ValueError(
+                    "unigram_train: word_marker must be a single char "
+                    f"(got {word_marker!r})"
+                )
+            clash = (
+                freqs.filter(F.col("word").contains(word_marker))
+                .limit(1)
+                .count()
             )
-        clash = (
-            freqs.filter(F.col("word").contains(word_marker))
-            .limit(1)
-            .count()
-        )
-        if clash:
-            raise ValueError(
-                f"unigram_train: word_marker {word_marker!r} occurs "
-                "in the corpus — decode would hallucinate word "
-                "boundaries; pick a character outside the corpus "
-                "alphabet"
+            if clash:
+                raise ValueError(
+                    f"unigram_train: word_marker {word_marker!r} occurs "
+                    "in the corpus — decode would hallucinate word "
+                    "boundaries; pick a character outside the corpus "
+                    "alphabet"
+                )
+            unmarked = freqs
+            # re-checkpoint the marker-prefixed reselect (cheap: one
+            # vocab-sized map over the existing checkpoint) and RELEASE
+            # the superseded blocks — without the release the unmarked
+            # word table stays pinned in executor storage for the session
+            freqs = bc.cut(
+                unmarked.select(
+                    F.concat(F.lit(word_marker), F.col("word")).alias(
+                        "word"
+                    ),
+                    "n",
+                )
             )
-        from .components import _release_checkpoint as _release
-
-        unmarked = freqs
-        # re-checkpoint the marker-prefixed reselect (cheap: one
-        # vocab-sized map over the existing checkpoint) and RELEASE
-        # the superseded blocks — without the release the unmarked
-        # word table stays pinned in executor storage for the session
-        freqs = unmarked.select(
-            F.concat(F.lit(word_marker), F.col("word")).alias("word"),
-            "n",
-        ).localCheckpoint()
-        _release(unmarked)
-    chars = (
-        freqs.select(
-            F.explode(F.split(F.col("word"), "")).alias("piece"), "n"
+            release(unmarked)
+        chars = (
+            freqs.select(
+                F.explode(F.split(F.col("word"), "")).alias("piece"), "n"
+            )
+            .filter(F.col("piece") != "")
+            .groupBy("piece")
+            .agg(F.sum("n").alias("__cc"))
         )
-        .filter(F.col("piece") != "")
-        .groupBy("piece")
-        .agg(F.sum("n").alias("__cc"))
-    )
-    subs = (
-        freqs.select(
-            F.explode(
-                _all_substrings(F.col("word"), max_piece_len)
-            ).alias("piece"),
-            "n",
-        )
-        .groupBy("piece")
-        .agg(F.sum("n").alias("cnt"))
-    )
-    vocab = subs.filter(
-        (F.col("cnt") >= min_count) | (F.length("piece") == 1)
-    )
-    from .components import _release_checkpoint
-
-    prev_ckpt: DataFrame | None = None
-    for _ in range(n_em_iters):
-        # lineage cut per EM iteration (round 12): without it, iter
-        # i's _scaled_logps collect re-executes every earlier
-        # iteration's Viterbi resegment + recount from scratch —
-        # O(iters^2) work and the largest single slice of q64's
-        # uni_train wall (measured 2.2 s of the 3.7 s trainer total
-        # at sf0.1 before; the checkpoint makes each collect one
-        # iteration of lineage). Values are identical: a checkpoint
-        # is a materialization boundary, not a semantic change.
-        vocab = vocab.localCheckpoint()
-        if prev_ckpt is not None:
-            _release_checkpoint(prev_ckpt)
-        prev_ckpt = vocab
-        lit_vocab = [
-            (r.piece, r.li)
-            for r in _scaled_logps(vocab).collect()
-        ]
-        segged = freqs.select(
-            _viterbi_pieces(F.col("word"), lit_vocab, "\x00").alias("ps"),
-            "n",
-        )
-        recount = (
-            segged.select(F.explode("ps").alias("piece"), "n")
-            .filter(F.col("piece") != "\x00")
+        subs = (
+            freqs.select(
+                F.explode(
+                    _all_substrings(F.col("word"), max_piece_len)
+                ).alias("piece"),
+                "n",
+            )
             .groupBy("piece")
             .agg(F.sum("n").alias("cnt"))
         )
-        # coverage floor: corpus chars survive EM even when unused
-        vocab = (
-            recount.join(chars.select("piece"), "piece", "full_outer")
-            .select(
-                "piece",
-                F.when(
-                    F.length("piece") == 1,
-                    F.greatest(F.coalesce(F.col("cnt"), F.lit(0)), F.lit(1)),
-                )
-                .otherwise(F.col("cnt"))
-                .alias("cnt"),
-            )
-            .filter(F.col("cnt").isNotNull() & (F.col("cnt") > 0))
+        vocab = subs.filter(
+            (F.col("cnt") >= min_count) | (F.length("piece") == 1)
         )
-    # prune: top target_vocab by (cnt desc, piece asc) + all chars
-    ranked = vocab.withColumn(
-        "__rk",
-        F.row_number().over(
-            Window.orderBy(F.col("cnt").desc(), F.col("piece").asc())
-        ),
-    )
-    kept = ranked.filter(
-        (F.col("__rk") <= target_vocab) | (F.length("piece") == 1)
-    ).select("piece", "cnt")
-    return sorted(
-        (r.piece, r.li) for r in _scaled_logps(kept).collect()
-    )
+        prev_ckpt: DataFrame | None = None
+        for _ in range(n_em_iters):
+            # lineage cut per EM iteration (round 12): without it, iter
+            # i's _scaled_logps collect re-executes every earlier
+            # iteration's Viterbi resegment + recount from scratch —
+            # O(iters^2) work and the largest single slice of q64's
+            # uni_train wall (measured 2.2 s of the 3.7 s trainer total
+            # at sf0.1 before; the checkpoint makes each collect one
+            # iteration of lineage). Values are identical: a checkpoint
+            # is a materialization boundary, not a semantic change.
+            vocab = bc.cut(vocab)
+            if prev_ckpt is not None:
+                release(prev_ckpt)
+            prev_ckpt = vocab
+            lit_vocab = [
+                (r.piece, r.li)
+                for r in _scaled_logps(vocab).collect()
+            ]
+            segged = freqs.select(
+                _viterbi_pieces(F.col("word"), lit_vocab, "\x00").alias("ps"),
+                "n",
+            )
+            recount = (
+                segged.select(F.explode("ps").alias("piece"), "n")
+                .filter(F.col("piece") != "\x00")
+                .groupBy("piece")
+                .agg(F.sum("n").alias("cnt"))
+            )
+            # coverage floor: corpus chars survive EM even when unused
+            vocab = (
+                recount.join(chars.select("piece"), "piece", "full_outer")
+                .select(
+                    "piece",
+                    F.when(
+                        F.length("piece") == 1,
+                        F.greatest(
+                            F.coalesce(F.col("cnt"), F.lit(0)), F.lit(1)
+                        ),
+                    )
+                    .otherwise(F.col("cnt"))
+                    .alias("cnt"),
+                )
+                .filter(F.col("cnt").isNotNull() & (F.col("cnt") > 0))
+            )
+        # prune: top target_vocab by (cnt desc, piece asc) + all chars
+        ranked = vocab.withColumn(
+            "__rk",
+            F.row_number().over(
+                Window.orderBy(F.col("cnt").desc(), F.col("piece").asc())
+            ),
+        )
+        kept = ranked.filter(
+            (F.col("__rk") <= target_vocab) | (F.length("piece") == 1)
+        ).select("piece", "cnt")
+        return sorted(
+            (r.piece, r.li) for r in _scaled_logps(kept).collect()
+        )
 
 
 def unigram_encode(

@@ -15,66 +15,25 @@ executions chosen by edge count:
   and every `CHECKPOINT_EVERY` rounds checkpointed, so the lineage
   stays bounded (the classic iterative-Spark footgun).
 
-Checkpoints are reliable (files under `sc.setCheckpointDir`) when the
-deployment set a checkpoint dir, and `localCheckpoint` otherwise.
+Checkpoints and caches go through `boundary`: a checkpoint is
+reliable (files under `sc.setCheckpointDir`) when the deployment set a
+checkpoint dir, and `localCheckpoint` otherwise.
 """
 
 from __future__ import annotations
 
 import itertools
-import logging
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_log = logging.getLogger(__name__)
-_release_failed_once = False
+from ..boundary import cache, cut, release
 
 #: symmetric edge count at or below which one union-find task solves
 #: the whole graph instead of the distributed min-label loop
 SMALL_GRAPH_EDGES = 5_000_000
 #: min-label rounds between lineage-truncating checkpoints
 CHECKPOINT_EVERY = 5
-
-
-def _release_checkpoint(df: DataFrame) -> None:
-    """Free a superseded localCheckpoint's executor-storage blocks.
-    `DataFrame.unpersist()` doesn't reach them (the plan is a
-    LogicalRDD leaf, not a cached plan), so this goes through the
-    leaf's underlying RDD. Best-effort across Spark minor versions:
-    on any internal-API drift the blocks are instead reclaimed by the
-    ContextCleaner when the driver GCs the reference — later, but
-    still bounded. The drift is WARN-logged once per process (not
-    swallowed silently: a Spark upgrade reverting this to
-    accumulate-until-GC is worth knowing about)."""
-    global _release_failed_once
-    try:
-        df._jdf.queryExecution().optimizedPlan().rdd().unpersist(False)
-    except Exception as exc:
-        if not _release_failed_once:
-            _release_failed_once = True
-            _log.warning(
-                "superseded-checkpoint release failed (%s: %s); falling "
-                "back to ContextCleaner GC reclamation — executor "
-                "storage will grow until the driver collects old label "
-                "frames. Probably a private-Spark-API drift in "
-                "_release_checkpoint.",
-                type(exc).__name__,
-                exc,
-            )
-
-
-def _checkpoint(df: DataFrame) -> DataFrame:
-    """Eager lineage-truncating checkpoint. Reliable
-    (`df.checkpoint`, files under the SparkContext's checkpoint dir —
-    survives executor loss, which a 1000-executor multi-hour CC run
-    needs) when the deployment has called `sc.setCheckpointDir(...)`;
-    otherwise `localCheckpoint` — executor-storage blocks, no extra
-    I/O, unrecoverable if an executor dies (lineage is gone), right
-    for local[n] and restartable batch jobs."""
-    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint()
 
 
 def _components_single_task(sym: DataFrame) -> DataFrame:
@@ -144,35 +103,32 @@ def connected_components(
     plan still deepens linearly with rounds — on a long-chain graph the
     planner cost itself becomes the bottleneck, so every
     `CHECKPOINT_EVERY` rounds the labels are checkpointed
-    (`_checkpoint`: reliable when a checkpoint dir is set, local
+    (`boundary.cut`: reliable when a checkpoint dir is set, local
     otherwise), truncating lineage to a leaf.
 
-    Checkpoint lifecycle: `unpersist()` is a NO-OP on a checkpointed
-    DataFrame, so superseded checkpoint blocks would pile up in
-    executor storage across long runs; each eager checkpoint therefore
-    explicitly releases the previous one (safe: eager ⇒ the new
-    blocks are fully materialized before the old lineage anchor is
-    dropped; a no-op for reliable checkpoints, whose files are
-    cleaned with the checkpoint dir). The newest checkpoint backs the
-    RETURNED DataFrame and is left alive — its blocks are freed when
-    the caller drops the result and the ContextCleaner collects it."""
+    Boundary lifecycle: each round's cached labels are released once
+    the next round's frame exists. A checkpoint is released only
+    after the NEXT eager checkpoint exists: the per-round `limit(1)`
+    probe does not materialize every partition of the cached rounds
+    that follow it, so their lineage still anchors on it (a reliable
+    checkpoint's files stay with the checkpoint dir). The frame backing
+    the RETURNED DataFrame is left alive — it is freed when the caller
+    drops the result and the ContextCleaner collects it."""
     sym = edges.select(
         F.col(src).alias("a"), F.col(dst).alias("b")
     ).unionByName(
         edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
     )
-    sym = sym.distinct().persist()
+    sym = cache(sym.distinct())
     if sym.count() <= SMALL_GRAPH_EDGES:
-        out = _components_single_task(sym)
         # materialize before dropping the cached edges it reads
-        out = _checkpoint(out)
-        sym.unpersist()
+        out = cut(_components_single_task(sym))
+        release(sym)
         return out
-    labels = (
+    labels = cache(
         sym.select(F.col("a").alias("node"))
         .distinct()
         .withColumn("component", F.col("node"))
-        .persist()
     )
     last_cp: DataFrame | None = None
     for rnd in itertools.count(1):
@@ -200,29 +156,25 @@ def connected_components(
                 F.min("old").alias("old"),
             )
         )
-        release_at_round_end = None
-        if rnd % CHECKPOINT_EVERY == 0:
-            # eager: truncates the logical plan AND materializes
-            new_full = _checkpoint(new_full)
-            # the old checkpoint can only be released at round end:
-            # this round's changed-count reads the previous round's
-            # labels, whose (possibly partially-cached) lineage
-            # anchors on the old checkpoint
-            release_at_round_end, last_cp = last_cp, new_full
-        else:
-            new_full = new_full.persist()
+        checkpoint_round = rnd % CHECKPOINT_EVERY == 0
+        # a checkpoint round's cut is eager: it truncates the logical
+        # plan AND materializes
+        new_full = cut(new_full) if checkpoint_round else cache(new_full)
         changed = (
             new_full.filter(F.col("component") < F.col("old"))
             .limit(1)
             .count()
         )
-        # unpersist the cached frame itself, not a projection of it
-        # (unpersist on a derived DataFrame is a no-op)
-        labels.unpersist()
+        # release the boundary frame itself, not a projection of it;
+        # the last checkpoint waits for the next one (see docstring)
+        if labels is not last_cp:
+            release(labels)
+        if checkpoint_round:
+            if last_cp is not None:
+                release(last_cp)
+            last_cp = new_full
         labels = new_full
-        if release_at_round_end is not None:
-            _release_checkpoint(release_at_round_end)
         if changed == 0:
             break
-    sym.unpersist()
+    release(sym)
     return labels.select("node", "component")

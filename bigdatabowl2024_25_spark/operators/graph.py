@@ -27,8 +27,12 @@ makes the per-round shuffle a map-side zip at cluster scale. Out-degree
 and the node list are computed once. The dangling mass is a 1-row
 aggregate broadcast back (crossJoin of a scalar). Plan depth grows
 linearly per round, and each rank is referenced twice (contributions +
-dangling), so every round is cut with ``localCheckpoint`` — eagerly
-every ``EAGER_EVERY`` rounds — like ``components.py``'s min-label loop.
+dangling), so every round is cut with `boundary.cut` — lazily, and
+eagerly every ``EAGER_EVERY`` rounds (the failure-domain bound: a
+mid-chain loss never recomputes more than that many rounds). The cuts
+are lazy cuts, not persists, on the round-15 measurements recorded in
+`boundary`'s docstring. Like every cut they are reliable checkpoints
+when a checkpoint dir is set, ``localCheckpoint`` otherwise.
 
 One recurrence: TrustRank (Gyöngyi et al., VLDB 2004) is PageRank with
 teleport and dangling mass restricted to a seed set S, and PageRank is
@@ -43,58 +47,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..boundary import cut
+
 #: rank unit (pagerank/trustrank): 1.0 of probability mass == SCALE units
 SCALE = 10**12
 #: hub/authority unit: each side's scores sum to ~HITS_SCALE
 HITS_SCALE = 10**9
 #: damping as a rational, DAMPING_NUM/DAMPING_DEN = 0.85
 DAMPING_NUM, DAMPING_DEN = 17, 20
-#: every EAGER_EVERY-th per-round lineage cut is eager (see `_cut`)
+#: every EAGER_EVERY-th per-round lineage cut is eager
 EAGER_EVERY = 4
-
-
-def _cut(df: DataFrame, eager: bool) -> DataFrame:
-    """Lineage cut for the per-round loop frames (ranks/auths/hubs):
-    ``localCheckpoint`` — lazy between ``EAGER_EVERY`` marks, eager at
-    them (the failure-domain bound: a mid-chain loss never recomputes
-    more than that many rounds).
-
-    Round 15 investigated replacing the lazy cuts with ``persist()``
-    and REJECTED it on three measurements, kept here so the next
-    reader doesn't re-run the experiment:
-
-    1. Under AQE, ``localCheckpoint(eager=False)`` calls ``toRdd`` at
-       construction, which executes the subtree's shuffle stages
-       immediately as a standalone mini-execution — q74 measured
-       ~11 s construct / ~1 s collect. That LOOKS like waste, but for
-       the serial round chain the mini-jobs do exactly the work the
-       final collect would otherwise do: swapping them for persist()
-       left the fused q74 union at parity (10.8-11.0 s both ways).
-    2. persist() does NOT truncate the visible/logical plan — each
-       round still embeds the previous round's tree ~3× (explain
-       string measured 8.8 KB → 85 KB over iterations 1→3), the exact
-       blowup the plan test pins (`test_pagerank_round_is_join_plus_
-       agg`) and the reason the cut exists.
-    3. persist() on the FAN-OUT frames (``e``, ``base``, ``nodes``,
-       q74's ``pr_edges``) actively regressed the fused union 10.8 →
-       19 s: the union's branches consume them from parallel stages,
-       so uncached-yet InMemoryRelations race their population
-       (duplicated upstream work), and cached plans bypass AQE
-       partition coalescing (`canChangeCachedPlanOutputPartitioning`
-       defaults false; enabling it recovered only 1 s).
-
-    Net: construction-time materialization via toRdd is the RIGHT
-    behavior for both frame classes here — it serializes shared
-    materializations exactly once and keeps per-round plans
-    constant-size. Full A/B table in SCALE.md round-15 q74 section."""
-    return df.localCheckpoint(eager=eager)
 
 
 def _edges_and_nodes(
     edges: DataFrame, src: str, dst: str
 ) -> tuple[DataFrame, DataFrame]:
-    """(e, nodes): the edge list as (src, dst) behind a lazy
-    localCheckpoint, and its distinct node list.
+    """(e, nodes): the edge list as (src, dst) behind a lazy cut, and
+    its distinct node list.
 
     NULL endpoints are dropped at the door: kept, a NULL "node"
     half-joins through the rounds (NULL never equi-joins, but groupBy
@@ -104,14 +73,12 @@ def _edges_and_nodes(
     deflating every other score.
 
     The edge list is read several times (node list twice, out-degree,
-    one join per round), so it is materialized once to
-    executor-local storage instead of re-deriving the upstream
-    subtree per reference — the same cut GraphX makes; for
-    fault-tolerant long runs route the INPUT through a reliable
-    checkpoint first (components.connected_components pattern)."""
+    one join per round), so it is materialized once instead of
+    re-deriving the upstream subtree per reference — the same cut
+    GraphX makes; set a checkpoint dir for fault-tolerant long runs."""
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     e = e.filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-    e = e.localCheckpoint(eager=False)
+    e = cut(e, eager=False)
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
@@ -149,11 +116,14 @@ def _seeded_rank(
         base = base.join(seeds.withColumn("__s", F.lit(1)), "node", "left")
         is_seed = F.coalesce("__s", F.lit(0))
     # node list + degree + seed flag are reused every round: one plan
-    base = base.select(
-        "node",
-        F.coalesce("deg", F.lit(0)).alias("deg"),
-        is_seed.alias("is_seed"),
-    ).localCheckpoint(eager=False)
+    base = cut(
+        base.select(
+            "node",
+            F.coalesce("deg", F.lit(0)).alias("deg"),
+            is_seed.alias("is_seed"),
+        ),
+        eager=False,
+    )
     counts = base.agg(
         F.coalesce(F.sum("is_seed"), F.lit(0)).alias("ns")
     )
@@ -216,13 +186,13 @@ def _seeded_rank(
         # join, dangling aggregate, next-round base), so an uncut plan
         # TRIPLES per round — 3^n subtree copies (observed: 9 KB → 28
         # KB per extra round; the composed-pipeline OOM lesson from
-        # pipelines/corpus._fanout applies). `_cut` checkpoints each
-        # round lazily (see _cut for why not persist) and every
+        # pipelines/corpus' stage caches applies). Each round is cut
+        # lazily (boundary's docstring says why not persist) and every
         # `EAGER_EVERY` rounds eagerly, so the LOGICAL tree stays
         # bounded and a failure mid-chain never recomputes more than
         # that many rounds.
         if (i + 1) < iterations:
-            ranks = _cut(ranks, (i + 1) % EAGER_EVERY == 0)
+            ranks = cut(ranks, eager=(i + 1) % EAGER_EVERY == 0)
     return ranks.select("node", "rank_scaled")
 
 
@@ -342,7 +312,7 @@ def hits(
     makes each a map-side zip at cluster scale — plus two 1-row L1
     sums broadcast back (crossJoin of a scalar). Same per-round
     lineage-cut policy as `pagerank` (scores referenced twice per
-    round → lazy localCheckpoint each round, eager every
+    round → lazy cut each round, eager every
     ``EAGER_EVERY``). ``scale`` above is ``HITS_SCALE``."""
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
@@ -355,7 +325,7 @@ def hits(
     # map-side zip instead.
     _maybe_b = F.broadcast if broadcast_scores else (lambda d: d)
     e, nodes = _edges_and_nodes(edges, src, dst)
-    nodes = nodes.localCheckpoint(eager=False)
+    nodes = cut(nodes, eager=False)
 
     def _renorm(raw: DataFrame, col: str) -> DataFrame:
         """raw (node, col) → all-nodes L1-renormalized (node, col)."""
@@ -393,7 +363,7 @@ def hits(
         # auths is referenced TWICE every round (h_raw below, then the
         # next round's a_raw — or the final output join), so cut its
         # lineage unconditionally; final-round hubs is referenced once
-        auths = _cut(_renorm(a_raw, "a"), False)
+        auths = cut(_renorm(a_raw, "a"), eager=False)
         h_raw = (
             e.join(
                 _maybe_b(auths.select(F.col("node").alias("dst"), "a")),
@@ -404,7 +374,7 @@ def hits(
         )
         hubs = _renorm(h_raw, "h")
         if (i + 1) < iterations:
-            hubs = _cut(hubs, (i + 1) % EAGER_EVERY == 0)
+            hubs = cut(hubs, eager=(i + 1) % EAGER_EVERY == 0)
     return (
         hubs.join(auths, "node")
         .select(

@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..boundary import cache
 from .text import normalize_text, tokens
 
 #: beginning-of-sentence context token (cannot collide with normalized
@@ -94,11 +95,10 @@ def lm_train(
     runtime as the identical IEEE double multiply the driver-side
     Python performed, so scores are bit-unchanged (and the DuckDB
     oracle already computed it this way)."""
-    unpruned = (
+    unpruned = cache(
         _pairs(docs, text_col, id_col)
         .groupBy("prev", "tok")
         .agg(F.count("*").alias("cb"))
-        .persist()
     )
     bigrams = unpruned.filter(F.col("cb") >= min_count)
     contexts = unpruned.groupBy("prev").agg(F.sum("cb").alias("cu"))

@@ -20,6 +20,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..boundary import cut
 from .text import portable_hash64
 
 
@@ -548,13 +549,13 @@ def kmv_overlap(a: DataFrame, b: DataFrame, k: int = KMV_K) -> DataFrame:
     documents/users do crawl A and crawl B share" without ever
     joining the raw data.
 
-    The input sketches are materialized (localCheckpoint — k rows
-    each) before use: each appears TWICE in the plan (inside the
+    The input sketches are materialized (an eager `boundary.cut` — k
+    rows each) before use: each appears TWICE in the plan (inside the
     union sketch and again in the membership joins), and without
     pinning, both source corpora would be scanned twice per overlap
     query."""
-    a = a.localCheckpoint()
-    b = b.localCheckpoint()
+    a = cut(a)
+    b = cut(b)
     uni = kmv_merge(a, b, k)
     flagged = (
         uni.join(

@@ -119,22 +119,17 @@ def argmax_row(
 def row_number_by(
     df: DataFrame, partition: list[str], order_by: list[Column | str], out: str
 ) -> DataFrame:
-    """W8: read order via row_number over a conditional sort key —
+    """W8/W9: a 1-based long row number per `partition`, in `order_by`
+    order, as column `out`.
+
+    W8 is read order via a conditional sort key —
     `arrange(..., if_else(firstSide=="R", -y, y))`
-    (`BuildingReadOrder.R:151-157`). Pass the conditional expression as
-    an order_by Column."""
-    w = Window.partitionBy(*partition).orderBy(*order_by)
-    return df.withColumn(out, F.row_number().over(w).cast("long"))
-
-
-def stable_label(
-    df: DataFrame, partition: list[str], order_by: list[Column | str], out: str
-) -> DataFrame:
-    """W9: per-frame defender labels 1..11. The reference recycles
-    physical row order (`def_data$defLabel <- rep(1:11)`,
-    `Openness_Data_Frame_Prep.R:34-36`) — fragile; any stable per-frame
-    labeling satisfies downstream use, so we label by an explicit key
-    (nflId)."""
+    (`BuildingReadOrder.R:151-157`); pass the conditional expression as
+    an order_by Column. W9 is per-frame defender labels 1..11: the
+    reference recycles physical row order (`def_data$defLabel <-
+    rep(1:11)`, `Openness_Data_Frame_Prep.R:34-36`) — fragile; any
+    stable per-frame labeling satisfies downstream use, so we label by
+    an explicit key (nflId)."""
     w = Window.partitionBy(*partition).orderBy(*order_by)
     return df.withColumn(out, F.row_number().over(w).cast("long"))
 

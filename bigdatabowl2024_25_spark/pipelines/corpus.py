@@ -39,6 +39,15 @@ stages, but dedup runs against the running `CorpusState` (8-byte
 content keys + 16-byte band keys — history text never reloads) so
 each day pays batch-sized work, never history-sized.
 
+Stage boundaries: a stage output read more than once downstream is
+cached, so consumers read the cache instead of replicating the
+upstream tree — uncached, the plan DOUBLES at every self-referencing
+stage (~100 scan-subtree copies by the funnel, which ran out of
+memory serializing task binaries at sf0.1 under a 1g heap). The caches
+register in the caller's `BoundaryCaches` scope (`caches=`); with
+none they stay session-wide (spark.catalog.clearCache() drops them).
+`stream_prepare` opens one scope per micro-batch.
+
 Every stage is individually driver-verified by its own oracle branch
 (q60 profile/PII, q64 'para'/'pack', q70 exact/incr/decontam/LM,
 q71-q75 funnel, q95 mix/shuffle); this module pins the COMPOSITION —
@@ -51,10 +60,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..boundary import BoundaryCaches, cut
 from ..operators.components import connected_components
 from ..operators.dedup import (
     exact_dedup,
@@ -142,79 +151,11 @@ class CorpusConfig:
     dsir_alpha: float = 1.0
     dsir_lam: float = 1.0
     dsir_seed: str = "dsir:v1"
-    persist_boundaries: bool = True
 
 
 def _n_tokens(text_col: str):
     w = F.filter(tokens(F.col(text_col)), lambda x: x != F.lit(""))
     return F.size(w)
-
-
-class BoundaryCaches:
-    """Owns the `_fanout` stage-boundary persists of one pipeline
-    composition, so a long-lived session (a service calling
-    `prepare_corpus`/`prepare_batch` per request) can release them
-    once the composed plan's actions have run, instead of accreting
-    executor storage until `spark.catalog.clearCache()` — the same
-    per-batch release `stream_prepare` does in its `finally` block.
-
-    Use as a context manager when the pipeline output is consumed
-    inside the block::
-
-        with BoundaryCaches() as bc:
-            out = prepare_corpus(df, caches=bc)
-            out.write.parquet(dest)   # actions run while caches live
-        # boundaries released here
-
-    or keep it open across actions and call `release()` explicitly.
-    Releasing before the output DataFrame's LAST action is safe but
-    wasteful (Spark recomputes the boundary from lineage)."""
-
-    def __init__(self) -> None:
-        self._dfs: list[DataFrame] = []
-
-    def add(self, df: DataFrame) -> DataFrame:
-        self._dfs.append(df)
-        return df
-
-    def release(self) -> None:
-        for d in self._dfs:
-            d.unpersist()
-        self._dfs.clear()
-
-    def __len__(self) -> int:
-        return len(self._dfs)
-
-    def __enter__(self) -> "BoundaryCaches":
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self.release()
-
-
-def _fanout(
-    d: DataFrame, cfg: CorpusConfig, caches: BoundaryCaches | None = None
-) -> DataFrame:
-    """Persist a stage boundary that is consumed more than once
-    downstream, so consumers plan against the cached relation instead
-    of replicating the upstream tree. Without this the logical plan
-    DOUBLES at every self-referencing stage (keepers ⋈ corpus, LM
-    train + score + join, the funnel's ~10 references) — ~100 copies
-    of the scan subtree by the funnel, and the driver OOMs
-    SERIALIZING task binaries long before data size matters (observed
-    at sf0.1 under the default 1g heap); with it, plan size stays
-    linear in stage count. At 100 TB the cache is MEMORY_AND_DISK:
-    spilling a boundary beats recomputing the whole upstream pipeline
-    once per consumer on every axis. Ownership: when the caller passes
-    a `BoundaryCaches`, every persist registers there for scoped
-    release; otherwise caches stay caller-owned session-wide
-    (spark.catalog.clearCache() to drop them). `persist_boundaries=
-    False` opts out for single-action plans on small corpora."""
-    if cfg.persist_boundaries:
-        d = d.persist(StorageLevel.MEMORY_AND_DISK)
-        if caches is not None:
-            caches.add(d)
-    return d
 
 
 def _profile_and_redact(
@@ -330,7 +271,7 @@ def prepare_corpus(
     `expose` (round 12): an optional dict the pipeline fills with
     named intermediates — currently `pre_dsir`, the stage-0-7 survivor
     frame the 7b DSIR stage selects FROM (set only when `cfg.dsir_k`
-    is on; it is the `caches`-persisted boundary, so a caller reading
+    is on; it is a boundary cached in `caches`, so a caller reading
     it pays nothing extra). A caller that needs both the hygienic
     corpus AND its DSIR-selected subset previously ran the whole
     stage-0-7 walk twice (q64's 'clean'+'dclean' measured 3.0 s +
@@ -338,6 +279,8 @@ def prepare_corpus(
     exposed frames before the `caches` scope releases.
     """
     cfg = cfg or CorpusConfig()
+    # no caller scope: the caches stay session-wide (module docstring)
+    bc = caches if caches is not None else BoundaryCaches()
     d = _profile_and_redact(df, text_col, cfg, id_col)
 
     # 2b. LM perplexity band (the CCNet quality cut): score every doc
@@ -349,7 +292,7 @@ def prepare_corpus(
     # join: token-less docs score nothing — stage 1's min_tokens
     # already removed them.
     if cfg.max_perplexity is not None:
-        d = _fanout(d, cfg, caches)  # train + score + join read d
+        d = bc.cache(d)  # train + score + join read d
         ref = lm_reference if lm_reference is not None else d
         bigrams, contexts, vocab = lm_train(
             ref, text_col, id_col, min_count=cfg.lm_min_count
@@ -365,7 +308,7 @@ def prepare_corpus(
     # 3. paragraph-level boilerplate strip; metadata rejoins on the
     # id the reassembly just hash-partitioned by (AQE reuses it)
     if cfg.paragraph_sep is not None:
-        d = _fanout(d, cfg, caches)  # rebuilt + meta both read d
+        d = bc.cache(d)  # rebuilt + meta both read d
         rebuilt = paragraph_dedup(
             d, text_col, id_col, sep=cfg.paragraph_sep
         )
@@ -386,7 +329,7 @@ def prepare_corpus(
     if cfg.substr_k is not None:
         from ..operators.dedup import exact_substring_dedup
 
-        d = _fanout(d, cfg, caches)  # rebuilt + meta both read d
+        d = bc.cache(d)  # rebuilt + meta both read d
         rebuilt = exact_substring_dedup(
             d, text_col, id_col, k=cfg.substr_k
         ).filter(F.col("n_kept") > 0)
@@ -398,7 +341,7 @@ def prepare_corpus(
         )
 
     # 4. exact keep-first (content-hash groupBy + id semi-join)
-    d = _fanout(d, cfg, caches)  # keepers + the semi-join both read d
+    d = bc.cache(d)  # keepers + the semi-join both read d
     keepers = exact_dedup(d, text_col, id_col).select(
         F.col("keeper_id").alias(id_col)
     )
@@ -406,7 +349,7 @@ def prepare_corpus(
 
     # 5. near-dup funnel; shingle hashes shared across both stages
     if cfg.near_dup:
-        d = _fanout(d, cfg, caches)  # the funnel references d ~10 times
+        d = bc.cache(d)  # the funnel references d ~10 times
         sh = with_shingles(d, text_col, id_col)
         hashes = shingle_hashes(sh, id_col)
         sigs = minhash_signatures(
@@ -430,7 +373,7 @@ def prepare_corpus(
 
     # 6. decontaminate (broadcast eval grams; anti-join the hits)
     if benchmark is not None:
-        d = _fanout(d, cfg, caches)  # gram explode + anti-join both read d
+        d = bc.cache(d)  # gram explode + anti-join both read d
         hits = decontaminate(
             d, benchmark, text_col, id_col, cfg.decontam_ngram
         )
@@ -460,7 +403,7 @@ def prepare_corpus(
             dsir_weights,
         )
 
-        d = _fanout(d, cfg, caches)  # model counts + scoring + join read d
+        d = bc.cache(d)  # model counts + scoring + join read d
         if expose is not None:
             expose["pre_dsir"] = d
         model = dsir_model(
@@ -538,8 +481,10 @@ def prepare_batch(
     an eager KB-scale collect at composition time (the one driver
     round-trip this function makes)."""
     cfg = cfg or CorpusConfig()
+    # no caller scope: the caches stay session-wide (module docstring)
+    bc = caches if caches is not None else BoundaryCaches()
     d = _profile_and_redact(new_df, text_col, cfg, id_col)
-    d = _fanout(d, cfg, caches)  # keyed twice below + the survivors join
+    d = bc.cache(d)  # keyed twice below + the survivors join
 
     lit_bloom = (
         bloom_literal(state.bloom) if state.bloom is not None else None
@@ -547,7 +492,7 @@ def prepare_batch(
     survivors, updated_keys = incremental_exact_dedup(
         d, state.seen_keys, text_col, id_col, seen_bloom=lit_bloom
     )
-    survivors = _fanout(survivors, cfg, caches)  # clean + the bloom delta
+    survivors = bc.cache(survivors)  # clean + the bloom delta
     next_bloom = state.bloom
     if state.bloom is not None:
         next_bloom = bloom_merge(
@@ -565,7 +510,7 @@ def prepare_batch(
                 "banded table — build the state with "
                 "empty_state(spark, near_dup=True)"
             )
-        clean = _fanout(clean, cfg, caches)
+        clean = bc.cache(clean)
         cands, new_banded = incremental_lsh_candidates(
             clean, banded, id_col, text_col,
             k=cfg.minhash_k, bands=cfg.bands,
@@ -649,19 +594,11 @@ def stream_prepare(
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        # batch-scoped fanout caches: a long-running stream would
-        # otherwise accumulate every batch's boundary persists in the
+        # batch-scoped boundary caches: a long-running stream would
+        # otherwise accumulate every batch's boundary caches in the
         # executors until the process dies — release them once this
         # batch's writes are committed
-        cached: list[DataFrame] = []
-
-        def fan(df: DataFrame) -> DataFrame:
-            if cfg.persist_boundaries:
-                df = df.persist(StorageLevel.MEMORY_AND_DISK)
-                cached.append(df)
-            return df
-
-        try:
+        with BoundaryCaches() as bc:
             seen = _read_deltas(
                 spark,
                 f"{state_dir}/seen",
@@ -682,7 +619,9 @@ def stream_prepare(
                 .groupBy("word")
                 .agg(F.bit_or("bits").alias("bits"))
             )
-            d = fan(_profile_and_redact(batch_df, text_col, cfg, id_col))
+            d = bc.cache(
+                _profile_and_redact(batch_df, text_col, cfg, id_col)
+            )
             survivors, _ = incremental_exact_dedup(
                 d,
                 seen,
@@ -690,7 +629,7 @@ def stream_prepare(
                 id_col,
                 seen_bloom=bloom_literal(bloom_regs),
             )
-            survivors = fan(survivors)
+            survivors = bc.cache(survivors)
             key_delta = survivors.select("content_key")
             clean = survivors.drop("content_key", "n_copies")
             band_delta = None
@@ -701,7 +640,7 @@ def stream_prepare(
                     batch_id,
                     "doc bigint, band_key string",
                 )
-                clean = fan(clean)
+                clean = bc.cache(clean)
                 cands, new_banded = incremental_lsh_candidates(
                     clean, banded, id_col, text_col,
                     k=cfg.minhash_k, bands=cfg.bands,
@@ -728,9 +667,6 @@ def stream_prepare(
                 band_delta.write.mode("overwrite").parquet(
                     f"{state_dir}/banded/d={batch_id}"
                 )
-        finally:
-            for c in cached:
-                c.unpersist()
 
     q = (
         stream.writeStream.foreachBatch(process)
@@ -774,7 +710,7 @@ def compact_state(spark, state_dir: str) -> None:
                 F.bit_or("bits").alias("bits")
             )
         # materialize BEFORE overwriting a directory being read
-        merged = merged.localCheckpoint()
+        merged = cut(merged)
         merged.write.mode("overwrite").parquet(f"{path}/d={top}")
         jvm = spark._jvm
         fs = jvm.org.apache.hadoop.fs.Path(path).getFileSystem(

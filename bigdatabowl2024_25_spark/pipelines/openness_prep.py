@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from ..operators.aggregates import group_median, pivot_wide
 from ..operators.relational import dim_join
-from ..operators.windows import event_anchored_range, stable_label
+from ..operators.windows import event_anchored_range, row_number_by
 
 
 def after_snap_dropbacks(tracking: DataFrame, plays: DataFrame) -> DataFrame:
@@ -46,7 +46,7 @@ def defenders_wide(base: DataFrame) -> DataFrame:
     d = base.filter(F.col("club") == F.col("defensiveTeam")).select(
         "gameId", "playId", "frameId", "nflId", "x", "y", "s"
     )
-    labeled = stable_label(
+    labeled = row_number_by(
         d, ["gameId", "playId", "frameId"], ["nflId"], "defLabel"
     )
     wide = pivot_wide(

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..boundary import cut
 from ..operators.dedup import (
     MINHASH_P,
     containment_pairs,
@@ -817,13 +818,11 @@ def q71_signatures_and_selection(spark, sf_dir):
     ).select(
         "__t", (portable_hash64(F.col("feat")) % _DSIR_DIM).alias("bucket")
     )
-    counts = (
-        fb.groupBy("bucket")
-        .agg(
+    counts = cut(
+        fb.groupBy("bucket").agg(
             F.count("*").alias("__cr"),
             F.sum(F.when(F.col("__t"), 1).otherwise(0)).alias("__ct"),
         )
-        .localCheckpoint()
     )
     raw_counts = counts.select("bucket", F.col("__cr").alias("c"))
     tgt_counts = counts.filter(F.col("__ct") > 0).select(
@@ -832,9 +831,7 @@ def q71_signatures_and_selection(spark, sf_dir):
     model = dsir_model(
         tgt_counts, raw_counts, dim=_DSIR_DIM, alpha=_DSIR_ALPHA
     )
-    wts = dsir_weights(
-        d, "text", "doc_id", model, dim=_DSIR_DIM
-    ).localCheckpoint()
+    wts = cut(dsir_weights(d, "text", "doc_id", model, dim=_DSIR_DIM))
     logw_micro = F.round(F.col("logw") * F.lit(1000000), 0).cast("bigint")
     dsir = wts.select(
         F.lit("dsir").alias("branch"),
@@ -1083,21 +1080,20 @@ def q74_near_dup_clusters(spark, sf_dir):
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_custkey"
         )
-        pr_edges = (
+        # the fact⋈fact derivation feeds all three centrality
+        # branches — EAGER cut (round 16, ADVICE r15): with
+        # eager=False the concurrent pr/ht/tr builders raced to
+        # materialize the lazy checkpoint and could compute the
+        # distinct fact-join up to 3×; eager runs it exactly once in
+        # this builder thread, still overlapped with the 'cc' branch
+        # by the outer build_concurrently
+        pr_edges = cut(
             li.join(o, li.l_orderkey == o.o_orderkey)
             .select(
                 F.col("o_custkey").alias("src"),
                 (F.lit(1000000) + F.col("l_suppkey")).alias("dst"),
             )
             .distinct()
-            # the fact⋈fact derivation feeds all three centrality
-            # branches — EAGER checkpoint (round 16, ADVICE r15): with
-            # eager=False the concurrent pr/ht/tr builders raced to
-            # materialize the lazy checkpoint and could compute the
-            # distinct fact-join up to 3×; eager runs it exactly once
-            # in this builder thread, still overlapped with the 'cc'
-            # branch by the outer build_concurrently
-            .localCheckpoint()
         )
         seeds = pr_edges.select(F.col("dst").alias("node")).filter(
             F.col("node") % 10 == 3

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..boundary import cut
 from ..operators.similarity import (
     decontaminate_embeddings,
     int_dot,
@@ -836,11 +837,9 @@ def q83_ann_ivf_topk(spark, sf_dir):
     # ('ivf' scoring, 'diverse', 'pq' codes, 'incr' state) — in the
     # fused plan each replicated the whole crossJoin+window subtree
     # (the q71 duplicate-subtree signature: ~80 Window nodes in
-    # plans/r16/q83_..._before.txt, 0 reuse). One localCheckpoint at
-    # the natural one-row-per-vector boundary serves them all.
-    assigned = ivf_assign_exact(
-        e, cents, "vec_id", "embedding"
-    ).localCheckpoint()
+    # plans/r16/q83_..._before.txt, 0 reuse). One eager cut at the
+    # natural one-row-per-vector boundary serves them all.
+    assigned = cut(ivf_assign_exact(e, cents, "vec_id", "embedding"))
     probes = nearest_lists_exact(q, cents, "vec_id", "embedding", nprobe=4)
     # quantize + norm ONCE per side before the probe join — the old
     # per-pair `quantized(...)` transforms re-ran interpreted on every

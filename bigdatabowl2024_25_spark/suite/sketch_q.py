@@ -9,6 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..boundary import cut
 from ..operators.sketch import (
     BLOOM_K,
     BLOOM_M,
@@ -501,7 +502,7 @@ def q38_cms_point_counts(spark, sf_dir):
     kmvest = one_val("kmvest", kmv_estimate(kregs), "est_micro")
     kr2 = kmv_build(e.filter(F.col("user_id") % 2 == 0), "user_id")
     kr3 = kmv_build(e.filter(F.col("user_id") % 3 == 0), "user_id")
-    ov = kmv_overlap(kr2, kr3).localCheckpoint()  # 3 rows ride one plan
+    ov = cut(kmv_overlap(kr2, kr3))  # 3 rows ride one plan
     kmv_over = (
         one_val("kmvjac", ov, "jaccard_micro")
         .unionByName(one_val("kmvuni", ov, "union_micro"))
@@ -539,7 +540,7 @@ def q38_cms_point_counts(spark, sf_dir):
     # events is scanned once for stats, once for binning.
     from ..operators.sketch import hist_bounds, hist_build, hist_quantile
 
-    hb = hist_bounds(e, "value").localCheckpoint()
+    hb = cut(hist_bounds(e, "value"))
     hreg = hist_build(e, "value", hb, _HB)
     hist_rows = hreg.select(
         F.lit("hist").alias("kind"),

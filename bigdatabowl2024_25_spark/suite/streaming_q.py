@@ -27,6 +27,7 @@ from contextlib import contextmanager
 
 from pyspark.sql import functions as F
 
+from ..boundary import BoundaryCaches, cut
 from ..sources.io import load_table
 from ..streaming.replay import (
     dedup_stream,
@@ -639,20 +640,16 @@ def q93_streaming_windows(spark, sf_dir):
         # q70/q72 banding machinery). Rows carry (content_key,
         # surviving doc_id, day): winner identity and per-day
         # membership are value-hashed, not just counts. Fixed doc_id
-        # cutoffs keep the branch O(1) in sf. The `_fanout` boundary
-        # persists are load-bearing (without them day 2's plan nests
+        # cutoffs keep the branch O(1) in sf. The stage-boundary
+        # caches are load-bearing (without them day 2's plan nests
         # day 1's whole tree per self-reference — measured 85 s vs
         # ~6); scoping them in a BoundaryCaches and pinning the
-        # ≤~50-row result with an eager localCheckpoint keeps the
+        # ≤~50-row result with an eager cut keeps the
         # session cache clean across repeated runs (bench warm runs
         # measured SLOWER than cold when they leaked).
         from ..operators.text import normalize_text as _norm
         from ..operators.text import portable_hash64 as _ph64
-        from ..pipelines.corpus import (
-            BoundaryCaches,
-            empty_state,
-            prepare_batch,
-        )
+        from ..pipelines.corpus import empty_state, prepare_batch
 
         bt_cfg = CorpusConfig(
             min_tokens=_CORP_MIN_TOK,
@@ -711,16 +708,14 @@ def q93_streaming_windows(spark, sf_dir):
             bt_clean2, _bt_state2 = prepare_batch(
                 bt_day2, bt_state1, cfg=bt_cfg, caches=bt_bc
             )
-            batch = (
-                _bt_rows(bt_clean1, 1)
-                .unionByName(_bt_rows(bt_clean2, 2))
-                .localCheckpoint()
+            batch = cut(
+                _bt_rows(bt_clean1, 1).unionByName(_bt_rows(bt_clean2, 2))
             )
 
         # the memory sink tables are driver-resident and tiny (one row
-        # per user×window); localCheckpoint pins the rows so the temp
+        # per user×window); an eager cut pins the rows so the temp
         # dir and memory sinks can be torn down
-        out = (
+        out = cut(
             tumb.unionByName(sess)
             .unionByName(state)
             .unionByName(joined)
@@ -732,7 +727,6 @@ def q93_streaming_windows(spark, sf_dir):
             .unionByName(anomaly)
             .unionByName(cusum)
             .unionByName(ooo)
-            .localCheckpoint()
         )
         q1.stop()
         q2.stop()

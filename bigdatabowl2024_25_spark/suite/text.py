@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..boundary import BoundaryCaches, cut
 from ..operators.text import (
     LANG_STOPWORDS,
     PII_PATTERNS,
@@ -1271,11 +1272,7 @@ def _q64_clean_dclean(spark, d):
     15 so the walk's eager jobs can overlap the tokenizer trainers
     and the lazy branches' plan construction (guide §2.6) instead of
     serializing after them."""
-    from ..pipelines.corpus import (
-        BoundaryCaches,
-        CorpusConfig,
-        prepare_corpus,
-    )
+    from ..pipelines.corpus import CorpusConfig, prepare_corpus
 
     from ..sources.io import spread
 
@@ -1326,20 +1323,24 @@ def _q64_clean_dclean(spark, d):
             caches=dc_bc,
             expose=_dc_expose,
         )
-        dclean = dcleaned.select(
-            F.lit("dclean").alias("kind"),
-            "doc_id",
-            F.col("n_tokens").cast("bigint").alias("part_id"),
-            F.length(clb).cast("bigint").alias("byte_len"),
-            F.md5(clb).alias("content_md5"),
-        ).localCheckpoint()
-        clean = _dc_expose["pre_dsir"].select(
-            F.lit("clean").alias("kind"),
-            "doc_id",
-            F.col("n_tokens").cast("bigint").alias("part_id"),
-            F.length(clb).cast("bigint").alias("byte_len"),
-            F.md5(clb).alias("content_md5"),
-        ).localCheckpoint()
+        dclean = cut(
+            dcleaned.select(
+                F.lit("dclean").alias("kind"),
+                "doc_id",
+                F.col("n_tokens").cast("bigint").alias("part_id"),
+                F.length(clb).cast("bigint").alias("byte_len"),
+                F.md5(clb).alias("content_md5"),
+            )
+        )
+        clean = cut(
+            _dc_expose["pre_dsir"].select(
+                F.lit("clean").alias("kind"),
+                "doc_id",
+                F.col("n_tokens").cast("bigint").alias("part_id"),
+                F.length(clb).cast("bigint").alias("byte_len"),
+                F.md5(clb).alias("content_md5"),
+            )
+        )
     return clean, dclean
 
 
@@ -1703,9 +1704,9 @@ def _q64_branch_frames_rest(
     # earlier stage flips the selection, and every selected page's
     # bytes are md5-verified.
     # The DSIR stage reads its input three more times (model counts +
-    # scoring + semi-join), so boundary persists are load-bearing here
-    # (with persist_boundaries=False the stage-0-7 subtree replicates
-    # 4x and q64 measured 11.0 s vs 5.5); scope them and pin the
+    # scoring + semi-join), so boundary caches are load-bearing here
+    # (without them the stage-0-7 subtree replicates 4x and q64
+    # measured 11.0 s vs 5.5); scope them and pin the
     # k-row result eagerly so nothing leaks across runs (the q93
     # 'batch' pattern).
     # Round 12 (VERDICT item 1): 'clean' no longer runs its own

@@ -36,7 +36,6 @@ from ..operators.windows import (
     group_min_offset,
     row_number_by,
     sessionize,
-    stable_label,
 )
 from ..sources.io import load_table
 from .registry import query
@@ -261,7 +260,7 @@ def q28_daily_label(spark, sf_dir):
     e = _events(spark, sf_dir).withColumn(
         "day", F.expr("ts_us div 86400000000")
     )
-    return stable_label(
+    return row_number_by(
         e, ["user_id", "day"], ["ts_us", "event_id"], "label"
     ).select("event_id", "label")
 

@@ -19,3 +19,17 @@ def spark():
     s = get_spark(app_name="bdb-tests", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def checkpoint_dir(spark, tmp_path):
+    """Sets the SparkContext's checkpoint dir (so every `boundary.cut`
+    is a reliable checkpoint) for one test, and clears it afterwards."""
+    sc = spark.sparkContext
+    path = tmp_path / "checkpoints"
+    sc.setCheckpointDir(str(path))
+    yield path
+    # the Scala var setter name contains '$', hence getattr
+    getattr(sc._jsc.sc(), "checkpointDir_$eq")(
+        sc._jvm.scala.Option.apply(None)
+    )

@@ -678,6 +678,33 @@ def test_bpe_train_batched_round_trips(spark):
     assert stats2["round_trips"] <= 12  # never worse than sequential
 
 
+def test_trainers_release_their_cuts(spark):
+    """The tokenizer trainers return Python lists, so no vocab cut may
+    outlive the call: after each trainer's distributed loop returns,
+    the persisted-RDD count is back at its value on entry (`<=`: the
+    ContextCleaner may concurrently drop other tests' RDDs)."""
+    from bigdatabowl2024_25_spark.operators.bpe import (
+        bpe_train,
+        unigram_train,
+        wordpiece_train,
+    )
+
+    def n_persisted():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    df = spark.createDataFrame([(t,) for t in TEXTS], "text string")
+    for train in (
+        lambda: bpe_train(df, "text", n_merges=4, small_vocab_threshold=0),
+        lambda: wordpiece_train(
+            df, "text", n_merges=9, small_vocab_threshold=0
+        ),
+        lambda: unigram_train(df, "text", target_vocab=20, word_marker="_"),
+    ):
+        before = n_persisted()
+        assert train()
+        assert n_persisted() <= before
+
+
 def test_bpe_train_routes_large_vocab_to_distributed(spark):
     """The >65k-distinct-word gate (the production-scale route): a
     70k-word corpus must take the distributed batched loop (stats

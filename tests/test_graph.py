@@ -63,6 +63,27 @@ def test_pagerank_partition_invariance_and_checkpoint_path(spark):
         assert got == want
 
 
+def test_pagerank_under_checkpoint_dir(spark, checkpoint_dir):
+    """With a checkpoint dir set, pagerank's lineage cuts (lazy, and
+    eager at round 4) are reliable checkpoints: files land in the dir
+    and the ranks are identical to the reference."""
+    import os
+
+    df = spark.createDataFrame(EDGES, "src bigint, dst bigint")
+    got = {
+        r.node: r.rank_scaled
+        for r in pagerank(df, iterations=6).collect()
+    }
+    assert got == ref_pagerank(EDGES, 6)
+    walked = [
+        f
+        for _, _, fs in os.walk(checkpoint_dir)
+        for f in fs
+        if not f.startswith(".")
+    ]
+    assert walked, "no reliable checkpoint files written"
+
+
 def test_pagerank_mass_and_ordering(spark):
     df = spark.createDataFrame(EDGES, "src bigint, dst bigint")
     got = {

@@ -8,13 +8,13 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pytest
 
 from bigdatabowl2024_25_spark.functions.kernels import (
     N_ANGLES,
     R_CAP,
     overlap,
     partial_radius,
+    partial_radius_optimizer,
     row_seed,
 )
 
@@ -198,7 +198,7 @@ def test_partial_radius_optimizer_parity():
     bx = rng.uniform(0.0, 120.0, n)
     by = rng.uniform(0.0, 53.3, n)
     closed = partial_radius(s, x, y, bs, bx, by)
-    iterative = partial_radius(s, x, y, bs, bx, by, method="optimizer")
+    iterative = partial_radius_optimizer(s, x, y, bs, bx, by)
     assert np.max(np.abs(closed - iterative)) < 1e-6
 
 
@@ -214,21 +214,8 @@ def test_partial_radius_optimizer_parity_edges():
     bx = np.array([3.0, 3.0, 80.0, 3.0, 120.0])
     by = np.array([5.0, 5.0, 40.0, 5.0, 53.3])
     closed = partial_radius(s, x, y, bs, bx, by)
-    iterative = partial_radius(s, x, y, bs, bx, by, method="optimizer")
+    iterative = partial_radius_optimizer(s, x, y, bs, bx, by)
     assert np.max(np.abs(closed - iterative)) < 1e-6
     assert np.all(closed[0] == 0.0)  # w = 0, slower than ball
     assert np.all(closed[1] == 0.0)  # s = 0
     assert np.all(closed[2] == R_CAP) and np.all(closed[3] == R_CAP)
-
-
-def test_partial_radius_unknown_method_raises():
-    with pytest.raises(ValueError, match="unknown method"):
-        partial_radius(
-            np.array([1.0]),
-            np.array([0.0]),
-            np.array([0.0]),
-            np.array([2.0]),
-            np.array([1.0]),
-            np.array([1.0]),
-            method="lbfgs",
-        )

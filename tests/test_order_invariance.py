@@ -113,7 +113,7 @@ def test_w7_argmax_row(events):
 
 def test_w9_stable_label(events):
     assert_layout_invariant(
-        lambda df: windows.stable_label(
+        lambda df: windows.row_number_by(
             df, ["user_id"], ["event_id"], "lbl"
         ).select("event_id", "lbl"),
         events,

@@ -126,6 +126,41 @@ def test_lsh_near_dup_funnel(spark):
     assert rerun == got_pairs
 
 
+def test_lsh_near_dup_runs_no_job_when_called(spark):
+    """Calling `lsh_near_dup` only builds a plan: no Spark job starts
+    (so nothing is pinned in executor storage either), on an in-memory
+    input and on q80's parquet input with q80's parameters. The
+    banded corpus is shared by both sides of the bucket self-join: the
+    executed plan reads one exchange twice (ReusedExchange)."""
+    import random
+
+    from bigdatabowl2024_25_spark.operators.similarity import lsh_near_dup
+
+    rng = random.Random(3)
+    mem = spark.createDataFrame(
+        [(i, [rng.uniform(-1, 1) for _ in range(64)]) for i in range(60)],
+        "vec_id long, embedding array<double>",
+    )
+    q80 = load_table(spark, SF, "embeddings")
+    sc = spark.sparkContext
+    for n, e in enumerate((mem, q80)):
+        group = f"test_lsh_near_dup_call_{n}"
+        sc.setJobGroup(group, "lsh_near_dup call")
+        try:
+            out = lsh_near_dup(
+                e, "vec_id", "embedding", threshold=0.2,
+                planes=6, tables=4, dims=64,
+            )
+        finally:
+            for prop in ("spark.jobGroup.id", "spark.job.description",
+                         "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(prop, None)
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        out.collect()
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "ReusedExchange" in plan
+
+
 def test_pq_adc_recall_codes_and_plan(spark):
     """IVF-PQ/ADC (q83 'pq' branch): recall vs the exact top-5 must
     beat chance on the near-orthogonal synthetic corpus (a 16-codeword
