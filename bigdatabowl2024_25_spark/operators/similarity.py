@@ -541,7 +541,6 @@ def knn_classify(
     label_col: str,
     k: int = 5,
     dims: int = 64,
-    strategy: str = "pairs",
 ) -> DataFrame:
     """Exact k-nearest-neighbor classification over an embedding
     column — the label-propagation / nearest-neighbor-labeling step of
@@ -555,19 +554,15 @@ def knn_classify(
     query: (id_col, pred_label, votes, kth_d2) — kth_d2 is the k-set's
     boundary distance (exact int in a double), so a consumer can
     threshold confidence. If |train| < k the vote runs over what
-    exists. Both strategies are result-identical (test-pinned):
+    exists.
 
-    - 'pairs' (default): broadcast the train side, emit one skinny
-      (id, tid, lbl, d2) row per (query, train) pair with the distance
-      UNROLLED into codegen (`_d2_unrolled` — 20× the interpreted
-      fold locally), then window top-k + vote aggregates. The corpus
-      never moves for scoring (pairs are born in its partitions); the
-      k-set window shuffles ~30 B × |train| per corpus row.
-    - 'inrow': the train set collapses to ONE collect_list row that
-      broadcasts into a 1-row nested-loop join; scoring + sort + vote
-      are in-row array lambdas — ZERO exchanges on the corpus, but the
-      lambdas are interpreted (~20× slower per pair). Pick it when the
-      pair shuffle, not CPU, is the binding constraint.
+    The train side is broadcast, and each (query, train) pair becomes
+    one skinny (id, tid, lbl, d2) row with the distance UNROLLED into
+    codegen (`_d2_unrolled` — 20× an interpreted `zip_with` fold
+    locally); a window then keeps the top k and an aggregate counts the
+    votes. The corpus never moves for scoring (pairs are born in its
+    partitions); the k-set window shuffles ~30 B × |train| per corpus
+    row.
 
     For train sets beyond ~10^5, generate candidates with the IVF/LSH
     funnels first and re-rank with this scorer (the q80 pattern).
@@ -600,88 +595,38 @@ def knn_classify(
             F.lit(False),
         )
     )
-    if strategy == "pairs":
-        tr = train.select(
-            F.col(id_col).alias("__tid"),
-            F.col(label_col).alias("__lbl"),
-            quantized(F.col(vec_col)).alias("__tiv"),
-        )
-        pairs = q.crossJoin(F.broadcast(tr)).select(
-            F.col(id_col),
-            "__tid",
-            "__lbl",
-            _d2_unrolled(F.col("__iv"), F.col("__tiv"), dims).alias("__d2"),
-        )
-        w = Window.partitionBy(id_col).orderBy(
-            F.col("__d2").asc(), F.col("__tid").asc()
-        )
-        kset = pairs.withColumn("__rn", F.row_number().over(w)).filter(
-            F.col("__rn") <= k
-        )
-        votes = kset.groupBy(id_col, "__lbl").agg(
-            F.count(F.lit(1)).alias("__nv")
-        )
-        w2 = Window.partitionBy(id_col).orderBy(
-            F.col("__nv").desc(), F.col("__lbl").asc()
-        )
-        winner = votes.withColumn("__wrn", F.row_number().over(w2)).filter(
-            F.col("__wrn") == 1
-        )
-        bound = kset.groupBy(id_col).agg(F.max("__d2").alias("__kth"))
-        return winner.join(bound, id_col).select(
-            F.col(id_col),
-            F.col("__lbl").alias("pred_label"),
-            F.col("__nv").cast("bigint").alias("votes"),
-            F.col("__kth").cast("double").alias("kth_d2"),
-        ).unionByName(unscored)
-    if strategy != "inrow":
-        raise ValueError(f"knn_classify: unknown strategy {strategy!r}")
-    t = train.select(
-        F.struct(
-            quantized(F.col(vec_col)).alias("iv"),
-            F.col(id_col).alias("tid"),
-            F.col(label_col).alias("lbl"),
-        ).alias("s")
-    ).agg(F.collect_list("s").alias("__T"))
-    scored = F.transform(
-        F.col("__T"),
-        lambda s: F.struct(
-            F.aggregate(
-                F.zip_with(
-                    F.col("__iv"), s["iv"], lambda x, y: (x - y) * (x - y)
-                ),
-                F.lit(0).cast("bigint"),
-                lambda acc, x: acc + x,
-            ).alias("d2"),
-            s["tid"].alias("tid"),
-            s["lbl"].alias("lbl"),
-        ),
+    tr = train.select(
+        F.col(id_col).alias("__tid"),
+        F.col(label_col).alias("__lbl"),
+        quantized(F.col(vec_col)).alias("__tiv"),
     )
-    topk = F.slice(F.array_sort(scored), 1, k)
-    joined = q.crossJoin(F.broadcast(t)).withColumn("__k", topk)
-    # winner via an O(k²) in-row vote: min over struct(-votes, label)
-    best = F.array_min(
-        F.transform(
-            F.col("__k"),
-            lambda x: F.struct(
-                (
-                    -F.size(
-                        F.filter(
-                            F.col("__k"), lambda y: y["lbl"] == x["lbl"]
-                        )
-                    )
-                ).alias("nv"),
-                x["lbl"].alias("lbl"),
-            ),
-        )
-    )
-    return joined.select(
+    pairs = q.crossJoin(F.broadcast(tr)).select(
         F.col(id_col),
-        best["lbl"].alias("pred_label"),
-        (-best["nv"]).cast("bigint").alias("votes"),
-        F.element_at(F.col("__k"), -1)["d2"]
-        .cast("double")
-        .alias("kth_d2"),
+        "__tid",
+        "__lbl",
+        _d2_unrolled(F.col("__iv"), F.col("__tiv"), dims).alias("__d2"),
+    )
+    w = Window.partitionBy(id_col).orderBy(
+        F.col("__d2").asc(), F.col("__tid").asc()
+    )
+    kset = pairs.withColumn("__rn", F.row_number().over(w)).filter(
+        F.col("__rn") <= k
+    )
+    votes = kset.groupBy(id_col, "__lbl").agg(
+        F.count(F.lit(1)).alias("__nv")
+    )
+    w2 = Window.partitionBy(id_col).orderBy(
+        F.col("__nv").desc(), F.col("__lbl").asc()
+    )
+    winner = votes.withColumn("__wrn", F.row_number().over(w2)).filter(
+        F.col("__wrn") == 1
+    )
+    bound = kset.groupBy(id_col).agg(F.max("__d2").alias("__kth"))
+    return winner.join(bound, id_col).select(
+        F.col(id_col),
+        F.col("__lbl").alias("pred_label"),
+        F.col("__nv").cast("bigint").alias("votes"),
+        F.col("__kth").cast("double").alias("kth_d2"),
     ).unionByName(unscored)
 
 

@@ -20,7 +20,6 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..boundary import cut
 from .text import portable_hash64
 
 
@@ -549,13 +548,11 @@ def kmv_overlap(a: DataFrame, b: DataFrame, k: int = KMV_K) -> DataFrame:
     documents/users do crawl A and crawl B share" without ever
     joining the raw data.
 
-    The input sketches are materialized (an eager `boundary.cut` — k
-    rows each) before use: each appears TWICE in the plan (inside the
-    union sketch and again in the membership joins), and without
-    pinning, both source corpora would be scanned twice per overlap
-    query."""
-    a = cut(a)
-    b = cut(b)
+    Each input sketch appears twice in the plan (inside the union
+    sketch and again in the membership join), yet its source is
+    scanned once: the executed plan reads the sketch's hash exchange a
+    second time through a ReusedExchange. So the call only builds a
+    plan — it runs no Spark job and pins no storage."""
     uni = kmv_merge(a, b, k)
     flagged = (
         uni.join(

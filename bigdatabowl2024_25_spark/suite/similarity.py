@@ -411,11 +411,11 @@ def q80_cosine_search(spark, sf_dir):
     # "curated set" (`similarity.knn_classify`): int64 squared-L2
     # k-set with (d2, tid) tie-break, majority vote with (votes desc,
     # label asc) tie-break, k-set boundary distance as confidence.
-    # The corpus side never shuffles for scoring ('pairs' strategy:
-    # the 200-row train set broadcasts into the pair generator, and
-    # the skinny k-set rows — not the vectors — ride the top-k
-    # window); prediction, votes, AND the boundary distance are
-    # value-hashed against a windowed SQL re-derivation.
+    # The corpus side never shuffles for scoring (the 200-row train
+    # set broadcasts into the pair generator, and the skinny k-set
+    # rows — not the vectors — ride the top-k window); prediction,
+    # votes, AND the boundary distance are value-hashed against a
+    # windowed SQL re-derivation.
     from ..operators.similarity import knn_classify
 
     knn = knn_classify(

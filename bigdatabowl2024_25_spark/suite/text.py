@@ -1347,11 +1347,14 @@ def _q64_clean_dclean(spark, d):
 def _q64_branch_frames(spark, sf_dir) -> dict:
     """Every q64 branch as its own DataFrame, keyed by kind, in the
     exact union order of `q64_binary_plumbing` (dict order IS the
-    plan order). Split out in round 12 so per-branch wall time is
-    measurable in isolation (`scripts/bench_q64_branches.py`) — the
-    r11 driver bench grew q64 +52% with no way to see which leg
-    paid, and the query has become where cost hides (VERDICT r11)."""
+    plan order). Each frame carries its `kind` literal, so
+    `scripts/query_profile.py` times every leg in isolation by
+    filtering on it — the r11 driver bench grew q64 +52% with no way
+    to see which leg paid, and the query has become where cost hides
+    (VERDICT r11)."""
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
 
     from ..operators.bpe import (
         bpe_encode,
@@ -1371,13 +1374,19 @@ def _q64_branch_frames(spark, sf_dir) -> dict:
     # are gathered where each branch needs them, so the emitted frames
     # (and the driver oracle) are unchanged.
     pool = ThreadPoolExecutor(max_workers=5)
+
+    def submit(fn, *args, **kwargs):
+        # each task runs with its own copy of the caller's job group
+        # and labels, taken here (`concurrency` module docstring)
+        return pool.submit(
+            inheritable_thread_target(spark)(fn), *args, **kwargs
+        )
+
     try:
         lit_corpus = _lit_df(spark, _BPE_CORPUS, "doc_id long, text string")
-        f_trained = pool.submit(
-            bpe_train, lit_corpus, "text", len(_BPE_MERGES)
-        )
-        f_wp = pool.submit(wordpiece_train, lit_corpus, "text", n_merges=10)
-        f_uni = pool.submit(
+        f_trained = submit(bpe_train, lit_corpus, "text", len(_BPE_MERGES))
+        f_wp = submit(wordpiece_train, lit_corpus, "text", n_merges=10)
+        f_uni = submit(
             unigram_train,
             lit_corpus,
             "text",
@@ -1385,8 +1394,8 @@ def _q64_branch_frames(spark, sf_dir) -> dict:
             max_piece_len=6,
             n_em_iters=2,
         )
-        f_bbpe = pool.submit(byte_bpe_train, lit_corpus, "text", 12)
-        f_cd = pool.submit(_q64_clean_dclean, spark, d)
+        f_bbpe = submit(byte_bpe_train, lit_corpus, "text", 12)
+        f_cd = submit(_q64_clean_dclean, spark, d)
         return _q64_branch_frames_rest(
             spark, sf_dir, d, f_trained, f_wp, f_uni, f_bbpe, f_cd
         )

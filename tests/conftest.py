@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import sys
+from contextlib import contextmanager
 from pathlib import Path
 
 import pytest
@@ -33,3 +34,18 @@ def checkpoint_dir(spark, tmp_path):
     getattr(sc._jsc.sc(), "checkpointDir_$eq")(
         sc._jvm.scala.Option.apply(None)
     )
+
+
+@contextmanager
+def job_group(sc, name):
+    """Runs the body under Spark job group `name` and yields a callable
+    returning the ids of the jobs started in that group so far. On exit
+    it clears the group and the description and interrupt flag that
+    `setJobGroup` also sets, so the thread's later jobs are ungrouped."""
+    sc.setJobGroup(name, name)
+    try:
+        yield lambda: list(sc.statusTracker().getJobIdsForGroup(name))
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)

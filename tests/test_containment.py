@@ -17,6 +17,7 @@ from bigdatabowl2024_25_spark.operators.dedup import (
     shingle_hashes,
     with_shingles,
 )
+from conftest import job_group
 
 
 def _shingle_sets(docs: dict[int, str], n: int = 3) -> dict[int, set]:
@@ -200,15 +201,9 @@ def test_pair_scorers_reject_non_positive_threshold(spark, threshold):
     )
     sh = with_shingles(df, "text", "doc_id")
     cands = spark.createDataFrame([(0, 1)], "id_a long, id_b long")
-    sc = spark.sparkContext
-    sc.setJobGroup("test_threshold_check", "threshold check")
-    try:
+    with job_group(spark.sparkContext, "test_threshold_check") as jobs:
         with pytest.raises(ValueError, match="threshold must be > 0"):
             jaccard_pairs(cands, sh, "doc_id", threshold=threshold)
         with pytest.raises(ValueError, match="threshold must be > 0"):
             containment_pairs(sh, "doc_id", threshold=threshold)
-    finally:
-        for prop in ("spark.jobGroup.id", "spark.job.description",
-                     "spark.job.interruptOnCancel"):
-            sc.setLocalProperty(prop, None)
-    assert sc.statusTracker().getJobIdsForGroup("test_threshold_check") == []
+    assert jobs() == []

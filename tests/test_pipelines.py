@@ -17,6 +17,7 @@ from bigdatabowl2024_25_spark.pipelines import (
 )
 from bigdatabowl2024_25_spark.schemas import PRIMARY_KEYS
 from bigdatabowl2024_25_spark.sources.io import assert_unique_key
+from conftest import job_group
 from tests.fixtures_bdb import N_FRAMES, SNAP_FRAME, build_fixtures
 
 N_GAMES, N_PLAYS = 2, 3
@@ -237,15 +238,10 @@ def test_full_dag_materialized(spark, t, tmp_path):
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     ungrouped = set(tracker.getJobIdsForGroup(None))
-    sc.setJobGroup("test_run_dag", "run_dag stage writes")
-    try:
+    with job_group(sc, "test_run_dag") as jobs:
         out = run_dag(spark, t, str(tmp_path / "stages"), density=3.0)
-    finally:
-        for prop in ("spark.jobGroup.id", "spark.job.description",
-                     "spark.job.interruptOnCancel"):
-            sc.setLocalProperty(prop, None)
     assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
-    assert tracker.getJobIdsForGroup("test_run_dag")
+    assert jobs()
     expected = {
         "cleaned_player_data",
         "radius_data",

@@ -13,6 +13,7 @@ from bigdatabowl2024_25_spark.operators.similarity import (
     topk_per_query,
 )
 from bigdatabowl2024_25_spark.sources.io import load_table
+from conftest import job_group
 
 SF = "/root/testdata/sf0.001"
 
@@ -142,20 +143,13 @@ def test_lsh_near_dup_runs_no_job_when_called(spark):
         "vec_id long, embedding array<double>",
     )
     q80 = load_table(spark, SF, "embeddings")
-    sc = spark.sparkContext
     for n, e in enumerate((mem, q80)):
-        group = f"test_lsh_near_dup_call_{n}"
-        sc.setJobGroup(group, "lsh_near_dup call")
-        try:
+        with job_group(spark.sparkContext, f"test_lsh_call_{n}") as jobs:
             out = lsh_near_dup(
                 e, "vec_id", "embedding", threshold=0.2,
                 planes=6, tables=4, dims=64,
             )
-        finally:
-            for prop in ("spark.jobGroup.id", "spark.job.description",
-                         "spark.job.interruptOnCancel"):
-                sc.setLocalProperty(prop, None)
-        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        assert jobs() == []
         out.collect()
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "ReusedExchange" in plan
@@ -611,30 +605,6 @@ def test_knn_classify_votes_ties_and_small_train(spark):
     assert g1.pred_label == 1 and g1.kth_d2 == 0.0
 
 
-def test_knn_strategies_agree(spark):
-    """The codegen 'pairs' path and the zero-shuffle 'inrow' path are
-    result-identical on real embeddings (prediction, votes, AND the
-    boundary distance)."""
-    from bigdatabowl2024_25_spark.operators.similarity import knn_classify
-
-    e = load_table(spark, SF, "embeddings")
-    q = e.filter(F.col("vec_id") >= 100)
-    t = e.filter(F.col("vec_id") < 100)
-    a = {
-        r.vec_id: (r.pred_label, r.votes, r.kth_d2)
-        for r in knn_classify(
-            q, t, "vec_id", "embedding", "label", k=5
-        ).collect()
-    }
-    b = {
-        r.vec_id: (r.pred_label, r.votes, r.kth_d2)
-        for r in knn_classify(
-            q, t, "vec_id", "embedding", "label", k=5, strategy="inrow"
-        ).collect()
-    }
-    assert a == b and len(a) > 0
-
-
 def test_knn_classify_null_and_ragged_vectors(spark):
     """Round-10 hardening: a NULL distance sorts FIRST under the
     ascending k-set window, so one NULL/ragged train vector would
@@ -660,30 +630,25 @@ def test_knn_classify_null_and_ragged_vectors(spark):
         "vec_id long, embedding array<double>",
     )
     clean_tr = tr.filter("size(embedding) = 2 AND label IS NOT NULL")
-    for strat in ("pairs", "inrow"):
-        got = {
-            r.vec_id: (r.pred_label, r.votes, r.kth_d2)
-            for r in knn_classify(
-                q, tr, "vec_id", "embedding", "label",
-                k=2, dims=2, strategy=strat,
-            ).collect()
-        }
-        # scorable query: votes from the two nearest REAL 'a' rows
-        assert got[10] == (
-            "a", 2, got[10][2],
-        ) and got[10][2] is not None
-        # identical to pre-cleaned train input
-        want10 = {
-            r.vec_id: (r.pred_label, r.votes, r.kth_d2)
-            for r in knn_classify(
-                q, clean_tr, "vec_id", "embedding", "label",
-                k=2, dims=2, strategy=strat,
-            ).collect()
-        }[10]
-        assert got[10] == want10
-        # unscorable queries: explicit non-answers
-        assert got[11] == (None, 0, None)
-        assert got[12] == (None, 0, None)
+    got = {
+        r.vec_id: (r.pred_label, r.votes, r.kth_d2)
+        for r in knn_classify(
+            q, tr, "vec_id", "embedding", "label", k=2, dims=2
+        ).collect()
+    }
+    # scorable query: votes from the two nearest REAL 'a' rows
+    assert got[10] == ("a", 2, got[10][2]) and got[10][2] is not None
+    # identical to pre-cleaned train input
+    want10 = {
+        r.vec_id: (r.pred_label, r.votes, r.kth_d2)
+        for r in knn_classify(
+            q, clean_tr, "vec_id", "embedding", "label", k=2, dims=2
+        ).collect()
+    }[10]
+    assert got[10] == want10
+    # unscorable queries: explicit non-answers
+    assert got[11] == (None, 0, None)
+    assert got[12] == (None, 0, None)
 
 
 def test_jl_projection_and_topk(spark):

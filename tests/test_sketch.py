@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from bigdatabowl2024_25_spark.operators.sketch import cms_build, cms_query
 from bigdatabowl2024_25_spark.sources.io import load_table
+from conftest import job_group
 
 SF = "/root/testdata/sf0.001"
 W, D = 64, 4
@@ -180,6 +181,29 @@ def test_kmv_overlap_estimates(spark):
     assert abs(uni - 40000) <= 0.5 * 40000
     assert 0.05 <= jac <= 0.5
     assert abs(inter - 10000) <= 0.6 * 10000
+
+
+def test_kmv_overlap_builds_a_plan_only(spark):
+    """Calling `kmv_overlap` starts no Spark job and pins nothing: after
+    the collect the persisted-RDD count is back at its entry value.
+    Each input sketch is still computed once: the executed plan reads
+    its exchange a second time (ReusedExchange)."""
+    from bigdatabowl2024_25_spark.operators.sketch import (
+        kmv_build,
+        kmv_overlap,
+    )
+
+    sc = spark.sparkContext
+    pinned = sc._jsc.getPersistentRDDs().size()
+    a = kmv_build(spark.range(0, 3000).select(F.col("id").alias("v")), "v")
+    b = kmv_build(spark.range(1000, 5000).select(F.col("id").alias("v")), "v")
+    with job_group(sc, "test_kmv_overlap_call") as jobs:
+        ov = kmv_overlap(a, b)
+    assert jobs() == []
+    ov.collect()
+    assert sc._jsc.getPersistentRDDs().size() == pinned
+    plan = ov._jdf.queryExecution().executedPlan().toString()
+    assert "ReusedExchange" in plan
 
 
 def test_hll_grouped_ledger(spark):
