@@ -1,30 +1,34 @@
 """Similarity search over embedding columns (`array<float>`).
 
-Two paths:
-- `brute_force_topk`: exact cosine top-k. Vectors are quantized to
-  micro-integers, so dot products and norms are pure int64 sums —
-  order-free, hence engine-exact AND computable array-natively
-  (zip_with + aggregate inside whole-stage codegen): a broadcast
-  nested-loop join with zero shuffles on the score side, instead of
-  the explode→join-on-pos→re-aggregate formulation that shuffles the
-  entire vector corpus twice.
-- `lsh_topk`: random-hyperplane LSH bucketing as the scale path —
-  candidates share a bucket key; the expensive exact scoring runs only
-  within buckets. Hyperplane signs are derived from the portable hash,
-  so bucketing is deterministic across runs AND engines (no RNG).
+Every scorer is exact int64 arithmetic. Vectors are quantized to
+micro-integers (`quantized`, or SQ8's int8 range), so dot products and
+norms are order-free integer sums: engine-exact, and reproducible in
+the DuckDB oracle bit for bit. Two private helpers carry that for
+every scorer:
+- `_vectors`: the id, the int vector and its norm √Σ iv², computed
+  once per row, before any join or explode;
+- `_cosine`: the one int-cosine quotient, so each scored pair costs
+  exactly one `int_dot`.
 
-Scale notes (100 TB / billions of vectors):
-- the brute-force path is the correctness baseline and the per-bucket
-  scorer; it is O(n·q) and must never run globally at scale. The
-  query side is broadcast — callers keep it small (or pre-bucket).
-- the LSH path shuffles each vector once per table (`planes` bits →
-  one bucket key), then joins query buckets to data buckets — the
-  classic ANN partition-prune; recall is tunable via planes/tables.
+The scorers, exact to approximate:
+- `pairwise_cosine` + `topk_per_query`: exact cosine for every
+  (query, corpus) pair, query side broadcast (the correctness
+  baseline; O(n·q), never global at scale);
+- `sq8_topk`: the same shape over int8-range vectors;
+- `ivf_topk` (probe lists from an explicit centroid table),
+  `pq_adc_topk` (IVF-PQ, ADC scoring), `lsh_topk` (random-hyperplane
+  buckets) and `jl_topk` (projected shortlist, exact re-rank): the
+  scale paths, which prune candidates and score the survivors
+  exactly;
+- `lsh_near_dup`, `incremental_ivf_near_dup`, `semantic_dedup`: the
+  corpus×corpus near-dup funnels.
+
+Hyperplane, projection and codebook literals are md5- or
+table-derived (no RNG), so every funnel is deterministic across runs
+AND engines.
 """
 
 from __future__ import annotations
-
-import math
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -60,6 +64,30 @@ def int_dot(a: Column, b: Column) -> Column:
     )
 
 
+def _vectors(
+    df: DataFrame, p: str, iv: Column, *cols: Column | str
+) -> DataFrame:
+    """`cols` (the row's id, plus any carried key), `{p}_iv` = the int
+    vector `iv`, and `{p}_nrm` = √Σ iv² — computed ONCE per row, before
+    any join or explode, so `_cosine` costs one `int_dot` per pair.
+    The int64 sum converts to double exactly (|Σ| < 2^53) and sqrt is
+    correctly rounded, so the norm is bit-identical in every engine."""
+    return df.select(*cols, iv.alias(f"{p}_iv")).withColumn(
+        f"{p}_nrm",
+        F.sqrt(int_dot(F.col(f"{p}_iv"), F.col(f"{p}_iv")).cast("double")),
+    )
+
+
+def _cosine(a: str, b: str) -> Column:
+    """The int cosine of two `_vectors` sides (column prefixes `a`, `b`):
+    their exact int64 dot, as a double, over the product of their norms
+    — one dot and two correctly-rounded IEEE ops, the same value on any
+    engine."""
+    return int_dot(F.col(f"{a}_iv"), F.col(f"{b}_iv")).cast("double") / (
+        F.col(f"{a}_nrm") * F.col(f"{b}_nrm")
+    )
+
+
 def pairwise_cosine(
     queries: DataFrame,
     data: DataFrame,
@@ -68,29 +96,12 @@ def pairwise_cosine(
 ) -> DataFrame:
     """Exact cosine for every (query, data) pair: broadcast the query
     side, score each pair with a single array-native int64 dot —
-    no shuffle touches the data corpus. Returns (q_id, d_id, cosine).
-
-    Norms are projected per side BEFORE the join (O(n+q) norm work,
-    not O(n·q)), so the per-pair cost is exactly one zip_with."""
-
-    def prep(df: DataFrame, p: str) -> DataFrame:
-        iv = quantized(F.col(vec_col))
-        return df.select(
-            F.col(id_col).alias(f"{p}_id"), iv.alias(f"{p}_iv")
-        ).withColumn(
-            f"{p}_norm",
-            F.sqrt(int_dot(F.col(f"{p}_iv"), F.col(f"{p}_iv")).cast("double")),
-        )
-
-    qv = prep(queries, "q")
-    dv = prep(data, "d")
+    no shuffle touches the data corpus. Returns (q_id, d_id, cosine)."""
+    iv = quantized(F.col(vec_col))
+    qv = _vectors(queries, "q", iv, F.col(id_col).alias("q_id"))
+    dv = _vectors(data, "d", iv, F.col(id_col).alias("d_id"))
     return dv.crossJoin(F.broadcast(qv)).select(
-        "q_id",
-        "d_id",
-        (
-            int_dot(F.col("q_iv"), F.col("d_iv")).cast("double")
-            / (F.col("q_norm") * F.col("d_norm"))
-        ).alias("cosine"),
+        "q_id", "d_id", _cosine("q", "d").alias("cosine")
     )
 
 
@@ -141,15 +152,6 @@ def topk_per_query(pairs: DataFrame, k: int) -> DataFrame:
     )
 
 
-def brute_force_topk(
-    queries: DataFrame, data: DataFrame, id_col: str, vec_col: str, k: int
-) -> DataFrame:
-    """Exact cosine top-k baseline (oracle-parity path)."""
-    return topk_per_query(
-        pairwise_cosine(queries, data, id_col, vec_col), k
-    )
-
-
 def rrf_fuse(
     dense: DataFrame,
     lexical: DataFrame,
@@ -158,8 +160,9 @@ def rrf_fuse(
 ) -> DataFrame:
     """Reciprocal-rank fusion (Cormack/Clarke/Büttcher 2009) of two
     retrieval rank lists — the hybrid-search glue of a RAG pipeline:
-    a dense (embedding top-k, e.g. `brute_force_topk`/`ivf_topk`) and
-    a lexical (`text.bm25_topk`) list over the same corpus ids fuse to
+    a dense (embedding top-k, e.g. `topk_per_query` over
+    `pairwise_cosine`, or `ivf_topk`) and a lexical
+    (`text.bm25_topk`) list over the same corpus ids fuse to
     one ranking per query without score calibration, since RRF reads
     only RANK positions: score(d) = Σ_lists 1/(k_const + rank_d).
 
@@ -246,146 +249,26 @@ def sq8_topk(
     in the int8-quantized domain — 8× less memory traffic than float32
     and pure int64 dot products, the standard compressed-domain rescore
     tier between brute force and IVF/LSH pruning. Same O(n·q) pair
-    shape as `brute_force_topk` (broadcast query side, corpus never
+    shape as `pairwise_cosine` (broadcast query side, corpus never
     shuffles); recall vs the float baseline is pinned in
     tests/test_similarity.py. Everything (scales, quantization, dots)
     is order-free exact arithmetic → full DuckDB value-hash oracle."""
-    scales = sq8_scales(data, vec_col, dims)
-
-    def prep(df: DataFrame, p: str) -> DataFrame:
-        qv = sq8_quantized(F.col(vec_col), F.col("__sv"))
-        out = df.crossJoin(F.broadcast(scales)).select(
-            F.col(id_col).alias(f"{p}_id"), qv.alias(f"{p}_qv")
-        )
-        return out.withColumn(
-            f"{p}_norm",
-            F.sqrt(
-                int_dot(F.col(f"{p}_qv"), F.col(f"{p}_qv")).cast("double")
-            ),
-        )
-
-    qv = prep(queries, "q")
-    dv = prep(data, "d")
+    scales = F.broadcast(sq8_scales(data, vec_col, dims))
+    iv = sq8_quantized(F.col(vec_col), F.col("__sv"))
+    qv = _vectors(
+        queries.crossJoin(scales), "q", iv, F.col(id_col).alias("q_id")
+    )
+    dv = _vectors(
+        data.crossJoin(scales), "d", iv, F.col(id_col).alias("d_id")
+    )
     pairs = dv.crossJoin(F.broadcast(qv)).select(
-        "q_id",
-        "d_id",
-        (
-            int_dot(F.col("q_qv"), F.col("d_qv")).cast("double")
-            / (F.col("q_norm") * F.col("d_norm"))
-        ).alias("cosine"),
+        "q_id", "d_id", _cosine("q", "d").alias("cosine")
     )
     if exclude_self:
         # when queries ⊆ corpus, drop the trivial self pair BEFORE
         # ranking so the k-th real neighbor isn't pushed out
         pairs = pairs.filter(F.col("q_id") != F.col("d_id"))
     return topk_per_query(pairs, k)
-
-
-def cosine_col(a: Column, b: Column) -> Column:
-    """Array-native single-pass cosine (bench path; float association
-    order is Spark's own — do not oracle-compare)."""
-    ad = F.transform(a, lambda x: x.cast("double"))
-    bd = F.transform(b, lambda x: x.cast("double"))
-    dot = F.aggregate(
-        F.zip_with(ad, bd, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    na = F.sqrt(F.aggregate(ad, F.lit(0.0), lambda acc, x: acc + x * x))
-    nb = F.sqrt(F.aggregate(bd, F.lit(0.0), lambda acc, x: acc + x * x))
-    return dot / (na * nb)
-
-
-def ivf_index(
-    data: DataFrame,
-    id_col: str,
-    vec_col: str,
-    n_lists: int = 16,
-    seed: int = 42,
-) -> tuple[DataFrame, list[list[float]]]:
-    """IVF coarse quantizer: distributed KMeans partitions the corpus
-    into `n_lists` inverted lists. Returns (assigned corpus with
-    `__list`, centroid vectors).
-
-    Scale: the index is built ONCE and written out (ideally
-    `write_bucketed(..., bucket_by=["__list"])` so probes are
-    partition-pruned scans); at billions of vectors KMeans fits on a
-    sample — Spark's implementation already distributes the assignment
-    pass, which is the part proportional to corpus size."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    fv = data.withColumn(
-        "__fv",
-        array_to_vector(F.transform(F.col(vec_col), lambda x: x.cast("double"))),
-    )
-    model = KMeans(
-        k=n_lists, seed=seed, featuresCol="__fv", predictionCol="__list"
-    ).fit(fv)
-    assigned = model.transform(fv).select(
-        F.col(id_col), F.col(vec_col), F.col("__list")
-    )
-    centroids = [list(map(float, c)) for c in model.clusterCenters()]
-    return assigned, centroids
-
-
-def nearest_lists(vec_col: Column, centroids: list[list[float]], nprobe: int) -> Column:
-    """Indices of the `nprobe` nearest centroids (squared-L2), as an
-    array column. Centroids are literals — evaluated per row inside
-    codegen, no join, no shuffle."""
-    packed = F.array(
-        *[
-            F.struct(
-                F.aggregate(
-                    F.zip_with(
-                        vec_col,
-                        F.array(*[F.lit(x) for x in c]),
-                        lambda v, cc: (v.cast("double") - cc)
-                        * (v.cast("double") - cc),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ).alias("d2"),
-                F.lit(i).alias("list_id"),
-            )
-            for i, c in enumerate(centroids)
-        ]
-    )
-    return F.transform(
-        F.slice(F.array_sort(packed), 1, nprobe), lambda s: s["list_id"]
-    )
-
-
-def ivf_topk(
-    queries: DataFrame,
-    assigned: DataFrame,
-    centroids: list[list[float]],
-    id_col: str,
-    vec_col: str,
-    k: int,
-    nprobe: int = 4,
-) -> DataFrame:
-    """IVF probe: each query scans only its `nprobe` nearest inverted
-    lists (~nprobe/n_lists of the corpus), scored exactly within them.
-    The probe set is a broadcast join on `__list` — the corpus never
-    shuffles; with a `__list`-bucketed index the probe is a pruned
-    scan."""
-    qp = queries.select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.explode(nearest_lists(F.col(vec_col), centroids, nprobe)).alias(
-            "__list"
-        ),
-    )
-    scored = (
-        assigned.withColumnRenamed(id_col, "d_id")
-        .withColumnRenamed(vec_col, "d_vec")
-        .join(F.broadcast(qp), ["__list"])
-        .select(
-            "q_id",
-            "d_id",
-            cosine_col(F.col("q_vec"), F.col("d_vec")).alias("cosine"),
-        )
-    )
-    return topk_per_query(scored, k)
 
 
 def ivf_assign_exact(
@@ -396,13 +279,15 @@ def ivf_assign_exact(
 ) -> DataFrame:
     """IVF assignment against an explicit centroid table (`cents`:
     (__list, centroid-vector) — e.g. a deterministic subset of the
-    corpus, or persisted KMeans centers): each vector's single nearest
-    list by quantized squared-L2, i.e. `nearest_lists_exact` with
-    nprobe=1 (same scorer, same tie-break to the lower list id).
+    corpus, or persisted trained centers): each vector's single
+    nearest list by quantized squared-L2, i.e. `nearest_lists_exact`
+    with nprobe=1 (same scorer, same tie-break to the lower list id).
+    Returns (id_col, vec_col, __list): the inverted index `ivf_topk`
+    probes.
 
-    This is the oracle-comparable sibling of `ivf_index` (whose KMeans
-    centers are MLlib-internal floats): same output shape, same probe
-    path downstream, exact parity semantics."""
+    Scale: the index is built ONCE and written out (ideally
+    partitioned or bucketed by `__list`, so a probe is a
+    partition-pruned scan)."""
     return nearest_lists_exact(data, cents, id_col, vec_col, nprobe=1)
 
 
@@ -447,6 +332,31 @@ def nearest_lists_exact(
     )
 
 
+def ivf_topk(
+    probes: DataFrame,
+    assigned: DataFrame,
+    id_col: str,
+    vec_col: str,
+    k: int,
+) -> DataFrame:
+    """IVF probe: each query scans only its probed inverted lists
+    (`probes` = `nearest_lists_exact` rows, ~nprobe/n_lists of the
+    corpus), scored with the exact int cosine within them, then
+    `topk_per_query`. `assigned` is the `ivf_assign_exact` index.
+    Returns (q_id, d_id, cosine, rank).
+
+    The probe side is a broadcast join on `__list` — the corpus never
+    shuffles; with a `__list`-partitioned index the probe is a
+    dynamically pruned scan."""
+    iv = quantized(F.col(vec_col))
+    qp = _vectors(probes, "q", iv, F.col(id_col).alias("q_id"), "__list")
+    dv = _vectors(assigned, "d", iv, F.col(id_col).alias("d_id"), "__list")
+    scored = dv.join(F.broadcast(qp), ["__list"]).select(
+        "q_id", "d_id", _cosine("q", "d").alias("cosine")
+    )
+    return topk_per_query(scored, k)
+
+
 def incremental_ivf_near_dup(
     new_df: DataFrame,
     state: DataFrame,
@@ -482,7 +392,9 @@ def incremental_ivf_near_dup(
     100 TB shape: the batch side (probes) BROADCASTS; the state table
     is scanned in place by a broadcast hash join on `__list` — with a
     `__list`-bucketed/partitioned state table the probe is a pruned
-    scan, and history never shuffles."""
+    scan, and history never shuffles. Norms are taken once per pool
+    row and per probe row before the join, so a candidate pair costs
+    one dot."""
     probes = nearest_lists_exact(new_df, cents, id_col, vec_col, nprobe)
     own = ivf_assign_exact(new_df, cents, id_col, vec_col)
     new_rows = own.select(
@@ -490,23 +402,21 @@ def incremental_ivf_near_dup(
         "__list",
         quantized(F.col(vec_col)).alias("iv"),
     )
-    n = probes.select(
-        F.col(id_col).alias("__nid"),
-        quantized(F.col(vec_col)).alias("__niv"),
-        "__list",
+    n = _vectors(
+        probes, "n", quantized(F.col(vec_col)),
+        F.col(id_col).alias("n_id"), "__list",
     )
-    pool = state.unionByName(new_rows)
-    cos = int_dot(F.col("__niv"), F.col("iv")).cast("double") / (
-        F.sqrt(int_dot(F.col("__niv"), F.col("__niv")).cast("double"))
-        * F.sqrt(int_dot(F.col("iv"), F.col("iv")).cast("double"))
+    pool = _vectors(
+        state.unionByName(new_rows), "d", F.col("iv"),
+        F.col("doc").alias("d_id"), "__list",
     )
     pairs = (
         pool.join(F.broadcast(n), ["__list"])
-        .filter(F.col("doc") != F.col("__nid"))
+        .filter(F.col("d_id") != F.col("n_id"))
         .select(
-            F.least("doc", "__nid").alias("id_a"),
-            F.greatest("doc", "__nid").alias("id_b"),
-            cos.alias("cosine"),
+            F.least("d_id", "n_id").alias("id_a"),
+            F.greatest("d_id", "n_id").alias("id_b"),
+            _cosine("n", "d").alias("cosine"),
         )
         .filter(F.col("cosine") >= F.lit(threshold))
         # a pair reachable through several probed lists (nprobe > 1,
@@ -689,17 +599,13 @@ def semantic_dedup(
     many clusters fell back."""
     if assigned is None:
         assigned = ivf_assign_exact(data, cents, id_col, vec_col)
-    c = cents.select(
-        F.col("__list"), quantized(F.col(vec_col)).alias("__civ")
-    ).withColumn(
-        "__cnrm",
-        F.sqrt(int_dot(F.col("__civ"), F.col("__civ")).cast("double")),
-    )
+    iv = quantized(F.col(vec_col))
+    c = _vectors(cents, "c", iv, "__list")
     # a NULL/zero CENTROID is a broken model table — fail with a clear
     # message instead of a codegen DIVIDE_BY_ZERO five stages later
     c = c.withColumn(
-        "__cnrm",
-        F.when(F.col("__cnrm") > 0, F.col("__cnrm")).otherwise(
+        "c_nrm",
+        F.when(F.col("c_nrm") > 0, F.col("c_nrm")).otherwise(
             F.raise_error(
                 F.concat(
                     F.lit("semantic_dedup: centroid __list="),
@@ -711,27 +617,15 @@ def semantic_dedup(
         ),
     )
     mem = (
-        assigned.select(
-            F.col(id_col),
-            F.col("__list"),
-            quantized(F.col(vec_col)).alias("__iv"),
-        )
-        .withColumn(
-            "__nrm",
-            F.sqrt(int_dot(F.col("__iv"), F.col("__iv")).cast("double")),
-        )
+        _vectors(assigned, "m", iv, F.col(id_col), "__list")
         # NULL/zero DATA vectors: cosine is undefined, so such a row
         # can never be PROVEN a semantic duplicate — it survives (the
         # knn/jl hardening family: previously this was a cryptic
         # codegen DIVIDE_BY_ZERO crash under ANSI)
-        .filter(F.col("__nrm") > 0)
+        .filter(F.col("m_nrm") > 0)
         .join(F.broadcast(c), ["__list"])
-        .withColumn(
-            "__cosc",
-            int_dot(F.col("__iv"), F.col("__civ")).cast("double")
-            / (F.col("__nrm") * F.col("__cnrm")),
-        )
-        .drop("__civ", "__cnrm")
+        .withColumn("__cosc", _cosine("m", "c"))
+        .drop("c_iv", "c_nrm")
     )
     y_src = mem
     if max_cluster_size is not None:
@@ -779,24 +673,21 @@ def semantic_dedup(
     x = mem.select(
         F.col(id_col).alias("__xid"),
         F.col("__list"),
-        F.col("__iv").alias("__xiv"),
-        F.col("__nrm").alias("__xnrm"),
+        F.col("m_iv").alias("x_iv"),
+        F.col("m_nrm").alias("x_nrm"),
         F.col("__cosc").alias("__xcosc"),
     )
     y = y_src.select(
         F.col(id_col).alias("__yid"),
         F.col("__list"),
-        F.col("__iv").alias("__yiv"),
-        F.col("__nrm").alias("__ynrm"),
+        F.col("m_iv").alias("y_iv"),
+        F.col("m_nrm").alias("y_nrm"),
         F.col("__cosc").alias("__ycosc"),
-    )
-    cxy = int_dot(F.col("__xiv"), F.col("__yiv")).cast("double") / (
-        F.col("__xnrm") * F.col("__ynrm")
     )
     dominated = (
         x.join(y, ["__list"])
         .filter(F.col("__xid") != F.col("__yid"))
-        .withColumn("__cxy", cxy)
+        .withColumn("__cxy", _cosine("x", "y"))
         .filter(
             (F.col("__cxy") >= F.lit(threshold))
             & (
@@ -848,57 +739,6 @@ def pq_codebooks(
         [list(r["__iv"][s * dsub : (s + 1) * dsub]) for r in rows]
         for s in range(m)
     ]
-
-
-def pq_codebooks_kmeans(
-    data: DataFrame,
-    vec_col: str,
-    m: int = 8,
-    dsub: int = 8,
-    k: int = 16,
-    seed: int = 42,
-) -> list[list[list[int]]]:
-    """Production-quality PQ codebooks: one seeded KMeans per subspace
-    over the corpus' sliced subvectors, centers quantized to the same
-    micro-int domain the scorer uses. The quality sibling of
-    `pq_codebooks` (whose deterministic corpus-derived codebooks keep
-    the SQL oracle); same relationship as `ivf_index` (KMeans) to
-    `ivf_assign_exact`. Classic IVF-PQ trains on residuals against the
-    coarse centroid — skipped here (codebooks on raw subvectors), the
-    standard simplification when nprobe re-scores exactly.
-
-    Measured caveat (tests/test_similarity.py): on structureless
-    near-orthogonal vectors k-means collapses centers toward the mean
-    and LOSES recall to corpus-sampled codewords (0.225 vs 0.325 on
-    the synthetic corpus) — train on real, clustered embeddings, and
-    validate recall before switching a production index to this path.
-
-    Cost: m KMeans fits over n×dsub-dim slices — at billions of rows,
-    fit on a sample; the assignment pass downstream (`_pq_codes_sql`)
-    is the part proportional to corpus size and stays a projection."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    books: list[list[list[int]]] = []
-    for s in range(m):
-        sub = data.select(
-            array_to_vector(
-                F.transform(
-                    F.slice(F.col(vec_col), s * dsub + 1, dsub),
-                    lambda x: x.cast("double"),
-                )
-            ).alias("__fv")
-        )
-        model = KMeans(
-            k=k, seed=seed + s, featuresCol="__fv", predictionCol="__c"
-        ).fit(sub)
-        books.append(
-            [
-                [int(math.floor(v * QUANT)) for v in c]
-                for c in model.clusterCenters()
-            ]
-        )
-    return books
 
 
 def _pq_codes_sql(iv_name: str, codebooks: list[list[list[int]]]) -> str:
@@ -973,7 +813,6 @@ def pq_adc_topk(
     nprobe: int = 4,
     assigned: DataFrame | None = None,
     probes: DataFrame | None = None,
-    codebooks: list[list[list[int]]] | None = None,
 ) -> DataFrame:
     """IVF-PQ with asymmetric-distance (ADC) scoring — the compressed-
     domain scale tier past SQ8: the corpus is stored as `m` sub-space
@@ -1003,10 +842,7 @@ def pq_adc_topk(
     Reference parity: generalizes `Catch_Probability_Model.ipynb`'s
     nearest-neighbor feature search to billion-vector corpora
     (SURVEY.md §2.9 similarity family)."""
-    if codebooks is None:
-        # oracle-reproducible default; pass pq_codebooks_kmeans(...)
-        # for the trained-quantizer quality path
-        codebooks = pq_codebooks(cents, vec_col, m, dsub)
+    codebooks = pq_codebooks(cents, vec_col, m, dsub)
     if assigned is None:
         assigned = ivf_assign_exact(data, cents, id_col, vec_col)
     if probes is None:
@@ -1024,15 +860,10 @@ def pq_adc_topk(
     # (query, probe-list) row — the probe explode then carries only
     # (q_id, __list) and joins the per-query LUT back in, so the
     # broadcast holds one LUT copy per query instead of nprobe copies
-    qmeta = (
-        queries.withColumn("__iv", quantized(F.col(vec_col)))
-        .select(
-            F.col(id_col).alias("q_id"),
-            F.expr(_pq_lut_sql("__iv", codebooks)).alias("__lut"),
-            F.sqrt(
-                int_dot(F.col("__iv"), F.col("__iv")).cast("double")
-            ).alias("__qnrm"),
-        )
+    qmeta = _vectors(
+        queries, "q", quantized(F.col(vec_col)), F.col(id_col).alias("q_id")
+    ).select(
+        "q_id", F.expr(_pq_lut_sql("q_iv", codebooks)).alias("__lut"), "q_nrm"
     )
     qp = probes.select(F.col(id_col).alias("q_id"), "__list").join(
         F.broadcast(qmeta), ["q_id"]
@@ -1046,7 +877,7 @@ def pq_adc_topk(
         "d_id",
         (
             adc_dot.cast("double")
-            / (F.col("__qnrm") * F.sqrt(d_norm2.cast("double")))
+            / (F.col("q_nrm") * F.sqrt(d_norm2.cast("double")))
         ).alias("cosine"),
     )
     return topk_per_query(scored, k)
@@ -1102,12 +933,8 @@ def _banded(
     `p`. Quantization and the norm are computed ONCE per vector before
     the explode; downstream scoring reads the iv/nrm columns, so the
     per-candidate cost is exactly one zip_with dot."""
-    pre = df.select(
-        F.col(id_col).alias(f"{p}_id"),
-        quantized(F.col(vec_col)).alias(f"{p}_iv"),
-    ).withColumn(
-        f"{p}_nrm",
-        F.sqrt(int_dot(F.col(f"{p}_iv"), F.col(f"{p}_iv")).cast("double")),
+    pre = _vectors(
+        df, p, quantized(F.col(vec_col)), F.col(id_col).alias(f"{p}_id")
     )
     return pre.select(
         f"{p}_id",
@@ -1146,12 +973,9 @@ def lsh_topk(
     # oracle-comparable.
     qe = _banded(queries, id_col, vec_col, "q", planes, tables, dims)
     de = _banded(data, id_col, vec_col, "d", planes, tables, dims)
-    cos = int_dot(F.col("q_iv"), F.col("d_iv")).cast("double") / (
-        F.col("q_nrm") * F.col("d_nrm")
-    )
     scored = (
         de.join(F.broadcast(qe), ["bucket"])
-        .select("q_id", "d_id", cos.alias("cosine"))
+        .select("q_id", "d_id", _cosine("q", "d").alias("cosine"))
         .dropDuplicates(["q_id", "d_id"])
     )
     return topk_per_query(scored, k)
@@ -1198,9 +1022,6 @@ def lsh_near_dup(
     documented recall trade. Default None = exact documented
     semantics (the oracle-checked path); at scale, raise `planes`
     AND set a cap."""
-    cos = int_dot(F.col("q.v_iv"), F.col("d.v_iv")).cast("double") / (
-        F.col("q.v_nrm") * F.col("d.v_nrm")
-    )
     # band ONCE and self-join the SAME frame under two aliases,
     # renaming after the join: both sides are one plan, so the bucket
     # exchange runs once and is read twice (ReusedExchange) — no job
@@ -1226,7 +1047,7 @@ def lsh_near_dup(
         .select(
             F.col("q.v_id").alias("q_id"),
             F.col("d.v_id").alias("d_id"),
-            cos.alias("cosine"),
+            _cosine("q.v", "d.v").alias("cosine"),
         )
         .filter(F.col("cosine") >= threshold)
         .dropDuplicates(["q_id", "d_id"])
@@ -1326,66 +1147,31 @@ def jl_topk(
     )
     queries = queries.filter(ok(vec_col))
     data = data.filter(ok(vec_col))
-    qp = (
-        random_project(queries, vec_col, out_dim, dims, "__qjl")
-        .select(
-            F.col(id_col).alias("q_id"),
-            F.col("__qjl").alias("q_jl"),
-        )
-        .withColumn(
-            "q_jn",
-            F.sqrt(int_dot(F.col("q_jl"), F.col("q_jl")).cast("double")),
-        )
+    jl = F.col("__jl")
+    qp = _vectors(
+        random_project(queries, vec_col, out_dim, dims, "__jl"), "q", jl,
+        F.col(id_col).alias("q_id"),
     )
-    dp = (
-        random_project(data, vec_col, out_dim, dims, "__djl")
-        .select(
-            F.col(id_col).alias("d_id"),
-            F.col("__djl").alias("d_jl"),
-        )
-        .withColumn(
-            "d_jn",
-            F.sqrt(int_dot(F.col("d_jl"), F.col("d_jl")).cast("double")),
-        )
-    )
-    pcos = int_dot(F.col("q_jl"), F.col("d_jl")).cast("double") / (
-        F.col("q_jn") * F.col("d_jn")
+    dp = _vectors(
+        random_project(data, vec_col, out_dim, dims, "__jl"), "d", jl,
+        F.col(id_col).alias("d_id"),
     )
     w = Window.partitionBy("q_id").orderBy(
         F.col("__pcos").desc(), F.col("d_id").asc()
     )
     cand = (
         dp.crossJoin(F.broadcast(qp))
-        .select("q_id", "d_id", pcos.alias("__pcos"))
+        .select("q_id", "d_id", _cosine("q", "d").alias("__pcos"))
         .withColumn("__prn", F.row_number().over(w))
         .filter(F.col("__prn") <= shortlist)
         .select("q_id", "d_id")
     )
-    qv = queries.select(
-        F.col(id_col).alias("q_id"), quantized(F.col(vec_col)).alias("q_iv")
-    ).withColumn(
-        "q_n", F.sqrt(int_dot(F.col("q_iv"), F.col("q_iv")).cast("double"))
-    )
-    dv = data.select(
-        F.col(id_col).alias("d_id"), quantized(F.col(vec_col)).alias("d_iv")
-    ).withColumn(
-        "d_n", F.sqrt(int_dot(F.col("d_iv"), F.col("d_iv")).cast("double"))
-    )
+    iv = quantized(F.col(vec_col))
+    qv = _vectors(queries, "q", iv, F.col(id_col).alias("q_id"))
+    dv = _vectors(data, "d", iv, F.col(id_col).alias("d_id"))
     exact = (
         cand.join(dv, "d_id")
         .join(F.broadcast(qv), "q_id")
-        .select(
-            "q_id",
-            "d_id",
-            (
-                int_dot(F.col("q_iv"), F.col("d_iv")).cast("double")
-                / (F.col("q_n") * F.col("d_n"))
-            ).alias("cosine"),
-        )
+        .select("q_id", "d_id", _cosine("q", "d").alias("cosine"))
     )
-    w2 = Window.partitionBy("q_id").orderBy(
-        F.col("cosine").desc(), F.col("d_id").asc()
-    )
-    return exact.withColumn("rank", F.row_number().over(w2)).filter(
-        F.col("rank") <= k
-    )
+    return topk_per_query(exact, k)

@@ -615,20 +615,22 @@ def quantile_within_contract(
     honors its documented RANK guarantee: the returned value's rank is
     within n/accuracy of q·n. The KLL/GK summary itself is engine-
     internal, but rank error is exactly checkable from the data —
-    the oracle asserts `within = TRUE`."""
-    est = df.agg(
-        F.percentile_approx(col, q, accuracy).alias("est")
-    ).collect()[0].est
+    the oracle asserts `within = TRUE`.
+
+    The estimate is a one-row aggregate broadcast into the rank sums,
+    so the call only builds a plan: no job runs until the caller
+    collects."""
+    est = df.agg(F.percentile_approx(col, q, accuracy).alias("__est"))
     n = F.count(F.lit(1)).cast("double")
     # with duplicated values the estimate's rank is an INTERVAL
     # [count(<est)+1, count(<=est)]; the guarantee holds iff that
     # interval overlaps [q·n − n/acc, q·n + n/acc]
-    rank_hi = F.sum((F.col(col) <= F.lit(est)).cast("long")).cast("double")
+    rank_hi = F.sum((F.col(col) <= F.col("__est")).cast("long")).cast("double")
     rank_lo = (
-        F.sum((F.col(col) < F.lit(est)).cast("long")).cast("double") + 1
+        F.sum((F.col(col) < F.col("__est")).cast("long")).cast("double") + 1
     )
     tol = n / accuracy + 1
-    return df.agg(
+    return df.crossJoin(F.broadcast(est)).agg(
         F.count(F.lit(1)).alias("exact_n"),
         (
             (rank_lo <= n * q + tol) & (rank_hi >= n * q - tol)

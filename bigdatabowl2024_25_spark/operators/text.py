@@ -621,9 +621,10 @@ def bm25_topk(
     b: float = 0.75,
 ):
     """Multi-query BM25 retrieval: top-k documents per query — the
-    lexical-search sibling of `similarity.brute_force_topk` (and the
-    retrieval half of a RAG data pipeline; `bm25` above scores one
-    fixed term set as a column, this ranks a query WORKLOAD).
+    lexical-search sibling of `similarity.pairwise_cosine` +
+    `topk_per_query` (and the retrieval half of a RAG data pipeline;
+    `bm25` above scores one fixed term set as a column, this ranks a
+    query WORKLOAD).
 
     Spark-first inverted shape (one corpus scan, no per-query rescans):
     1. each document explodes to (doc, term, tf) rows for the UNION of

@@ -21,8 +21,8 @@ from pyspark.sql import functions as F
 from ..boundary import cut
 from ..operators.similarity import (
     decontaminate_embeddings,
-    int_dot,
     ivf_assign_exact,
+    ivf_topk,
     lsh_near_dup,
     lsh_topk,
     nearest_lists_exact,
@@ -815,9 +815,8 @@ def q83_ann_ivf_topk(spark, sf_dir):
     - 'ivf': IVF probe — each query scans only its 4 nearest of 16
       inverted lists (~25% of the corpus instead of 100%), exact
       scoring within the probed lists (`ivf_assign_exact` +
-      `nearest_lists_exact`). The KMeans quantizer (`ivf_index`)
-      shares the identical probe path and keeps its recall/
-      determinism pytest (tests/test_similarity.py).
+      `nearest_lists_exact` + `ivf_topk`); recall and determinism are
+      pinned in tests/test_similarity.py.
     - 'pq' (round 6): IVF-PQ with ADC scoring (`pq_adc_topk`) — the
       corpus is 8 codeword indices per vector (codebooks = the same
       centroid table sliced into 8×8-dim subspaces) and candidates are
@@ -841,34 +840,7 @@ def q83_ann_ivf_topk(spark, sf_dir):
     # natural one-row-per-vector boundary serves them all.
     assigned = cut(ivf_assign_exact(e, cents, "vec_id", "embedding"))
     probes = nearest_lists_exact(q, cents, "vec_id", "embedding", nprobe=4)
-    # quantize + norm ONCE per side before the probe join — the old
-    # per-pair `quantized(...)` transforms re-ran interpreted on every
-    # candidate row (~8 corpus-sized transform evals per pair across
-    # the three dots). Same ints, same sqrt-product order ⇒ identical
-    # cosines.
-    qp = probes.select(
-        F.col("vec_id").alias("q_id"),
-        quantized(F.col("embedding")).alias("q_iv"),
-        "__list",
-    ).withColumn(
-        "q_nrm",
-        F.sqrt(int_dot(F.col("q_iv"), F.col("q_iv")).cast("double")),
-    )
-    dv = assigned.select(
-        F.col("vec_id").alias("d_id"),
-        quantized(F.col("embedding")).alias("d_iv"),
-        "__list",
-    ).withColumn(
-        "d_nrm",
-        F.sqrt(int_dot(F.col("d_iv"), F.col("d_iv")).cast("double")),
-    )
-    cos = int_dot(F.col("q_iv"), F.col("d_iv")).cast("double") / (
-        F.col("q_nrm") * F.col("d_nrm")
-    )
-    scored = dv.join(F.broadcast(qp), ["__list"]).select(
-        "q_id", "d_id", cos.alias("cosine")
-    )
-    ivf = topk_per_query(scored, k=5)
+    ivf = ivf_topk(probes, assigned, "vec_id", "embedding", k=5)
     ivf = ivf.filter(F.col("q_id") != F.col("d_id")).select(
         F.lit("ivf").alias("kind"), "q_id", "d_id", "cosine", "rank"
     )

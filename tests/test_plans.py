@@ -7,6 +7,7 @@ fails HERE even though the oracle test passes."""
 from __future__ import annotations
 
 import re
+from collections import Counter
 
 from bigdatabowl2024_25_spark import suite
 
@@ -107,25 +108,45 @@ def test_q32_pivot_no_distinct_job(spark):
     assert shuffles(plan) == 2
 
 
+#: every physical node that runs Python: the row-at-a-time and Arrow
+#: UDF evaluators (and their UDTF forms), the grouped/windowed Arrow
+#: aggregates, and every MapIn*, FlatMapGroupsIn*, FlatMapCoGroupsIn*
+#: and *InPandas form
+_PYTHON_NODE = re.compile(
+    r"\b(?:BatchEvalPython\w*|ArrowEvalPython\w*|ArrowAggregatePython"
+    r"|ArrowWindowPython|\w*MapIn\w+|FlatMapGroupsIn\w+"
+    r"|FlatMapCoGroupsIn\w+|\w+InPandas\w*)\b"
+)
+
+#: the sanctioned Python stages, by query. q64 has four:
+#: - two ArrowEvalPython production-encode stages (round 13: the
+#:   'bpe_prod' / 'bbpe_prod' branches force the >merge_threshold
+#:   reroute, whose rank-indexed replay runs as ONE Arrow stage over
+#:   the DISTINCT word/pre-token table each — vocab-sized at any corpus
+#:   scale; the corpus-scale side stays JVM, pinned in
+#:   test_q64_forced_production_encode_plan);
+#: - two FlatMapGroupsInPandas next-fit packing walks
+#:   (`text.pack_documents`, sequential by definition and run once per
+#:   shard): the 'pack' branch and the 'seq' branch's
+#:   `corpus.to_sequences`.
+_SANCTIONED_PYTHON = {
+    "q64_binary_plumbing": {"ArrowEvalPython": 2, "FlatMapGroupsInPandas": 2},
+}
+
+
 def test_no_python_udfs_in_relational_suite(spark):
     """Everything outside the numeric kernels stays JVM-side: no
-    BatchEvalPython anywhere, and no ArrowEvalPython except q64's two
-    SANCTIONED production-encode stages (round 13: the 'bpe_prod' /
-    'bbpe_prod' branches force the >merge_threshold reroute, whose
-    rank-indexed replay runs as ONE Arrow stage over the DISTINCT
-    word/pre-token table each — vocab-sized at any corpus scale; the
-    corpus-scale side stays JVM, pinned in
-    test_q64_forced_production_encode_plan)."""
+    Python plan node of any form in any query, except the stages
+    `_SANCTIONED_PYTHON` lists, each at exactly its listed count."""
     for name, fn in suite.QUERIES.items():
         if name.startswith("q9"):  # kernel queries are mapInPandas
             continue
         plan = plan_of(fn(spark, SF), mode="simple")
-        assert "BatchEvalPython" not in plan, name
-        n_arrow = len(re.findall(r"ArrowEvalPython", plan))
-        if name == "q64_binary_plumbing":
-            assert n_arrow == 2, name  # exactly the two sanctioned
-        else:
-            assert n_arrow == 0, name
+        found = Counter(_PYTHON_NODE.findall(plan))
+        assert found == Counter(_SANCTIONED_PYTHON.get(name, {})), (
+            name,
+            dict(found),
+        )
 
 
 def test_q33_salted_agg_two_phase(spark):

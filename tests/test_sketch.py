@@ -206,6 +206,35 @@ def test_kmv_overlap_builds_a_plan_only(spark):
     assert "ReusedExchange" in plan
 
 
+def test_quantile_within_contract_builds_a_plan_only(spark, monkeypatch):
+    """Calling `quantile_within_contract` starts no Spark job: the
+    percentile estimate is a one-row aggregate inside the plan, not a
+    driver-side collect. Nor does calling q38 with its two declared
+    eager pins (`cut`) passed through and its input already loaded
+    (parquet schema inference is a job of its own): no hidden job is
+    left in it. The contract row itself still holds."""
+    from bigdatabowl2024_25_spark import suite
+    from bigdatabowl2024_25_spark.operators.sketch import (
+        quantile_within_contract,
+    )
+    from bigdatabowl2024_25_spark.suite import sketch_q
+
+    suite.load_all()
+    sc = spark.sparkContext
+    e = load_table(spark, SF, "events")
+    monkeypatch.setattr(sketch_q, "load_table", lambda *_: e)
+    monkeypatch.setattr(sketch_q, "cut", lambda df: df)
+    with job_group(sc, "test_quantile_call") as jobs:
+        out = quantile_within_contract(e, "value", q=0.5, accuracy=1000)
+    assert jobs() == []
+    with job_group(sc, "test_q38_call") as jobs:
+        q38 = suite.QUERIES["q38_cms_point_counts"](spark, SF)
+    assert jobs() == []
+    row = out.collect()[0]
+    assert row.exact_n == e.count() and row.within is True
+    assert q38.filter(F.col("kind") == "quantile").first().within is True
+
+
 def test_hll_grouped_ledger(spark):
     """Grouped registers (`by=`) — the per-domain cardinality ledger:
     each group's registers/estimate must equal an independent sketch
