@@ -57,6 +57,48 @@ def _merge_pair(
     )
 
 
+def _merge_symbols(
+    syms: list[str], a: str, b: str, merged: str
+) -> list[str]:
+    """The Python twin of `_merge_pair`: one greedy left-to-right pass
+    replacing adjacent (a, b) with `merged`; a just-merged symbol is
+    never re-consumed in the same pass."""
+    out: list[str] = []
+    for s in syms:
+        if out and out[-1] == a and s == b:
+            out[-1] = merged
+        else:
+            out.append(s)
+    return out
+
+
+#: distinct-word count at or under which a trainer collects the vocab
+#: once and merges driver-side (`_small_vocab`)
+SMALL_VOCAB_WORDS = 65_536
+
+
+def _small_vocab(vocab: DataFrame) -> list[tuple[list[str], int]] | None:
+    """The trainers' size gate over a (syms, n) vocab table: its rows,
+    collected, when it has at most `SMALL_VOCAB_WORDS` words and at
+    most 64·`SMALL_VOCAB_WORDS` symbols in all; None otherwise. A
+    65k-word vocab is a few MB, while n_merges sequential Spark jobs
+    on it are pure scheduling overhead. The symbol total matters as
+    much as the row count: 65k distinct "words" that are huge
+    unbroken tokens (base64 blobs, minified JS) would pass a row-count
+    gate and still OOM the driver collect. The gate is one 1-row agg
+    on the already-aggregated vocab table."""
+    stats = vocab.agg(
+        F.count("*").alias("n"),
+        F.coalesce(F.sum(F.size("syms")), F.lit(0)).alias("total_syms"),
+    ).collect()[0]
+    if (
+        stats.n > SMALL_VOCAB_WORDS
+        or stats.total_syms > 64 * SMALL_VOCAB_WORDS
+    ):
+        return None
+    return [(list(r.syms), r.n) for r in vocab.collect()]
+
+
 def word_frequencies(df: DataFrame, text_col: str) -> DataFrame:
     """(word, n) over the corpus — THE corpus-scale step: one explode
     + one map-side-combined groupBy; everything downstream is
@@ -94,17 +136,7 @@ def _bpe_train_local(
             break
         a, b = best[0]
         merges.append((a, b))
-        merged = a + b
-        nxt = []
-        for syms, n in vocab:
-            out: list[str] = []
-            for s in syms:
-                if out and out[-1] == a and s == b:
-                    out[-1] = merged
-                else:
-                    out.append(s)
-            nxt.append((out, n))
-        vocab = nxt
+        vocab = [(_merge_symbols(syms, a, b, a + b), n) for syms, n in vocab]
     return merges
 
 
@@ -197,7 +229,6 @@ def bpe_train(
     text_col: str,
     n_merges: int,
     end_of_word: str = "</w>",
-    small_vocab_threshold: int = 65_536,
     stats: dict | None = None,
 ) -> list[tuple[str, str]]:
     """Learn `n_merges` BPE merges from the corpus; returns them in
@@ -206,15 +237,13 @@ def bpe_train(
 
     Size-adaptive, like `components.connected_components`: the corpus
     always collapses to the (distinct word, count) table first — THE
-    corpus-scale step — and if that vocab has at or under
-    `small_vocab_threshold` rows it is collected ONCE and the merge
-    loop runs driver-side (`_bpe_train_local`, result-identical; a
-    65k-word vocab is a few MB, while n_merges sequential Spark jobs
-    on it are pure scheduling overhead). Above the threshold the
-    distributed loop runs: per-iteration pair counts shuffle only the
-    vocab-sized table, and since round 11 each driver round-trip
-    collects the top-K pair counts and accepts the maximal provably-
-    sequential BATCH of merges (`_safe_merge_batch` — disjoint,
+    corpus-scale step — and if that vocab passes `_small_vocab` (at
+    most `SMALL_VOCAB_WORDS` words) it is collected ONCE and the merge
+    loop runs driver-side (`_bpe_train_local`, result-identical).
+    Above it the distributed loop runs: per-iteration pair counts
+    shuffle only the vocab-sized table, and since round 11 each driver
+    round-trip collects the top-K pair counts and accepts the maximal
+    provably-sequential BATCH of merges (`_safe_merge_batch` — disjoint,
     contiguous, new-pair-safe), applying them as composed folds in
     one select: a 32k-merge web-scale vocabulary no longer schedules
     32k sequential Spark jobs (pass `stats` to read back
@@ -231,13 +260,12 @@ def bpe_train(
             F.array(F.lit(end_of_word)),
         ),
     ).select("syms", "n")
-    return _train_merges(vocab, n_merges, small_vocab_threshold, stats)
+    return _train_merges(vocab, n_merges, stats)
 
 
 def _train_merges(
     vocab: DataFrame,
     n_merges: int,
-    small_vocab_threshold: int,
     stats: dict | None,
 ) -> list[tuple[str, str]]:
     """The size-adaptive count-scored merge loop shared by `bpe_train`
@@ -246,24 +274,10 @@ def _train_merges(
     table; the symbol scheme is entirely the caller's. The vocab cuts
     live in one `BoundaryCaches` scope: none outlives the call."""
     with BoundaryCaches() as bc:
-        # one extra 1-row agg on the already-aggregated vocab table decides
-        # the path; its cost is the groupBy we pay either way. Gate on
-        # TOTAL SYMBOLS too, not just rows: 65k distinct "words" that are
-        # huge unbroken tokens (base64 blobs, minified JS) would pass a
-        # row-count gate and still OOM the driver collect
         vocab = bc.cut(vocab)
-        vstats = vocab.agg(
-            F.count("*").alias("n"),
-            F.coalesce(F.sum(F.size("syms")), F.lit(0)).alias("total_syms"),
-        ).collect()[0]
-        if (
-            vstats.n <= small_vocab_threshold
-            and vstats.total_syms <= 64 * small_vocab_threshold
-        ):
-            rows = vocab.collect()
-            return _bpe_train_local(
-                [(list(r.syms), r.n) for r in rows], n_merges
-            )
+        local = _small_vocab(vocab)
+        if local is not None:
+            return _bpe_train_local(local, n_merges)
         topk = 64
 
         # alias-safety inventory for the batching lemma (round-12 ADVICE):
@@ -328,36 +342,20 @@ def _train_merges(
         return merges
 
 
-#: marker/separator control chars for the string-rewriting encoder —
-#: chosen outside any printable symbol alphabet; a text containing
-#: them would corrupt the rewrite, hence the guard in bpe_encode
-_MARK_L, _MARK_R, _WORD_SEP = "\x01", "\x02", "\x03"
-
-#: merge-list size above which the encoders leave the codegen replace
-#: chain for the broadcast merge-rank path: each merge is one
-#: `replace()` call in the plan, so a production 32k-50k vocabulary
-#: would build a 32k-deep expression tree — past codegen's method
-#: limits and paying plan-analysis cost per query. 512 replaces is
-#: comfortably inside codegen (the chain was measured fastest for
-#: moderate lists) while anything trainable beyond that is
-#: production-scale and belongs on the distinct-word path.
-_MERGE_CHAIN_MAX = 512
-
-
 def _ranked_word_encoder(
     merges: list[tuple[str, str]], end_of_word: str | None = None
 ):
     """Pure-Python single-word BPE encoder, PROVABLY bit-identical to
-    the replace-chain replay (the parity test pins it): apply merges
-    in training order, each as one greedy left-to-right pass — but
+    literal in-order replay (the fuzz test pins it): apply merges in
+    training order, each as one greedy left-to-right pass — but
     instead of touching all N merges per word, keep a rank index and
     repeatedly jump to the SMALLEST rank ≥ the last applied rank whose
     pair is currently adjacent. Equivalence: between two applied ranks
-    the chain's intervening replaces are no-ops (their pairs are not
+    the replay's intervening merges are no-ops (their pairs are not
     present — a merge only creates adjacencies involving its own
     product, so a skipped rank can never become applicable before the
     next applied rank fires; a rank once passed is never revisited,
-    exactly the chain's single-pass-per-merge semantics, aliasing
+    exactly the replay's single-pass-per-merge semantics, aliasing
     included). Cost: O(applied · len) dict lookups per word instead
     of O(N · len) string scans — rank-list lookup via bisect so even
     duplicate pairs in a merge list replay exactly."""
@@ -383,14 +381,7 @@ def _ranked_word_encoder(
             if best < 0:
                 break
             a, b = merges[best]
-            merged = a + b
-            out: list[str] = []
-            for s in syms:
-                if out and out[-1] == a and s == b:
-                    out[-1] = merged
-                else:
-                    out.append(s)
-            syms = out
+            syms = _merge_symbols(syms, a, b, a + b)
             pos = best + 1
         return syms
 
@@ -429,105 +420,40 @@ def _ranked_pieces_udf(
 def bpe_encode(
     df: DataFrame,
     text_col: str,
+    id_col: str,
     merges: list[tuple[str, str]],
     out_col: str = "bpe_tokens",
     end_of_word: str = "</w>",
-    id_col: str | None = None,
-    merge_threshold: int = _MERGE_CHAIN_MAX,
 ) -> DataFrame:
     """Tokenize with a learned merge list (the standard greedy BPE
-    encoder), expressed as pure STRING REWRITING so the whole encode
-    stays in whole-stage codegen: wrap every char in \\x01..\\x02
-    markers, mark word boundaries, then apply each merge in training
-    order as `replace(s, '␂a␃␂b␃', '␂ab␃')` — left-to-right
-    non-overlapping replacement over marker-wrapped symbols is exactly
-    the single-pass fold semantics of `_merge_pair` (each symbol
-    carries its own markers, so a just-merged token cannot be
-    re-consumed in the same pass and symbol boundaries cannot be
-    confused; pinned against the pure-Python reference in
+    encoder: each merge in training order, one greedy left-to-right
+    pass per merge — pinned against the pure-Python reference in
     tests/test_bpe.py).
 
-    Round-8 rewrite: the previous per-word `F.aggregate` fold ran one
-    interpreted lambda step per (merge × symbol) — measured 19 s for
-    5 000 docs at sf0.1 vs ~2 s for this form; the winnowing lesson
-    (escape interpreted higher-order lambdas entirely) applies here
-    verbatim. Shuffle-free map over the corpus either way; cost is
-    O(len(merges) · text length) per row in JVM string intrinsics.
+    The encode runs in the distinct-word shape every per-word
+    tokenizer here uses (`encode_tokenizers`): the O(applied·len)
+    rank-indexed replay (`_ranked_word_encoder`) runs as ONE
+    Arrow-batched pandas UDF over the DISTINCT-word table only
+    (vocab-sized at any corpus scale, and the same plan for 10 merges
+    or a 32k-50k GPT-class vocabulary), and the corpus pays one
+    posexplode + a broadcast mapping join + a groupBy(id_col)
+    reassembly. Text contract: \\x01-\\x03 control chars are scrubbed
+    (crawled corpora carry stray control bytes; they are never
+    meaningful tokens) and runs of spaces collapse, so no '' word ever
+    emits a bare end-of-word — the `word_frequencies` filter. '' docs
+    → empty array, NULL docs or ids → NULL."""
 
-    PRODUCTION-VOCAB PATH (round 12, VERDICT item 2): past
-    `merge_threshold` merges (default 512) the replace chain would
-    build a plan with one `replace()` per merge — a 32k-50k GPT-class
-    vocabulary blows whole-stage codegen's method limits and pays
-    plan-analysis cost per query — so the encode reroutes through the
-    distinct-word shape every per-word tokenizer here uses
-    (`encode_tokenizers`): the O(applied·len) rank-indexed replay
-    (`_ranked_word_encoder`, bit-identical to the chain — pinned by
-    the parity test) runs as an Arrow-batched pandas UDF over the
-    DISTINCT-word table only (vocab-sized at any corpus scale), and
-    the corpus pays one posexplode + mapping join + groupBy(id)
-    reassembly. That path needs a row identity, so pass `id_col`
-    whenever merges can exceed the threshold (a loud ValueError
-    reminds you otherwise). Both paths share the contract: '' docs →
-    empty array, NULL docs → NULL."""
-    if len(merges) > merge_threshold:
-        if id_col is None:
-            raise ValueError(
-                f"bpe_encode: {len(merges)} merges exceed the codegen "
-                f"replace-chain limit ({merge_threshold}); the "
-                "distinct-word production path reassembles per "
-                "document and needs id_col — pass id_col=<doc id "
-                "column>"
-            )
-        def _scrubbed_words(c: Column) -> Column:
-            # mirror the chain's text contract exactly: \x01-\x03
-            # scrub + whitespace collapse (tokens + '' filter is the
-            # collapse), so both paths see identical word streams
-            clean = F.regexp_replace(c, "[\x01-\x03]", "")
-            return F.filter(tokens(clean), lambda x: x != F.lit(""))
+    def _scrubbed_words(c: Column) -> Column:
+        clean = F.regexp_replace(c, "[\x01-\x03]", "")
+        return F.filter(tokens(clean), lambda x: x != F.lit(""))
 
-        return encode_tokenizers(
-            df,
-            text_col,
-            id_col,
-            {out_col: _ranked_pieces_udf(merges, end_of_word)},
-            pretokenize=_scrubbed_words,
-        )
-    for ch in (_MARK_L, _MARK_R, _WORD_SEP):
-        if ch in end_of_word or any(ch in a + b for a, b in merges):
-            raise ValueError(
-                "bpe_encode: merge symbols / end_of_word must not "
-                "contain the \\x01-\\x03 marker control chars"
-            )
-    # scrub the marker control chars from the TEXT itself (crawled
-    # corpora do contain stray control bytes): an unwrapped \x01-\x03
-    # would corrupt the rewrite into phantom/merged tokens, and
-    # control chars are never meaningful corpus tokens — stripping is
-    # the standard scrub, applied identically in the oracle-facing
-    # contract (the q64 corpus is clean, so parity is unaffected)
-    clean = F.regexp_replace(F.col(text_col), "[\x01-\x03]", "")
-    # collapse irregular whitespace — mirrors word_frequencies'
-    # empty-word filter, so '' words never emit a bare end-of-word
-    t = F.trim(F.regexp_replace(clean, " +", " "))
-    eow = F.lit(f"{_MARK_L}{end_of_word}{_MARK_R}")
-    # (?s): dot must also wrap newlines — an unwrapped char would
-    # corrupt the marker structure (tokens() splits on spaces only,
-    # so newlines are ordinary word chars here)
-    s = F.regexp_replace(t, "(?s)(.)", f"{_MARK_L}$1{_MARK_R}")
-    s = F.concat(s, eow)
-    s = F.replace(s, F.lit(f"{_MARK_L} {_MARK_R}"), F.concat(eow, F.lit(_WORD_SEP)))
-    for a, b in merges:
-        s = F.replace(
-            s,
-            F.lit(f"{_MARK_L}{a}{_MARK_R}{_MARK_L}{b}{_MARK_R}"),
-            F.lit(f"{_MARK_L}{a}{b}{_MARK_R}"),
-        )
-    joined = F.replace(s, F.lit(_WORD_SEP), F.lit(""))
-    joined = F.replace(joined, F.lit(f"{_MARK_R}{_MARK_L}"), F.lit(" "))
-    joined = F.regexp_replace(joined, f"^{_MARK_L}|{_MARK_R}$", "")
-    arr = F.when(t == "", F.array().cast("array<string>")).otherwise(
-        F.split(joined, " ")
+    return encode_tokenizers(
+        df,
+        text_col,
+        id_col,
+        {out_col: _ranked_pieces_udf(merges, end_of_word)},
+        pretokenize=_scrubbed_words,
     )
-    return df.withColumn(out_col, arr)
 
 
 def bpe_decode(
@@ -616,16 +542,7 @@ def _wordpiece_train_local(
         a, b = best[0]
         merges.append((a, b))
         merged = a + _wp_strip(b, cont)
-        nxt = []
-        for syms, n in vocab:
-            out: list[str] = []
-            for s in syms:
-                if out and out[-1] == a and s == b:
-                    out[-1] = merged
-                else:
-                    out.append(s)
-            nxt.append((out, n))
-        vocab = nxt
+        vocab = [(_merge_symbols(syms, a, b, merged), n) for syms, n in vocab]
     return merges
 
 
@@ -634,7 +551,6 @@ def wordpiece_train(
     text_col: str,
     n_merges: int,
     cont: str = "##",
-    small_vocab_threshold: int = 65_536,
 ) -> list[str]:
     """Learn a WordPiece VOCABULARY from the corpus: the initial
     symbol alphabet (sorted — every plain first-char and ##-continued
@@ -643,8 +559,8 @@ def wordpiece_train(
     consumes.
 
     Size-adaptive exactly like `bpe_train` (same corpus→(word,count)
-    collapse, same 65k driver fast path, same distributed loop shape);
-    the only differences are the ## symbol scheme, the score
+    collapse, same `_small_vocab` driver fast path, same distributed
+    loop shape); the only differences are the ## symbol scheme, the score
     (count(pair)/(count(a)·count(b)) as one exact-int IEEE division —
     engine-identical, no float sums), and the extra per-iteration
     symbol-count aggregate the denominator needs (vocab-sized, never
@@ -660,10 +576,6 @@ def wordpiece_train(
     )
     with BoundaryCaches() as bc:
         vocab = bc.cut(vocab)
-        stats = vocab.agg(
-            F.count("*").alias("n"),
-            F.coalesce(F.sum(F.size("syms")), F.lit(0)).alias("total_syms"),
-        ).collect()[0]
         # the initial alphabet is bounded by the character set (plain +
         # ##-continued forms), so this collect is a few KB on any corpus
         alphabet = sorted(
@@ -672,14 +584,9 @@ def wordpiece_train(
                 F.explode("syms").alias("s")
             ).distinct().collect()
         )
-        if (
-            stats.n <= small_vocab_threshold
-            and stats.total_syms <= 64 * small_vocab_threshold
-        ):
-            rows = vocab.collect()
-            merges = _wordpiece_train_local(
-                [(list(r.syms), r.n) for r in rows], n_merges, cont
-            )
+        local = _small_vocab(vocab)
+        if local is not None:
+            merges = _wordpiece_train_local(local, n_merges, cont)
             return alphabet + [a + _wp_strip(b, cont) for a, b in merges]
         prev_ckpt = vocab
         merges = []
@@ -749,9 +656,10 @@ def _wp_word_pieces(
     position try vocab pieces longest-first (initial pieces at pos 0,
     ##-continuations after), emit the first hit, advance by its raw
     length; if no piece matches, the ENTIRE word becomes [unk] — the
-    BERT rule. The vocab rides as a plan map literal (same contract as
-    bpe_encode's literal replace chain: moderate learned vocabs; bake
-    a broadcast dict into a Pandas UDF for 30k+ production vocabs)."""
+    BERT rule. The vocab rides as a plan map literal, sized for
+    moderate learned vocabs; for 30k+ production vocabs bake a
+    broadcast dict into a Pandas UDF, as `_ranked_pieces_udf` does for
+    BPE."""
     pieces = [
         (p, _wp_strip(p, cont), p.startswith(cont))
         for p in vocab
@@ -846,25 +754,13 @@ def wordpiece_encode(
     the corpus itself pays one posexplode, a join against that
     word→pieces mapping (broadcast-able: the mapping is vocab-sized),
     and one groupBy(id) reassembly — never a per-corpus-row
-    interpreted fold (the bpe_encode round-8 lesson, solved here by
-    bounding WHERE the fold runs instead of rewriting it away)."""
-    return _encode_via_word_mapping(
+    interpreted fold."""
+    return encode_tokenizers(
         df,
         text_col,
         id_col,
-        lambda w: _wp_word_pieces(w, vocab, unk, cont),
-        out_col,
+        {out_col: lambda w: _wp_word_pieces(w, vocab, unk, cont)},
     )
-
-
-def _encode_via_word_mapping(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    pieces_of_word,
-    out_col: str,
-) -> DataFrame:
-    return encode_tokenizers(df, text_col, id_col, {out_col: pieces_of_word})
 
 
 def encode_tokenizers(
@@ -873,10 +769,9 @@ def encode_tokenizers(
     id_col: str,
     encoders: dict,
     pretokenize=None,
-    check_ids: bool = True,
 ) -> DataFrame:
     """Shared corpus-side plumbing for per-word tokenizers (WordPiece
-    greedy, Unigram Viterbi, production-vocab BPE, …): run each
+    greedy, Unigram Viterbi, char and byte BPE): run each
     encoder in `encoders` ({out_col: word Column → array<string>
     Column}) over the DISTINCT-WORD table only, then posexplode the
     corpus ONCE, join the combined word→pieces mapping back
@@ -888,23 +783,20 @@ def encode_tokenizers(
 
     `pretokenize` (round 12) swaps the word splitter: a text Column →
     array<string> Column (default: whitespace `tokens` with empty
-    words dropped). `byte_bpe_encode`'s production path passes the
-    GPT-2 regex pre-tokenizer so the same distinct-table plumbing
-    serves the byte-level family.
+    words dropped). `byte_bpe_encode` passes the GPT-2 regex
+    pre-tokenizer so the same distinct-table plumbing serves the
+    byte-level family.
 
     ID CONTRACT (round-12 edge audit): the reassembly groups by
     `id_col`, so it is only meaningful when ids uniquely identify
     rows. A NULL id has no identity to reassemble by → output NULL
-    (typed, auditable — NOT the chain path's encoding; pass real ids
-    for parity). DUPLICATE ids would silently attach the MERGED word
-    stream of every same-id row to each of them — so `check_ids`
-    (default on) plants an in-plan `assert_true` comparing each row's
-    reassembled piece-group count to its own word count; any id
-    collision fails the job loudly with remediation text. Cost: one
-    extra `pretokenize`+`size` per row, fused into the output
-    projection (no extra pass or shuffle) — disable only for corpora
-    whose id uniqueness is already enforced upstream (e.g. by
-    `assert_unique_key`)."""
+    (typed, auditable). DUPLICATE ids would silently attach the
+    MERGED word stream of every same-id row to each of them — so an
+    in-plan `assert_true` compares each row's reassembled piece-group
+    count to its own word count; any id collision fails the job
+    loudly with remediation text. Cost: one extra `pretokenize`+`size`
+    per row, fused into the output projection (no extra pass or
+    shuffle)."""
     if pretokenize is None:
 
         def pretokenize(c):
@@ -984,8 +876,7 @@ def encode_tokenizers(
             F.lit(
                 " — the per-doc reassembly pooled words from multiple"
                 " rows sharing this id; ids must uniquely identify"
-                " rows (dedupe upstream or pass check_ids=False only"
-                " when uniqueness is enforced elsewhere)"
+                " rows (dedupe upstream)"
             ),
         ),
     )
@@ -998,11 +889,10 @@ def encode_tokenizers(
                 F.col(f"__doc_{name}"), F.array().cast("array<string>")
             )
         )
-        if check_ids:
-            # evaluate the tripwire on the output's own projection so
-            # column pruning can never drop it: assert_true is NULL
-            # when `ok`, so the `when` arm is inert on healthy data
-            out = F.when(guard.isNull(), out)
+        # evaluate the tripwire on the output's own projection so column
+        # pruning can never drop it: assert_true is NULL when `ok`, so
+        # the `when` arm is inert on healthy data
+        out = F.when(guard.isNull(), out)
         joined = joined.withColumn(name, out).drop(f"__doc_{name}")
     return joined.drop("__ps_nwords")
 
@@ -1105,8 +995,9 @@ def _viterbi_pieces(
     max-score, then lexicographically-smallest, segmentation — the
     same total order the oracle's path-enumeration re-derivation uses.
     Unsegmentable words become [unk] whole — vocab literals ride as
-    per-length plan maps (the bpe_encode literal contract; bake a
-    broadcast dict into a Pandas UDF for 10^5+ production vocabs)."""
+    per-length plan maps, sized for learned vocabs; for 10^5+
+    production vocabs bake a broadcast dict into a Pandas UDF, as
+    `_ranked_pieces_udf` does for BPE)."""
     by_len: dict[int, list[tuple[str, int]]] = {}
     for p, li in vocab:
         if p:
@@ -1403,13 +1294,7 @@ def unigram_encode(
             return _viterbi_pieces(
                 F.concat(F.lit(word_marker), clean), vocab, unk
             )
-    return _encode_via_word_mapping(
-        df,
-        text_col,
-        id_col,
-        seg,
-        out_col,
-    )
+    return encode_tokenizers(df, text_col, id_col, {out_col: seg})
 
 
 # ---- Byte-level BPE (Radford et al. 2019, the GPT-2 tokenizer) -------
@@ -1439,9 +1324,9 @@ GPT2_PRETOKEN_PATTERN = (
 def bytes_to_unicode() -> dict[int, str]:
     """GPT-2's stable byte↔unicode bijection: printable latin bytes
     map to themselves; the rest (controls, space, DEL, a few latin-1
-    holes) map to 256+k — so every mapped string is printable,
-    space-free, and free of the \\x01-\\x03 rewrite markers by
-    construction (the reason byte_bpe_encode needs no text scrub)."""
+    holes) map to 256+k — so every mapped string is printable and
+    space-free, and any input byte, control chars included, has a
+    symbol (the reason byte_bpe_encode needs no text scrub)."""
     bs = (
         list(range(ord("!"), ord("~") + 1))
         + list(range(ord("¡"), ord("¬") + 1))
@@ -1485,12 +1370,11 @@ def byte_bpe_train(
     df: DataFrame,
     text_col: str,
     n_merges: int,
-    small_vocab_threshold: int = 65_536,
     stats: dict | None = None,
 ) -> list[tuple[str, str]]:
     """Learn `n_merges` byte-level merges: GPT-2 pre-tokenization →
     byte-unicode remap → the SAME size-adaptive count-scored merge
-    machinery as `bpe_train` (`_train_merges`: 65k local fast path /
+    machinery as `bpe_train` (`_train_merges`: `_small_vocab` fast path /
     batched distributed loop, identical tie-breaks), over single
     mapped-char symbols with NO end-of-word marker (byte-level tokens
     carry their leading space as 'Ġ' instead). The corpus-scale step
@@ -1509,78 +1393,35 @@ def byte_bpe_train(
     vocab = toks.select(
         F.split(_byte_map_expr(F.col("tok")), "").alias("syms"), "n"
     )
-    return _train_merges(vocab, n_merges, small_vocab_threshold, stats)
+    return _train_merges(vocab, n_merges, stats)
 
 
 def byte_bpe_encode(
     df: DataFrame,
     text_col: str,
+    id_col: str,
     merges: list[tuple[str, str]],
     out_col: str = "bbpe_tokens",
-    id_col: str | None = None,
-    merge_threshold: int = _MERGE_CHAIN_MAX,
 ) -> DataFrame:
-    """Tokenize with learned byte-level merges — the same codegen
-    string-rewriting engine as `bpe_encode` (marker-wrapped symbols,
-    one replace per merge), applied per PRE-TOKEN inside a transform
-    over the pre-token array. No text scrub is needed: the byte remap
-    puts every symbol in the printable/256+ alphabet, so the \\x01-\\x03
-    markers cannot collide by construction. Output tokens are in the
+    """Tokenize with learned byte-level merges — `bpe_encode`'s
+    distinct-table shape with the GPT-2 regex pre-tokenizer: the
+    rank-indexed replay runs in one Arrow pass over the DISTINCT
+    pre-token table (byte remap included, Python-side — the table is
+    vocab-sized, never corpus-sized; the same plan for 12 merges or
+    GPT-2's 50k), and the corpus pays one posexplode + mapping join +
+    per-doc reassembly. No text scrub is needed: the byte remap gives
+    every input byte a printable symbol. Output tokens are in the
     mapped alphabet ('Ġthe'); `decode_byte_tokens` restores the exact
     original text — byte-level BPE is lossless on ANY input, the
-    property the q64 'bbpe' oracle and the roundtrip fuzz pin.
-
-    PRODUCTION-VOCAB PATH (round 12, VERDICT item 2): GPT-2's real
-    vocabulary is 50k merges — a 50k-deep replace chain is past
-    codegen limits, so above `merge_threshold` the encode reroutes
-    through `encode_tokenizers` with the GPT-2 regex pre-tokenizer:
-    the rank-indexed replay (bit-identical to the chain) runs in one
-    Arrow pass over the DISTINCT pre-token table (byte remap included,
-    Python-side — the table is vocab-sized, never corpus-sized), and
-    the corpus pays one posexplode + mapping join + per-doc
-    reassembly. Needs `id_col` (loud ValueError otherwise); both
-    paths share the contract ('' → [], NULL → NULL)."""
-    if len(merges) > merge_threshold:
-        if id_col is None:
-            raise ValueError(
-                f"byte_bpe_encode: {len(merges)} merges exceed the "
-                f"codegen replace-chain limit ({merge_threshold}); "
-                "the distinct-pre-token production path reassembles "
-                "per document and needs id_col — pass id_col=<doc id "
-                "column>"
-            )
-        return encode_tokenizers(
-            df,
-            text_col,
-            id_col,
-            {out_col: _ranked_pieces_udf(merges, byte_map=True)},
-            pretokenize=byte_pretokenize,
-        )
-    for ch in (_MARK_L, _MARK_R, _WORD_SEP):
-        if any(ch in a + b for a, b in merges):
-            raise ValueError(
-                "byte_bpe_encode: merge symbols must not contain the "
-                "\\x01-\\x03 marker control chars"
-            )
-
-    def rewrite(tok: Column) -> Column:
-        s = F.regexp_replace(
-            _byte_map_expr(tok), "(?s)(.)", f"{_MARK_L}$1{_MARK_R}"
-        )
-        for a, b in merges:
-            s = F.replace(
-                s,
-                F.lit(f"{_MARK_L}{a}{_MARK_R}{_MARK_L}{b}{_MARK_R}"),
-                F.lit(f"{_MARK_L}{a}{b}{_MARK_R}"),
-            )
-        s = F.replace(s, F.lit(f"{_MARK_R}{_MARK_L}"), F.lit(_WORD_SEP))
-        s = F.regexp_replace(s, f"^{_MARK_L}|{_MARK_R}$", "")
-        return F.split(s, _WORD_SEP)
-
-    arr = F.flatten(
-        F.transform(byte_pretokenize(F.col(text_col)), rewrite)
+    property the q64 'bbpe' oracle and the roundtrip fuzz pin. ''
+    docs → [], NULL docs or ids → NULL."""
+    return encode_tokenizers(
+        df,
+        text_col,
+        id_col,
+        {out_col: _ranked_pieces_udf(merges, byte_map=True)},
+        pretokenize=byte_pretokenize,
     )
-    return df.withColumn(out_col, arr)
 
 
 #: sentinel for bytes the remap never emits — latin-1-unencodable, so

@@ -1254,10 +1254,11 @@ def q64_binary_plumbing(spark, sf_dir):
     - 'bpe_train': `bpe.bpe_train` re-learns the pinned merge sequence
       from the fixed literal corpus at query time; the VALUES oracle is
       the pinned list, so trainer drift flips the row red.
-    - 'bpe': `bpe.bpe_encode` tokenizes every document with the pinned
-      merges; the oracle re-derives greedy encoding as marker-wrapped
-      string rewriting. Row = (doc, n_tokens, joined byte length,
-      md5 of the space-joined token stream)."""
+    - 'bpe' / 'bpe_prod': `bpe.bpe_encode` tokenizes every document
+      with the pinned merges; the oracle re-derives greedy encoding as
+      marker-wrapped string rewriting. Row = (doc, n_tokens, joined
+      byte length, md5 of the space-joined token stream). Both kinds
+      come from ONE encode (as do 'bbpe' / 'bbpe_prod')."""
     frames = _q64_branch_frames(spark, sf_dir)
     out = None
     for f in frames.values():
@@ -1347,7 +1348,8 @@ def _q64_clean_dclean(spark, d):
 def _q64_branch_frames(spark, sf_dir) -> dict:
     """Every q64 branch as its own DataFrame, keyed by kind, in the
     exact union order of `q64_binary_plumbing` (dict order IS the
-    plan order). Each frame carries its `kind` literal, so
+    plan order; the 'bpe' and 'bbpe' frames also emit their '_prod'
+    kind). Each frame carries its `kind` literal, so
     `scripts/query_profile.py` times every leg in isolation by
     filtering on it — the r11 driver bench grew q64 +52% with no way
     to see which leg paid, and the query has become where cost hides
@@ -1357,13 +1359,11 @@ def _q64_branch_frames(spark, sf_dir) -> dict:
     from pyspark import inheritable_thread_target
 
     from ..operators.bpe import (
-        bpe_encode,
         bpe_train,
         byte_bpe_train,
         unigram_train,
         wordpiece_train,
     )
-    from ..operators.text import chunk_documents, pack_documents
 
     d = load_table(spark, sf_dir, "documents")
     # round 15 (guide §2.6): the four tokenizer trainers are driver
@@ -1401,6 +1401,17 @@ def _q64_branch_frames(spark, sf_dir) -> dict:
         )
     finally:
         pool.shutdown()
+
+
+def _with_both_kinds(spark, df, kind: str):
+    """`df` with each row emitted once under `kind` and once under
+    `kind`_prod: a cross join with a 2-row inline table, so a filter on
+    `kind` folds that table — and with it all of `df` — away at plan
+    time (a generator column would be evaluated before the filter)."""
+    kinds = spark.sql(
+        f"SELECT * FROM VALUES ('{kind}'), ('{kind}_prod') AS t(kind)"
+    )
+    return df.crossJoin(kinds)
 
 
 def _q64_branch_frames_rest(
@@ -1544,58 +1555,24 @@ def _q64_branch_frames_rest(
     bb_fix = _lit_df(
         spark, _BBPE_FIXTURE, "doc_id long, text string"
     )
-    bbpe = (
-        byte_bpe_encode(bb_fix, "text", bb_learned)
+    # the oracle keeps the kinds 'bbpe'/'bbpe_prod' (and 'bpe'/
+    # 'bpe_prod'); each pair is ONE encode whose rows are emitted under
+    # both kinds, so the Python stage appears once per encode in the
+    # plan
+    bbpe = _with_both_kinds(
+        spark,
+        byte_bpe_encode(bb_fix, "text", "doc_id", bb_learned)
         .select(
             "doc_id",
             F.posexplode("bbpe_tokens").alias("pos", "tok"),
         )
         .select(
-            F.lit("bbpe").alias("kind"),
             "doc_id",
             F.col("pos").cast("bigint").alias("part_id"),
             F.length("tok").cast("bigint").alias("byte_len"),
             F.col("tok").alias("content_md5"),
-        )
-    )
-    # 'bpe_prod' / 'bbpe_prod' (round 13, VERDICT item 1): the
-    # production-vocab (>merge_threshold) encode REROUTE itself under
-    # the driver oracle — `merge_threshold=0` forces both encoders
-    # through the distinct-word/pre-token `encode_tokenizers` shape
-    # with the rank-indexed replay Arrow UDF (operators/bpe.py:472,
-    # 1447), the path a 32k/50k GPT-class vocabulary takes. The
-    # outputs are bit-identical to the codegen replace chain (parity
-    # theorem, tests/test_merge.py), so the oracles are the chain
-    # oracles with the kind relabeled; what this buys is the driver
-    # gate on the ROUTING + reassembly plumbing (posexplode → mapping
-    # join → groupBy(id) rebuild) that was pytest-only through r12.
-    bpe_prod_enc = bpe_encode(
-        d, "text", _BPE_MERGES, id_col="doc_id", merge_threshold=0
-    )
-    pj = F.array_join(F.col("bpe_tokens"), " ")
-    pjb = pj.cast("binary")
-    bpe_prod = bpe_prod_enc.select(
-        F.lit("bpe_prod").alias("kind"),
-        "doc_id",
-        F.size(F.col("bpe_tokens")).cast("bigint").alias("part_id"),
-        F.length(pjb).cast("bigint").alias("byte_len"),
-        F.md5(pjb).alias("content_md5"),
-    )
-    bbpe_prod = (
-        byte_bpe_encode(
-            bb_fix, "text", bb_learned, id_col="doc_id", merge_threshold=0
-        )
-        .select(
-            "doc_id",
-            F.posexplode("bbpe_tokens").alias("pos", "tok"),
-        )
-        .select(
-            F.lit("bbpe_prod").alias("kind"),
-            "doc_id",
-            F.col("pos").cast("bigint").alias("part_id"),
-            F.length("tok").cast("bigint").alias("byte_len"),
-            F.col("tok").alias("content_md5"),
-        )
+        ),
+        "bbpe",
     )
     enc2 = encode_tokenizers(
         d,
@@ -1644,15 +1621,18 @@ def _q64_branch_frames_rest(
         F.length(F.col("text")).cast("bigint").alias("byte_len"),
         F.col("source").alias("content_md5"),
     )
-    enc = bpe_encode(d, "text", _BPE_MERGES)
+    enc = bpe_encode(d, "text", "doc_id", _BPE_MERGES)
     joined = F.array_join(F.col("bpe_tokens"), " ")
     jb = joined.cast("binary")
-    bpe = enc.select(
-        F.lit("bpe").alias("kind"),
-        "doc_id",
-        F.size(F.col("bpe_tokens")).cast("bigint").alias("part_id"),
-        F.length(jb).cast("bigint").alias("byte_len"),
-        F.md5(jb).alias("content_md5"),
+    bpe = _with_both_kinds(
+        spark,
+        enc.select(
+            "doc_id",
+            F.size(F.col("bpe_tokens")).cast("bigint").alias("part_id"),
+            F.length(jb).cast("bigint").alias("byte_len"),
+            F.md5(jb).alias("content_md5"),
+        ),
+        "bpe",
     )
     # 'para' (round 8, late): corpus-level paragraph dedup
     # (`dedup.paragraph_dedup`) over manufactured 4-paragraph pages —
@@ -1793,8 +1773,6 @@ def _q64_branch_frames_rest(
         "uni_train": uni_train_rows,
         "bbpe": bbpe,
         "bbpe_train": bb_train_rows,
-        "bpe_prod": bpe_prod,
-        "bbpe_prod": bbpe_prod,
         "budget": budget,
         "para": para,
         "parad": parad,

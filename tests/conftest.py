@@ -36,6 +36,16 @@ def checkpoint_dir(spark, tmp_path):
     )
 
 
+@pytest.fixture
+def distributed_vocab(monkeypatch):
+    """Sends the tokenizer trainers down their distributed merge loops:
+    a test-sized vocab is otherwise collected and merged driver-side
+    (`bpe.SMALL_VOCAB_WORDS`)."""
+    from bigdatabowl2024_25_spark.operators import bpe
+
+    monkeypatch.setattr(bpe, "SMALL_VOCAB_WORDS", 0)
+
+
 @contextmanager
 def job_group(sc, name):
     """Runs the body under Spark job group `name` and yields a callable

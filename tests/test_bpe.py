@@ -4,9 +4,11 @@ encoder that reproduces the reference segmentation."""
 
 from __future__ import annotations
 
+import re
 from collections import Counter
 
 from bigdatabowl2024_25_spark.operators.bpe import (
+    _ranked_word_encoder,
     bpe_encode,
     bpe_train,
     word_frequencies,
@@ -50,21 +52,30 @@ def ref_bpe(texts: list[str], n_merges: int):
     return merges
 
 
-def ref_encode(text: str, merges) -> list[str]:
+def _replay(word, merges, eow=None):
+    """Literal in-order replay of one word: every merge, in order, as
+    one greedy left-to-right pass."""
+    syms = list(word) + ([] if eow is None else [eow])
+    for a, b in merges:
+        out = []
+        for s in syms:
+            if out and out[-1] == a and s == b:
+                out[-1] = a + b
+            else:
+                out.append(s)
+        syms = out
+    return syms
+
+
+def ref_encode(text: str | None, merges) -> list[str] | None:
+    """Literal in-order replay per word, after `bpe_encode`'s text
+    contract: \\x01-\\x03 scrubbed, empty words dropped."""
+    if text is None:
+        return None
     out: list[str] = []
-    for w in text.split(" "):
-        if w == "":
-            continue
-        syms = list(w) + [EOW]
-        for a, b in merges:
-            nxt: list[str] = []
-            for x in syms:
-                if nxt and nxt[-1] == a and x == b:
-                    nxt[-1] = a + b
-                else:
-                    nxt.append(x)
-            syms = nxt
-        out.extend(syms)
+    for w in re.sub("[\x01-\x03]", "", text).split(" "):
+        if w:
+            out.extend(_replay(w, merges, EOW))
     return out
 
 
@@ -84,17 +95,15 @@ def test_bpe_train_matches_reference(spark):
     # determinism under partitioning
     got2 = bpe_train(df.repartition(5), "text", n_merges=12)
     assert got2 == want
-    # the size-adaptive paths must be merge-for-merge identical:
-    # threshold 0 forces the distributed per-iteration loop that big
-    # vocabs take (the default collected the tiny vocab driver-side)
-    got3 = bpe_train(df, "text", n_merges=12, small_vocab_threshold=0)
-    assert got3 == want
+    # the distributed loop on this corpus: test_bpe_train_batched_round_trips
 
 
 def test_bpe_encode_matches_reference(spark):
-    df = spark.createDataFrame([(t,) for t in TEXTS], "text string")
+    df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(TEXTS)], "doc_id long, text string"
+    )
     merges = bpe_train(df, "text", n_merges=10)
-    rows = bpe_encode(df, "text", merges).collect()
+    rows = bpe_encode(df, "text", "doc_id", merges).collect()
     for r in rows:
         assert list(r.bpe_tokens) == ref_encode(r.text, merges)
 
@@ -106,14 +115,10 @@ def test_word_frequencies(spark):
 
 
 def test_bpe_encode_production_path_parity(spark):
-    """Round-12 VERDICT item 2: the distinct-word production path
-    (forced via merge_threshold=0) must be TOKEN-FOR-TOKEN identical
-    to the codegen replace chain on the same learned merges —
-    including the degenerate docs ('', NULL, whitespace-only,
-    control-char-bearing, duplicate words) — and must refuse to run
-    without id_col."""
-    import pytest
-
+    """The encode is TOKEN-FOR-TOKEN the literal in-order replay
+    (`ref_encode`) on learned merges — including the degenerate docs
+    ('', NULL, whitespace-only, control-char-bearing, duplicate and
+    unseen words)."""
     texts = TEXTS + [
         "",
         None,
@@ -125,30 +130,20 @@ def test_bpe_encode_production_path_parity(spark):
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
     merges = bpe_train(df, "text", n_merges=10)
-    chain = {
-        r.doc_id: r.bpe_tokens
-        for r in bpe_encode(df, "text", merges).collect()
+    got = {
+        r.doc_id: None if r.bpe_tokens is None else list(r.bpe_tokens)
+        for r in bpe_encode(df, "text", "doc_id", merges).collect()
     }
-    prod = {
-        r.doc_id: r.bpe_tokens
-        for r in bpe_encode(
-            df, "text", merges, id_col="doc_id", merge_threshold=0
-        ).collect()
-    }
-    for i in chain:
-        c = None if chain[i] is None else list(chain[i])
-        p = None if prod[i] is None else list(prod[i])
-        assert c == p, (i, texts[i], c, p)
-    with pytest.raises(ValueError, match="id_col"):
-        bpe_encode(df, "text", merges, merge_threshold=0)
+    for i, t in enumerate(texts):
+        assert got[i] == ref_encode(t, merges), (i, t, got[i])
 
 
 def test_bpe_encode_32k_merges_runs(spark):
     """The production claim itself: a ≥32k-merge list must compile
-    and run (the replace chain would be a 32k-deep expression tree —
-    exactly what the threshold avoids), and the junk tail — pairs
-    whose symbols never co-occur — must be a no-op, leaving tokens
-    equal to the chain on the real prefix alone."""
+    and run (the merge list rides the UDF closure, so the plan does
+    not grow with it), and the junk tail — pairs whose symbols never
+    co-occur — must be a no-op, leaving tokens equal to the reference
+    replay of the real prefix alone."""
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(TEXTS)], "doc_id long, text string"
     )
@@ -158,15 +153,9 @@ def test_bpe_encode_32k_merges_runs(spark):
     assert len(merges) >= 32_000
     got = {
         r.doc_id: list(r.bpe_tokens)
-        for r in bpe_encode(
-            df, "text", merges, id_col="doc_id"
-        ).collect()
+        for r in bpe_encode(df, "text", "doc_id", merges).collect()
     }
-    want = {
-        r.doc_id: list(r.bpe_tokens)
-        for r in bpe_encode(df, "text", real).collect()
-    }
-    assert got == want
+    assert got == {i: ref_encode(t, real) for i, t in enumerate(TEXTS)}
 
 
 def test_tokenizer_decode_roundtrips(spark):
@@ -197,7 +186,7 @@ def test_tokenizer_decode_roundtrips(spark):
     }
     # char BPE
     merges = bpe_train(df, "text", n_merges=10)
-    enc = bpe_encode(df, "text", merges)
+    enc = bpe_encode(df, "text", "doc_id", merges)
     got = {
         r.doc_id: r.rt
         for r in bpe_decode(enc, "bpe_tokens", out_col="rt").collect()
@@ -238,26 +227,10 @@ def test_tokenizer_decode_roundtrips(spark):
 
 def test_ranked_word_encoder_matches_chain_fuzz():
     """Pure-python fuzz of the rank-indexed replay against literal
-    in-order replay (the replace chain's exact semantics, including
+    in-order replay (the encode's exact semantics, including
     pathological duplicate/aliasing merge lists that no trainer would
     emit): 300 random (word, merge-list) pairs."""
     import random
-
-    from bigdatabowl2024_25_spark.operators.bpe import (
-        _ranked_word_encoder,
-    )
-
-    def replay(word, merges, eow):
-        syms = list(word) + [eow]
-        for a, b in merges:
-            out = []
-            for s in syms:
-                if out and out[-1] == a and s == b:
-                    out[-1] = a + b
-                else:
-                    out.append(s)
-            syms = out
-        return syms
 
     rng = random.Random(99)
     alpha = "abc"
@@ -271,37 +244,68 @@ def test_ranked_word_encoder_matches_chain_fuzz():
             for _ in range(rng.randint(0, 12))
         ]
         enc = _ranked_word_encoder(merges, "</w>")
-        assert enc(word) == replay(word, merges, "</w>"), (
+        assert enc(word) == _replay(word, merges, "</w>"), (
             trial,
             word,
             merges,
         )
 
 
-def test_bpe_encode_control_chars_scrubbed(spark):
-    """Marker control chars (\\x01-\\x03) in the TEXT are scrubbed
-    before the rewrite — never phantom ''/merged tokens — and a
-    marker-bearing end_of_word is rejected even with an empty merge
-    list (review finding: the guard used to live inside the merges
-    loop)."""
-    import pytest
+def test_self_overlapping_merges_pinned():
+    """Round 13 edge audit: merges whose PRODUCT contains the pair's
+    own halves (('a','aa') → 'aaa', ('aa','a'), ('a','ab')) — the
+    shapes where a stateful greedy pass could plausibly diverge from
+    literal replay. Pinned literal cases: _ranked_word_encoder ≡
+    literal in-order replay."""
+    cases = [
+        ("aaaa", [("a", "a"), ("a", "aa"), ("aa", "aa")]),
+        ("aaaaa", [("a", "a"), ("aa", "a"), ("aaa", "aa")]),
+        ("aabab", [("a", "b"), ("a", "ab"), ("aab", "ab")]),
+        ("abab", [("a", "b"), ("ab", "ab")]),
+        ("aaa", [("a", "a"), ("a", "a")]),  # duplicate rank replay
+        ("banana", [("a", "n"), ("an", "an"), ("b", "anan")]),
+    ]
+    for word, merges in cases:
+        enc = _ranked_word_encoder(merges, end_of_word=None)
+        assert enc(word) == _replay(word, merges), (word, merges)
 
+
+def test_self_overlapping_merges_spark_parity(spark):
+    """The same self-overlap shapes through the Spark encode: it
+    agrees symbol for symbol with _ranked_word_encoder and with
+    literal in-order replay."""
+    merges = [("a", "a"), ("a", "aa"), ("aa", "aa"), ("b", "aaa")]
+    texts = ["aaaa", "aaaaa", "baaab", "ab aab baa", "aaaaaaa"]
+    df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
+    )
+    got = {
+        r.doc_id: list(r.bpe_tokens)
+        for r in bpe_encode(df, "text", "doc_id", merges).collect()
+    }
+    enc = _ranked_word_encoder(merges, end_of_word=EOW)
+    for i, t in enumerate(texts):
+        words = [w for w in t.split(" ") if w]
+        assert got[i] == [p for w in words for p in enc(w)], (t, got[i])
+        want = [p for w in words for p in _replay(w, merges, EOW)]
+        assert got[i] == want, (t, got[i], want)
+
+
+def test_bpe_encode_control_chars_scrubbed(spark):
+    """Control chars \\x01-\\x03 in the TEXT are scrubbed before
+    the encode — never phantom '' or merged tokens."""
     df = spark.createDataFrame(
         [(0, "ab\x03cd ef"), (1, "\x01x\x02"), (2, "ok")],
         "doc_id long, text string",
     )
     got = {
         r.doc_id: list(r.bpe_tokens)
-        for r in bpe_encode(df, "text", []).collect()
+        for r in bpe_encode(df, "text", "doc_id", []).collect()
     }
     assert got[0] == ["a", "b", "c", "d", EOW, "e", "f", EOW]
     assert got[1] == ["x", EOW]
     assert got[2] == ["o", "k", EOW]
     assert all("" not in toks for toks in got.values())
-    with pytest.raises(ValueError, match="marker"):
-        bpe_encode(df, "text", [], end_of_word="</w>\x01")
-    with pytest.raises(ValueError, match="marker"):
-        bpe_encode(df, "text", [("a", "b\x02")])
 
 
 # ---- WordPiece ------------------------------------------------------
@@ -365,15 +369,37 @@ def test_wordpiece_train_matches_python_reference(spark):
     # the WordPiece signature: the rare word 'holds' is fully fused
     # within 10 merges while frequent 'the'/'data' are not
     assert "holds" in got and "the" not in got and "data" not in got
-    # the size-adaptive paths must be merge-for-merge identical:
-    # threshold 0 forces the distributed per-iteration loop. 'holds'
-    # fully fusing requires CHAINED merges ('ho'+'##l' etc.), the
-    # exact case where the distributed loop used to leave '##'
-    # embedded mid-symbol ('h##o') and diverge from the local path
-    got2 = wordpiece_train(
-        df, "text", n_merges=10, small_vocab_threshold=0
+
+
+def test_wordpiece_train_distributed_matches_local(spark, distributed_vocab):
+    """The size-adaptive paths are merge-for-merge identical: the
+    distributed per-iteration loop reproduces the driver-side loop on
+    the q64 literal corpus. 'holds' fully fusing requires CHAINED
+    merges ('ho'+'##l' etc.), the exact case where the distributed
+    loop used to leave '##' embedded mid-symbol ('h##o')."""
+    from bigdatabowl2024_25_spark.operators.bpe import (
+        _wordpiece_train_local,
+        _wp_strip,
+        wordpiece_train,
     )
-    assert got2 == ref
+
+    corpus = [
+        "the data table holds the data",
+        "spark scans the data table fast",
+        "the table scan reads data",
+        "fast data scan in the table",
+    ]
+    df = spark.createDataFrame([(t,) for t in corpus], "text string")
+    wc = Counter(w for t in corpus for w in t.split(" ") if w)
+    voc = [
+        ([w[0]] + ["##" + c for c in w[1:]], n)
+        for w, n in sorted(wc.items())
+    ]
+    merges = _wordpiece_train_local(voc, 10, "##")
+    alpha = sorted({s for syms, _ in voc for s in syms})
+    ref = alpha + [a + _wp_strip(b, "##") for a, b in merges]
+    assert wordpiece_train(df, "text", n_merges=10) == ref
+    assert "holds" in ref
 
 
 def test_wordpiece_encode_greedy_rule_and_edges(spark):
@@ -632,7 +658,7 @@ def test_unigram_encode_viterbi_edges_and_fuzz(spark):
         assert gf[i] == _py_viterbi(text, fv), (i, text, gf[i])
 
 
-def test_bpe_train_batched_round_trips(spark):
+def test_bpe_train_batched_round_trips(spark, distributed_vocab):
     """Round-11 merge batching: on a corpus whose frequent pairs are
     symbol-DISJOINT the distributed trainer learns many merges per
     driver round-trip (>=5x fewer collects), while staying merge-for-
@@ -660,25 +686,21 @@ def test_bpe_train_batched_round_trips(spark):
         for j in range(3):
             texts.append(" ".join([a + b + chars[5 * i + 2 + j]] * k))
     df = spark.createDataFrame([(t,) for t in texts], "text string")
-    want = bpe_train(df, "text", n_merges=10)  # local fast path
+    want = ref_bpe(texts, 10)
     stats = {}
-    got = bpe_train(
-        df, "text", n_merges=10, small_vocab_threshold=0, stats=stats
-    )
+    got = bpe_train(df, "text", n_merges=10, stats=stats)
     assert got == want and len(got) == 10
     assert stats["round_trips"] == 1  # 10x fewer collects than r10
 
     # interacting corpus: exactness beats batch size
     df2 = spark.createDataFrame([(t,) for t in TEXTS], "text string")
     stats2 = {}
-    got2 = bpe_train(
-        df2, "text", n_merges=12, small_vocab_threshold=0, stats=stats2
-    )
+    got2 = bpe_train(df2, "text", n_merges=12, stats=stats2)
     assert got2 == ref_bpe(TEXTS, 12)
     assert stats2["round_trips"] <= 12  # never worse than sequential
 
 
-def test_trainers_release_their_cuts(spark):
+def test_trainers_release_their_cuts(spark, distributed_vocab):
     """The tokenizer trainers return Python lists, so no vocab cut may
     outlive the call: after each trainer's distributed loop returns,
     the persisted-RDD count is back at its value on entry (`<=`: the
@@ -694,10 +716,8 @@ def test_trainers_release_their_cuts(spark):
 
     df = spark.createDataFrame([(t,) for t in TEXTS], "text string")
     for train in (
-        lambda: bpe_train(df, "text", n_merges=4, small_vocab_threshold=0),
-        lambda: wordpiece_train(
-            df, "text", n_merges=9, small_vocab_threshold=0
-        ),
+        lambda: bpe_train(df, "text", n_merges=4),
+        lambda: wordpiece_train(df, "text", n_merges=9),
         lambda: unigram_train(df, "text", target_vocab=20, word_marker="_"),
     ):
         before = n_persisted()
@@ -860,11 +880,10 @@ def test_safe_merge_batch_alias_guard():
 
 def test_encode_tokenizers_id_contract(spark):
     """Round-12 edge audit: the reassembly path's id contract —
+    rows with real ids encode exactly as the reference replay, NULL
+    ids yield NULL output (no identity to reassemble by), and
     duplicate ids trip the in-plan assert (the groupBy would pool
-    both rows' words and silently attach the merged stream to each),
-    NULL ids yield NULL output (no identity to reassemble by), and
-    check_ids=False restores the unguarded plan for callers that
-    enforce uniqueness upstream."""
+    both rows' words and silently attach the merged stream to each)."""
     import pytest
     from pyspark.errors.exceptions.captured import SparkRuntimeException
 
@@ -878,11 +897,11 @@ def test_encode_tokenizers_id_contract(spark):
     out = {
         r.doc_id: r.toks
         for r in bpe_encode(
-            df, "text", merges, out_col="toks",
-            id_col="doc_id", merge_threshold=0,
+            df, "text", "doc_id", merges, out_col="toks"
         ).collect()
     }
     assert out[None] is None
+    assert list(out[1]) == ref_encode("low low", merges)
     assert list(out[1]) == ["low", "</w>", "low", "</w>"]
     assert list(out[2]) == []
 
@@ -891,10 +910,7 @@ def test_encode_tokenizers_id_contract(spark):
         [(7, "aa bb"), (7, "cc"), (8, "dd")],
         "doc_id long, text string",
     )
-    bad = bpe_encode(
-        dup, "text", merges, out_col="toks",
-        id_col="doc_id", merge_threshold=0,
-    )
+    bad = bpe_encode(dup, "text", "doc_id", merges, out_col="toks")
     with pytest.raises(SparkRuntimeException, match="duplicate id"):
         bad.collect()
 
@@ -904,22 +920,8 @@ def test_encode_tokenizers_id_contract(spark):
     )
     with pytest.raises(SparkRuntimeException, match="duplicate id"):
         bpe_encode(
-            same, "text", merges, out_col="toks",
-            id_col="doc_id", merge_threshold=0,
+            same, "text", "doc_id", merges, out_col="toks"
         ).collect()
-
-    # check_ids=False: unguarded (documented caller responsibility)
-    from bigdatabowl2024_25_spark.operators.bpe import (
-        _ranked_pieces_udf,
-        encode_tokenizers,
-    )
-
-    unguarded = encode_tokenizers(
-        dup, "text", "doc_id",
-        {"toks": _ranked_pieces_udf(merges, "</w>")},
-        check_ids=False,
-    )
-    assert unguarded.count() == 3
 
 
 def test_unigram_word_marker_doc_roundtrip(spark):

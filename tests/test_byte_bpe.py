@@ -59,14 +59,36 @@ def _ref_merges(token_counts: dict[str, int], n_merges: int):
     return merges
 
 
+def _ref_encode(pretokens: list[str] | None, merges):
+    """Literal in-order replay over each byte-unicode-mapped
+    pre-token: every merge, in order, as one greedy left-to-right
+    pass; a pre-token's symbols are its mapped bytes."""
+    if pretokens is None:
+        return None
+    b2u = bytes_to_unicode()
+    out: list[str] = []
+    for tok in pretokens:
+        syms = [b2u[b] for b in tok.encode("utf-8")]
+        for a, b in merges:
+            nxt: list[str] = []
+            for s in syms:
+                if nxt and nxt[-1] == a and s == b:
+                    nxt[-1] = a + b
+                else:
+                    nxt.append(s)
+            syms = nxt
+        out.extend(syms)
+    return out
+
+
 def test_bytes_to_unicode_bijection():
     m = bytes_to_unicode()
     assert set(m) == set(range(256))
     vals = list(m.values())
     assert len(set(vals)) == 256          # bijective
     assert all(len(v) == 1 for v in vals)
-    # mapped alphabet is printable, space-free, and marker-free —
-    # the property that lets the rewrite encoder skip text scrubbing
+    # mapped alphabet is printable and space-free, control chars
+    # included — the property that lets the encoder skip text scrubbing
     assert " " not in vals
     assert not any(v in ("\x01", "\x02", "\x03") for v in vals)
     assert m[ord("A")] == "A" and m[ord(" ")] == "Ġ"
@@ -108,19 +130,33 @@ def test_byte_bpe_train_matches_reference(spark):
     assert got == want
     # space tokens learn as Ġ-merges — the byte-level signature
     assert any(a == "Ġ" for a, _ in got)
-    # the distributed batched loop is merge-for-merge identical
-    stats = {}
-    got2 = byte_bpe_train(
-        df, "text", 14, small_vocab_threshold=0, stats=stats
-    )
-    assert got2 == want and stats["round_trips"] >= 1
     # determinism under partitioning
     assert byte_bpe_train(df.repartition(5), "text", 14) == want
 
 
+def test_byte_bpe_train_distributed_matches_reference(
+    spark, distributed_vocab
+):
+    """The distributed batched loop is merge-for-merge identical to
+    the reference (and so to the driver-side loop)."""
+    df = spark.createDataFrame([(t,) for t in TEXTS], "text string")
+    counts = {
+        r.tok: r.n
+        for r in df.select(
+            F.explode(byte_pretokenize(F.col("text"))).alias("tok")
+        )
+        .groupBy("tok")
+        .agg(F.count("*").alias("n"))
+        .collect()
+    }
+    stats = {}
+    got = byte_bpe_train(df, "text", 14, stats=stats)
+    assert got == _ref_merges(counts, 14) and stats["round_trips"] >= 1
+
+
 def test_byte_bpe_encode_roundtrip_lossless(spark):
     """encode∘decode is the identity on arbitrary unicode — controls
-    (including the \\x01-\\x03 rewrite markers), emoji, CJK, RTL,
+    (\\x01-\\x03 included), emoji, CJK, RTL,
     irregular whitespace. THE byte-level property: nothing is ever
     [UNK] and nothing is ever altered."""
     rng = random.Random(7)
@@ -135,9 +171,9 @@ def test_byte_bpe_encode_roundtrip_lossless(spark):
         "",
         "   ",
         "it's",
-        # round-12 edge audit: a text that IS the rewrite markers —
-        # the mapped alphabet excludes \x01-\x03 by construction, so
-        # the encoder needs no scrub and the roundtrip is exact
+        # round-12 edge audit: control chars only — the byte remap
+        # gives every byte a symbol, so the encoder needs no scrub and
+        # the roundtrip is exact
         "\x01\x02\x03",
         "a\x01b \x02\x03 c",
     ]
@@ -149,14 +185,14 @@ def test_byte_bpe_encode_roundtrip_lossless(spark):
         "text",
         10,
     )
-    rows = byte_bpe_encode(df, "text", merges).collect()
+    rows = byte_bpe_encode(df, "text", "i", merges).collect()
     for r in rows:
         assert decode_byte_tokens(list(r.bbpe_tokens)) == texts[r.i]
     # deterministic across layouts
     again = {
         r.i: list(r.bbpe_tokens)
         for r in byte_bpe_encode(
-            df.repartition(7), "text", merges
+            df.repartition(7), "text", "i", merges
         ).collect()
     }
     assert again == {r.i: list(r.bbpe_tokens) for r in rows}
@@ -167,10 +203,10 @@ def test_byte_bpe_encode_applies_merges_in_order(spark):
     list must produce exactly the pieces the sequential fold gives
     ('the' fuses; a just-merged token is not re-consumed in the same
     pass)."""
-    df = spark.createDataFrame([("the theme",)], "text string")
+    df = spark.createDataFrame([(0, "the theme")], "i long, text string")
     merges = [("t", "h"), ("th", "e"), ("Ġ", "the")]
     toks = list(
-        byte_bpe_encode(df, "text", merges).first().bbpe_tokens
+        byte_bpe_encode(df, "text", "i", merges).first().bbpe_tokens
     )
     assert toks == ["the", "Ġthe", "m", "e"]
 
@@ -186,20 +222,19 @@ def test_byte_bpe_decode_dataframe_roundtrip(spark):
         [(i, t) for i, t in enumerate(texts)], "i long, text string"
     )
     merges = byte_bpe_train(df.filter(F.col("i") < 3), "text", 8)
-    enc = byte_bpe_encode(df, "text", merges, out_col="toks")
+    enc = byte_bpe_encode(df, "text", "i", merges, out_col="toks")
     back = byte_bpe_decode(enc, "toks", out_col="rt").collect()
     for r in back:
         assert r.rt == texts[r.i]
 
 
 def test_byte_bpe_encode_production_path_parity_and_32k(spark):
-    """Round-12 VERDICT item 2 (byte leg): the distinct-pre-token
-    production path must be token-for-token identical to the replace
-    chain — on the full roundtrip-grade fixture set (contractions,
-    controls, multi-byte UTF-8, '', NULL) — and a GPT-2-scale 50k
-    merge list must compile and run, junk tail a no-op."""
-    import pytest
-
+    """Round-12 VERDICT item 2 (byte leg): the encode is
+    token-for-token the literal in-order replay over the mapped
+    pre-tokens (`_ref_encode`) — on the full roundtrip-grade fixture
+    set (contractions, controls, multi-byte UTF-8, '', NULL) — and a
+    GPT-2-scale 50k merge list must compile and run, junk tail a
+    no-op."""
     from bigdatabowl2024_25_spark.operators.bpe import byte_bpe_decode
 
     texts = TEXTS + [
@@ -213,30 +248,27 @@ def test_byte_bpe_encode_production_path_parity_and_32k(spark):
         [(i, t) for i, t in enumerate(texts)], "i long, text string"
     )
     merges = byte_bpe_train(df.filter(F.col("i") < 3), "text", 10)
-    chain = {
-        r.i: None if r.bbpe_tokens is None else list(r.bbpe_tokens)
-        for r in byte_bpe_encode(df, "text", merges).collect()
-    }
-    prod = {
-        r.i: None if r.bbpe_tokens is None else list(r.bbpe_tokens)
-        for r in byte_bpe_encode(
-            df, "text", merges, id_col="i", merge_threshold=0
+    pre = {
+        r.i: None if r.p is None else list(r.p)
+        for r in df.select(
+            "i", byte_pretokenize(F.col("text")).alias("p")
         ).collect()
     }
-    assert chain == prod
-    with pytest.raises(ValueError, match="id_col"):
-        byte_bpe_encode(df, "text", merges, merge_threshold=0)
+    want = {i: _ref_encode(pre[i], merges) for i in pre}
+    got = {
+        r.i: None if r.bbpe_tokens is None else list(r.bbpe_tokens)
+        for r in byte_bpe_encode(df, "text", "i", merges).collect()
+    }
+    assert got == want
 
     # GPT-2 scale: 50k merges (real prefix + never-co-occurring junk)
     junk = [(f"ZZ{i}", f"QQ{i}") for i in range(50_000)]
-    big = byte_bpe_encode(
-        df, "text", merges + junk, id_col="i", out_col="toks"
-    )
+    big = byte_bpe_encode(df, "text", "i", merges + junk, out_col="toks")
     got = {
         r.i: None if r.toks is None else list(r.toks)
         for r in big.collect()
     }
-    assert got == chain
+    assert got == want
     # and the production tokens still roundtrip losslessly
     back = byte_bpe_decode(big, "toks", out_col="rt").collect()
     for r in back:

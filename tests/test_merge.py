@@ -310,72 +310,3 @@ def test_latest_changes_and_scd2_null_seq_raise(spark):
         latest_changes(df, ["k"], "seq").collect()
     with pytest.raises(Exception, match="NULL 'seq'"):
         scd2_build(df, ["k"], "seq", ["val"]).collect()
-
-
-def test_self_overlapping_merges_pinned():
-    """Round 13 edge audit: merges whose PRODUCT contains the pair's
-    own halves (('a','aa') → 'aaa', ('aa','a'), ('a','ab')) — the
-    shapes where a stateful greedy pass could plausibly diverge from
-    the chain's non-overlapping replace. Pinned literal cases, each
-    verified three ways: _ranked_word_encoder ≡ literal in-order
-    replay ≡ the Spark codegen chain (bpe_encode, default
-    threshold)."""
-    from bigdatabowl2024_25_spark.operators.bpe import (
-        _ranked_word_encoder,
-    )
-
-    def chain_replay(word, merges):
-        syms = list(word)
-        for a, b in merges:
-            out = []
-            for s in syms:
-                if out and out[-1] == a and s == b:
-                    out[-1] = a + b
-                else:
-                    out.append(s)
-            syms = out
-        return syms
-
-    cases = [
-        ("aaaa", [("a", "a"), ("a", "aa"), ("aa", "aa")]),
-        ("aaaaa", [("a", "a"), ("aa", "a"), ("aaa", "aa")]),
-        ("aabab", [("a", "b"), ("a", "ab"), ("aab", "ab")]),
-        ("abab", [("a", "b"), ("ab", "ab")]),
-        ("aaa", [("a", "a"), ("a", "a")]),  # duplicate rank replay
-        ("banana", [("a", "n"), ("an", "an"), ("b", "anan")]),
-    ]
-    for word, merges in cases:
-        enc = _ranked_word_encoder(merges, end_of_word=None)
-        assert enc(word) == chain_replay(word, merges), (word, merges)
-
-
-def test_self_overlapping_merges_spark_chain_parity(spark):
-    """The same pinned self-overlap shapes through the ACTUAL Spark
-    codegen replace chain AND the forced production path — all three
-    implementations agree symbol for symbol."""
-    from bigdatabowl2024_25_spark.operators.bpe import (
-        _ranked_word_encoder,
-        bpe_encode,
-    )
-
-    merges = [("a", "a"), ("a", "aa"), ("aa", "aa"), ("b", "aaa")]
-    texts = ["aaaa", "aaaaa", "baaab", "ab aab baa", "aaaaaaa"]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    chain = {
-        r.doc_id: list(r.bpe_tokens)
-        for r in bpe_encode(df, "text", merges, end_of_word="</w>").collect()
-    }
-    prod = {
-        r.doc_id: list(r.bpe_tokens)
-        for r in bpe_encode(
-            df, "text", merges, end_of_word="</w>",
-            id_col="doc_id", merge_threshold=0,
-        ).collect()
-    }
-    assert chain == prod
-    enc = _ranked_word_encoder(merges, end_of_word="</w>")
-    for i, t in enumerate(texts):
-        want = [p for w in t.split(" ") if w for p in enc(w)]
-        assert chain[i] == want, (t, chain[i], want)

@@ -50,24 +50,26 @@ def test_all_families_roundtrip(spark, tmp_path):
     # the loaded BPE merges drive an encode identical to the fresh ones
     fresh = {
         r.doc_id: list(r.bpe_tokens)
-        for r in bpe_encode(df, "text", models["bpe"]).collect()
+        for r in bpe_encode(df, "text", "doc_id", models["bpe"]).collect()
     }
     _, loaded = load_tokenizer(spark, str(tmp_path / "bpe"))
     again = {
         r.doc_id: list(r.bpe_tokens)
-        for r in bpe_encode(df, "text", loaded).collect()
+        for r in bpe_encode(df, "text", "doc_id", loaded).collect()
     }
     assert fresh == again
     # byte-BPE likewise (its mapped-alphabet strings must survive
     # parquet unicode round-tripping, 'Ġ' included)
     bfresh = {
         r.doc_id: list(r.bbpe_tokens)
-        for r in byte_bpe_encode(df, "text", models["bbpe"]).collect()
+        for r in byte_bpe_encode(
+            df, "text", "doc_id", models["bbpe"]
+        ).collect()
     }
     _, bloaded = load_tokenizer(spark, str(tmp_path / "bbpe"))
     bagain = {
         r.doc_id: list(r.bbpe_tokens)
-        for r in byte_bpe_encode(df, "text", bloaded).collect()
+        for r in byte_bpe_encode(df, "text", "doc_id", bloaded).collect()
     }
     assert bfresh == bagain
     # WordPiece / Unigram: encoding from the LOADED artifact must be
