@@ -34,6 +34,7 @@ x_1…s_11 wide layout, `radius_model.R:226-230`).
 
 from __future__ import annotations
 
+import functools
 import math
 from collections.abc import Iterator
 
@@ -45,6 +46,16 @@ FIELD_Y = 53.3
 N_ANGLES = 360
 #: radius cap when the player outruns the ball (bs <= s): field diagonal
 R_CAP = math.hypot(FIELD_X, FIELD_Y)
+
+
+@functools.lru_cache(maxsize=None)
+def _headings(n_angles: int) -> tuple[np.ndarray, np.ndarray]:
+    """(1, n_angles) cos and sin of the equally spaced headings θ, computed
+    once per `n_angles`; read-only, since every call shares them."""
+    theta = np.linspace(0.0, 2.0 * np.pi, n_angles, endpoint=False)[None, :]
+    ux, uy = np.cos(theta), np.sin(theta)
+    ux.flags.writeable = uy.flags.writeable = False
+    return ux, uy
 
 
 def partial_radius(
@@ -75,8 +86,7 @@ def partial_radius(
     wy = (np.asarray(py, dtype=np.float64) - np.asarray(by, dtype=np.float64))[
         :, None
     ]
-    theta = np.linspace(0.0, 2.0 * np.pi, n_angles, endpoint=False)[None, :]
-    ux, uy = np.cos(theta), np.sin(theta)
+    ux, uy = _headings(n_angles)
 
     a = bs * bs - s * s
     b = -2.0 * s * s * (ux * wx + uy * wy)
@@ -130,8 +140,7 @@ def partial_radius_optimizer(
     wy = (np.asarray(py, dtype=np.float64) - np.asarray(by, dtype=np.float64))[
         :, None
     ]
-    theta = np.linspace(0.0, 2.0 * np.pi, n_angles, endpoint=False)[None, :]
-    ux, uy = np.cos(theta), np.sin(theta)
+    ux, uy = _headings(n_angles)
 
     def g(r):
         return s * np.hypot(wx + r * ux, wy + r * uy) - bs * r
@@ -173,7 +182,27 @@ def overlap(
     seed: int = 0,
 ) -> float:
     """X2 for a single row. `density` = MC points per square yard
-    (reference: 100, `radius_model.R:127`)."""
+    (reference: 100, `radius_model.R:127`).
+
+    Bit-identical to the plain (m, k)-matrix formulation, which
+    `tests/test_kernels.py` keeps as its reference: every per-point
+    value is the same IEEE operations on the same operands in the same
+    order, so the score array, and with it `score.sum()`, cannot move.
+    Only the numpy work that carries those operations is smaller:
+    - the draws: `Generator.uniform(low, high)` computes
+      `low + (high - low)·u` per element, consuming the stream in C
+      order; `random((n, 2))` yields the same u in the same order, and
+      the same subtraction, multiply and add follow;
+    - the reach test compares against a squared-radius table, the same
+      squares as `radii[idx]**2`, computed once per angle;
+    - the defender count loops over the k ≤ 11 defenders, adding each
+      one's 0/1 reach test into a count vector: each test is the same
+      multiply-compare as its matrix cell, and an integer count does
+      not depend on the order it is summed in. No (m, k) temporaries
+      and no strided `.sum(axis=1)`;
+    - the direction bonus is evaluated only where it is read, and the
+      two `% N` / `% 2π` passes whose operands are already in range are
+      replaced by what they compute there (see the comments)."""
     radii = partial_radius(
         np.array([o_speed]),
         np.array([ox]),
@@ -192,8 +221,10 @@ def overlap(
     if n <= 0:
         return 0.0
 
-    rng = np.random.default_rng(seed)
-    pts = rng.uniform((x0, y0), (x1, y1), size=(n, 2))
+    # the uniform box draw, as `uniform((x0, y0), (x1, y1))` computes it
+    u = np.random.default_rng(seed).random((n, 2))
+    px = x0 + (x1 - x0) * u[:, 0]
+    py = y0 + (y1 - y0) * u[:, 1]
 
     # offensive reachability FIRST (O(n), no defender dimension): only
     # reachable points contribute to the score, so the O(n·k) defender
@@ -202,41 +233,51 @@ def overlap(
     # same order — but skips the ~40-60% of box points outside the
     # (angle-dependent) radius. The box∩circle waste is inherent to
     # the reference's sample-the-box design (`radius_model.R:114-131`).
-    dox, doy = pts[:, 0] - ox, pts[:, 1] - oy
-    ang = np.arctan2(doy, dox) % (2.0 * np.pi)
-    idx = np.floor(ang / (2.0 * np.pi / N_ANGLES)).astype(np.int64) % N_ANGLES
+    dox, doy = px - ox, py - oy
+    # `% 2π` on arctan2's range [−π, π]: fmod(a, 2π) is a itself and
+    # numpy's remainder adds 2π once when it is negative; this is that
+    # add without the fmod. (remainder maps −0.0 to +0.0, where keeps
+    # −0.0; the floor below and the heading difference read both alike.)
+    ang = np.arctan2(doy, dox)
+    ang = np.where(ang < 0.0, ang + 2.0 * np.pi, ang)
+    # ang/step floors to 0..N_ANGLES, and bin N_ANGLES (ang rounded up to
+    # 2π) is heading 0: the squared-radius table repeats bin 0 at its end
+    # instead of an integer `% N_ANGLES` pass over every point
+    idx = np.floor(ang / (2.0 * np.pi / N_ANGLES)).astype(np.int64)
+    r2 = radii**2
     # squared comparison: d ≤ r ⟺ d² ≤ r² for d,r ≥ 0 — no sqrt
-    o_reach = (dox * dox + doy * doy) <= radii[idx] ** 2
+    o_reach = (dox * dox + doy * doy) <= np.append(r2, r2[0])[idx]
 
-    rpts = pts[o_reach]
-    m = len(rpts)
+    # one index gather per column: cheaper than three boolean masks
+    sel = np.flatnonzero(o_reach)
+    rx, ry = px[sel], py[sel]
+    m = len(sel)
     if m == 0:
         return 0.0
-    dbx, dby = rpts[:, 0] - bx, rpts[:, 1] - by
+    dbx, dby = rx - bx, ry - by
     d_ball2 = dbx * dbx + dby * dby
 
-    if defenders.size:
-        dx = rpts[:, 0][:, None] - defenders[None, :, 0]
-        dy = rpts[:, 1][:, None] - defenders[None, :, 1]
-        # t_def ≤ t_ball ⟺ d_def²·bs² ≤ d_ball²·s_def² (all ≥ 0):
-        # the m×k matrix never takes a sqrt or a divide
-        sdef2 = np.maximum(defenders[None, :, 2], 1e-9) ** 2
-        n_reach = (
-            (dx * dx + dy * dy) * (ball_speed * ball_speed)
-            <= d_ball2[:, None] * sdef2
-        ).sum(axis=1)
-    else:
-        n_reach = np.zeros(m, dtype=np.int64)
+    # t_def ≤ t_ball ⟺ d_def²·bs² ≤ d_ball²·s_def² (all ≥ 0): no sqrt
+    # or divide. One pass per defender; its 0/1 tests (a bool array is
+    # bytes of 0 and 1) add into a counter of the smallest unsigned type
+    # that holds k, so no pass widens them first
+    k = len(defenders)
+    n_reach = np.zeros(m, dtype=np.min_scalar_type(k))
+    if k:
+        bs2 = ball_speed * ball_speed
+        sdef2 = np.maximum(defenders[:, 2], 1e-9) ** 2
+        for dfx, dfy, s2 in zip(defenders[:, 0], defenders[:, 1], sdef2):
+            dx, dy = rx - dfx, ry - dfy
+            n_reach += ((dx * dx + dy * dy) * bs2 <= d_ball2 * s2).view(np.uint8)
 
+    # score: 1 + 0.2·dir if no defender reaches, −0.2·count if more than
+    # one, else 0. The direction bonus is computed for the free points
+    # only, the one branch that reads it
+    score = np.where(n_reach > 1, -0.2 * n_reach, 0.0)
+    free = np.flatnonzero(n_reach == 0)
     dir_rad = math.radians(o_dir_deg)
-    dang = np.abs((ang[o_reach] - dir_rad + np.pi) % (2.0 * np.pi) - np.pi)
-    dir_bonus = dang <= (np.pi / 8.0)
-
-    score = np.where(
-        n_reach == 0,
-        1.0 + 0.2 * dir_bonus,
-        np.where(n_reach > 1, -0.2 * n_reach, 0.0),
-    )
+    dang = np.abs((ang[sel[free]] - dir_rad + np.pi) % (2.0 * np.pi) - np.pi)
+    score[free] = 1.0 + 0.2 * (dang <= (np.pi / 8.0))
     return float(score.sum())
 
 

@@ -34,7 +34,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..boundary import cache
 from .text import normalize_text, tokens
 
 #: beginning-of-sentence context token (cannot collide with normalized
@@ -81,12 +80,14 @@ def lm_train(
     denominators (and therefore probabilities) are unchanged, pruning
     only moves mass to the smoothed floor.
 
-    ONE corpus-wide pass: the exploded pair stream shuffles once into
-    the unpruned bigram counts; context counts and the vocab size are
-    re-aggregations of that table, never of the corpus. The unpruned
-    counts stay persisted — the table is vocab²-bounded (MBs after any
-    realistic cut, LRU-evictable), and the returned bigrams/contexts
-    read it instead of re-exploding the corpus.
+    Each table is one aggregate over the exploded pair stream, whose
+    map-side partial aggregation leaves only vocab-bounded rows to
+    shuffle: the bigram counts group by (prev, tok), the context counts
+    by prev (a context's count is the sum of its bigrams'), and the
+    vocab size re-aggregates the bigram counts. Nothing is persisted,
+    so the call leaves no storage behind that its caller could not
+    release; a caller that runs several actions over the tables and
+    wants them computed once caches them in its own scope.
 
     Round 8: the vocab size is LAZY (a single-row aggregate frame that
     `lm_perplexity` broadcasts), not a driver int — training no longer
@@ -95,13 +96,10 @@ def lm_train(
     runtime as the identical IEEE double multiply the driver-side
     Python performed, so scores are bit-unchanged (and the DuckDB
     oracle already computed it this way)."""
-    unpruned = cache(
-        _pairs(docs, text_col, id_col)
-        .groupBy("prev", "tok")
-        .agg(F.count("*").alias("cb"))
-    )
+    pairs = _pairs(docs, text_col, id_col)
+    unpruned = pairs.groupBy("prev", "tok").agg(F.count("*").alias("cb"))
     bigrams = unpruned.filter(F.col("cb") >= min_count)
-    contexts = unpruned.groupBy("prev").agg(F.sum("cb").alias("cu"))
+    contexts = pairs.groupBy("prev").agg(F.count("*").alias("cu"))
     vocab = unpruned.agg(
         (F.countDistinct("tok") + 1).alias("v")  # +1: unseen mass
     )

@@ -11,6 +11,12 @@ Reference → Spark:
 - PRESS: z-normalized combination using global mean/stddev (`:157,
   220,344-345`, A9); qualified top-10 (`:230-247`, O2)
 - target-route entropy per QB (`:330-341`, A11).
+
+`play_reads` is `play_context` (everything but the read targets: read
+frames, throw frames, read index, targeted receiver, QB) followed by
+`with_targets` (the reads_data join and the three columns that need
+targets), so `pipelines.dag` can build the first half while the
+openness kernel is still producing what reads_data needs.
 """
 
 from __future__ import annotations
@@ -39,40 +45,31 @@ def throw_frames(tracking: DataFrame) -> DataFrame:
     )
 
 
-def play_reads(
+def play_context(
     tracking: DataFrame,
     plays: DataFrame,
     player_play: DataFrame,
     players: DataFrame,
     dropback_timing: DataFrame,
-    reads_data: DataFrame,
 ) -> DataFrame:
-    """Play-level read assignment: which read window the throw fell in,
-    who the expected receiver was, whether the QB hit them."""
+    """Everything `play_reads` needs but the read targets: per play, the
+    nearest-filled read frames, the throw offset, which read window the
+    throw fell in (`read_index`, `stuck_to_first`), the targeted
+    receiver and the QB. It does not read `reads_data`, so it can be
+    built while the openness kernel runs."""
     reads = dropback_timing
     for i, c in enumerate(READS):
         # F11: a null read column is filled from its nearest sibling
         reads = reads.withColumn(
             c, coalesce_nearest([F.col(r) for r in READS], i)
         )
-    base = (
-        throw_frames(tracking)
-        .join(F.broadcast(reads), PLAY)
-        .join(F.broadcast(reads_data), PLAY)
-    )
+    base = throw_frames(tracking).join(F.broadcast(reads), PLAY)
     base = base.withColumn(
         "read_index",
         argmin_across(
             [F.col(c).cast("double") for c in READS],
             F.col("throw_offset").cast("double"),
         ).cast("int"),
-    )
-    base = base.withColumn(
-        "expected_receiver",
-        dynamic_lookup(
-            {str(i + 1): F.col(t) for i, t in enumerate(TARGETS)},
-            F.col("read_index").cast("string"),
-        ),
     )
     targeted = player_play.filter(F.col("wasTargettedReceiver")).select(
         *PLAY, F.col("nflId").alias("targeted_receiver")
@@ -84,27 +81,52 @@ def play_reads(
         .select(*PLAY, "nflId", F.col("displayName").alias("qb"))
         .distinct()
     )
-    out = (
+    return (
         base.join(F.broadcast(targeted), PLAY, "left")
         .join(F.broadcast(qbs), PLAY)
-        .withColumn(
-            "is_expected_receiver",
-            F.when(
-                F.col("targeted_receiver") == F.col("expected_receiver"), 1
-            ).otherwise(0),
-        )
         .withColumn(
             "stuck_to_first",
             F.when(F.col("read_index") == 1, 1).otherwise(0),
         )
-        .withColumn(
-            "threw_to_first",
-            F.when(
-                F.col("targeted_receiver") == F.col("firstTarget"), 1
-            ).otherwise(0),
-        )
     )
-    return out
+
+
+def with_targets(context: DataFrame, reads_data: DataFrame) -> DataFrame:
+    """`play_context` joined to the read targets (`reads_data`): the
+    expected receiver of the read the throw fell in, and whether the QB
+    threw to them or to the first read."""
+    out = context.join(F.broadcast(reads_data), PLAY).withColumn(
+        "expected_receiver",
+        dynamic_lookup(
+            {str(i + 1): F.col(t) for i, t in enumerate(TARGETS)},
+            F.col("read_index").cast("string"),
+        ),
+    )
+    return out.withColumn(
+        "is_expected_receiver",
+        F.when(
+            F.col("targeted_receiver") == F.col("expected_receiver"), 1
+        ).otherwise(0),
+    ).withColumn(
+        "threw_to_first",
+        F.when(F.col("targeted_receiver") == F.col("firstTarget"), 1).otherwise(0),
+    )
+
+
+def play_reads(
+    tracking: DataFrame,
+    plays: DataFrame,
+    player_play: DataFrame,
+    players: DataFrame,
+    dropback_timing: DataFrame,
+    reads_data: DataFrame,
+) -> DataFrame:
+    """Play-level read assignment: which read window the throw fell in,
+    who the expected receiver was, whether the QB hit them."""
+    return with_targets(
+        play_context(tracking, plays, player_play, players, dropback_timing),
+        reads_data,
+    )
 
 
 def press_data(play_reads_df: DataFrame, min_snaps: int = 1) -> DataFrame:

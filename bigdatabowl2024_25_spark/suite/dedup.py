@@ -572,9 +572,8 @@ def q70_corpus_hygiene(spark, sf_dir):
         portable_hash64(F.col("text")).alias("n"),
     )
 
-    # lm_train is fully lazy since round 8 (the vocab size rides as a
-    # broadcast 1-row frame); only the persist() of the vocab-bounded
-    # count table carries across the plan — tiny, LRU-evictable.
+    # lm_train is fully lazy (the vocab size rides as a broadcast 1-row
+    # frame) and persists nothing.
     bigrams, contexts, vocab = lm_train(corpus, "text", "doc_id")
     lm = lm_perplexity(
         corpus, "text", "doc_id", bigrams, contexts, vocab, alpha=0.1

@@ -1153,8 +1153,8 @@ _BPE_JOINED = (
     SELECT * FROM (VALUES {_BBPE_VALUES})
         t(kind, doc_id, part_id, byte_len, content_md5)
     UNION ALL
-    -- bpe_prod: the forced production-path reroute is bit-identical
-    -- to the chain (parity theorem), so it shares the bpe CTE
+    -- bpe_prod: 'bpe' and 'bpe_prod' rows come from one encode, so
+    -- bpe_prod shares the bpe CTE
     SELECT 'bpe_prod' AS kind, doc_id,
            CAST(CASE WHEN joined IS NULL THEN NULL
                 WHEN joined = '' THEN 0

@@ -219,3 +219,141 @@ def test_partial_radius_optimizer_parity_edges():
     assert np.all(closed[0] == 0.0)  # w = 0, slower than ball
     assert np.all(closed[1] == 0.0)  # s = 0
     assert np.all(closed[2] == R_CAP) and np.all(closed[3] == R_CAP)
+
+
+# ---- bit-identity of the vectorized `overlap` ----------------------------
+
+
+def _matrix_partial_radius(s, px, py, bs, bx, by):
+    """`partial_radius` as it computed its headings per call."""
+    s, bs = np.asarray(s, float)[:, None], np.asarray(bs, float)[:, None]
+    wx = (np.asarray(px, float) - np.asarray(bx, float))[:, None]
+    wy = (np.asarray(py, float) - np.asarray(by, float))[:, None]
+    theta = np.linspace(0.0, 2.0 * np.pi, N_ANGLES, endpoint=False)[None, :]
+    ux, uy = np.cos(theta), np.sin(theta)
+    a = bs * bs - s * s
+    b = -2.0 * s * s * (ux * wx + uy * wy)
+    c = -(s * s) * (wx * wx + wy * wy)
+    disc = np.maximum(b * b - 4.0 * a * c, 0.0)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        r = (-b + np.sqrt(disc)) / (2.0 * a)
+    r = np.where(a <= 0.0, R_CAP, r)
+    return np.clip(r, 0.0, R_CAP)
+
+
+def _matrix_overlap(o_speed, o_dir_deg, ox, oy, defenders, ball_speed, bx,
+                    by, density, seed, reached):
+    """The (m, k)-matrix `overlap` the loop form replaced, kept verbatim
+    but for `reached`, which records each call's reachable-point count."""
+    radii = _matrix_partial_radius(
+        np.array([o_speed]), np.array([ox]), np.array([oy]),
+        np.array([ball_speed]), np.array([bx]), np.array([by]),
+    )[0]
+    rmax = float(radii.max())
+    if rmax <= 0.0:
+        reached.append("rmax<=0")
+        return 0.0
+    x0, x1 = max(ox - rmax, 0.0), min(ox + rmax, 120.0)
+    y0, y1 = max(oy - rmax, 0.0), min(oy + rmax, 53.3)
+    area = max(x1 - x0, 0.0) * max(y1 - y0, 0.0)
+    n = int(area * density)
+    if n <= 0:
+        reached.append("n==0")
+        return 0.0
+    rng = np.random.default_rng(seed)
+    pts = rng.uniform((x0, y0), (x1, y1), size=(n, 2))
+    dox, doy = pts[:, 0] - ox, pts[:, 1] - oy
+    ang = np.arctan2(doy, dox) % (2.0 * np.pi)
+    idx = np.floor(ang / (2.0 * np.pi / N_ANGLES)).astype(np.int64) % N_ANGLES
+    o_reach = (dox * dox + doy * doy) <= radii[idx] ** 2
+    rpts = pts[o_reach]
+    m = len(rpts)
+    reached.append(m)
+    if m == 0:
+        return 0.0
+    dbx, dby = rpts[:, 0] - bx, rpts[:, 1] - by
+    d_ball2 = dbx * dbx + dby * dby
+    if defenders.size:
+        dx = rpts[:, 0][:, None] - defenders[None, :, 0]
+        dy = rpts[:, 1][:, None] - defenders[None, :, 1]
+        sdef2 = np.maximum(defenders[None, :, 2], 1e-9) ** 2
+        n_reach = (
+            (dx * dx + dy * dy) * (ball_speed * ball_speed)
+            <= d_ball2[:, None] * sdef2
+        ).sum(axis=1)
+    else:
+        n_reach = np.zeros(m, dtype=np.int64)
+    dir_rad = math.radians(o_dir_deg)
+    dang = np.abs((ang[o_reach] - dir_rad + np.pi) % (2.0 * np.pi) - np.pi)
+    dir_bonus = dang <= (np.pi / 8.0)
+    score = np.where(
+        n_reach == 0,
+        1.0 + 0.2 * dir_bonus,
+        np.where(n_reach > 1, -0.2 * n_reach, 0.0),
+    )
+    return float(score.sum())
+
+
+def _defenders(rng, k):
+    return np.column_stack([
+        rng.uniform(0.0, 120.0, k), rng.uniform(0.0, 53.3, k),
+        rng.uniform(0.0, 9.0, k),
+    ])
+
+
+def _overlap_rows():
+    """(args, density, seed) rows: 240 seeded random rows plus the edge
+    cases, each named by what it exercises."""
+    rng = np.random.default_rng(20240613)
+    rows = []
+    for i in range(240):
+        k = int(rng.integers(0, 12))
+        rows.append((
+            (rng.uniform(0.0, 12.0), rng.uniform(-30.0, 390.0),
+             rng.uniform(0.0, 120.0), rng.uniform(0.0, 53.3),
+             _defenders(rng, k), rng.uniform(8.0, 25.0),
+             rng.uniform(0.0, 120.0), rng.uniform(0.0, 53.3)),
+            float(rng.choice([0.5, 2.0, 5.0])),
+            int(rng.integers(0, 2**62)),
+        ))
+    eleven = _defenders(rng, 11)
+    rows += [
+        # no defenders
+        ((8.0, 90.0, 30.0, 25.0, np.empty((0, 3)), 18.0, 20.0, 20.0), 5.0, 1),
+        # rmax <= 0: a standing player
+        ((0.0, 10.0, 30.0, 25.0, eleven, 18.0, 20.0, 20.0), 5.0, 2),
+        # bs <= s: the R_CAP box, clipped to the field
+        ((20.0, 200.0, 60.0, 26.0, eleven, 20.0, 50.0, 20.0), 1.0, 3),
+        ((25.0, 45.0, 2.0, 51.0, eleven[:4], 18.0, 60.0, 10.0), 0.5, 4),
+        # 11 defenders, density 100
+        ((6.0, 0.0, 40.0, 20.0, eleven, 18.0, 35.0, 22.0), 100.0, 5),
+        ((3.0, 300.0, 110.0, 50.0, eleven, 14.0, 100.0, 45.0), 100.0, 6),
+        # the player at the ball
+        ((6.0, 45.0, 30.0, 25.0, eleven, 18.0, 30.0, 25.0), 5.0, 7),
+        # ties: a defender at the ball, as fast as it, reaches every
+        # point exactly when the ball does
+        ((6.0, 45.0, 30.0, 25.0, np.vstack([eleven[:3], [[40.0, 20.0, 18.0]]]),
+          18.0, 40.0, 20.0), 5.0, 9),
+        # a box too small for one draw
+        ((1.0, 30.0, 60.0, 26.0, eleven, 20.0, 64.0, 26.0), 0.01, 8),
+    ]
+    # m == 0: one or two draws in a box around a small, near-circular
+    # reachable region; some of these seeds land outside it
+    rows += [
+        ((1.0, 30.0, 60.0, 26.0, eleven, 20.0, 64.0, 26.0), 1.5, s)
+        for s in range(40)
+    ]
+    return rows
+
+
+def test_overlap_bit_identical_to_matrix_form():
+    reached = []
+    for args, density, seed in _overlap_rows():
+        want = _matrix_overlap(*args, density, seed, reached)
+        got = overlap(*args, density=density, seed=seed)
+        assert float.hex(got) == float.hex(want), (args, density, seed)
+    assert len(reached) >= 200
+    counts = [m for m in reached if isinstance(m, int)]
+    # every early exit and both sides of the m == 0 test were reached
+    assert "rmax<=0" in reached and "n==0" in reached and 0 in counts
+    assert max(counts) > 10_000  # the density-100 rows

@@ -4,6 +4,8 @@ A6 stage contracts, and hand-checkable invariants hold."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -228,20 +230,53 @@ def test_matchup_counts(t):
         assert r.total_matchups >= r.matchups
 
 
-def test_full_dag_materialized(spark, t, tmp_path):
+def _persisted_rdds(spark) -> set:
+    """Ids of the persisted RDDs. Compare as sets: the ContextCleaner may
+    drop other tests' lingering RDDs meanwhile, so only ids a call added
+    show a leak."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def _columns(schema):
+    """(name, type) per column; a parquet read-back is nullable throughout."""
+    return [(f.name, f.dataType.simpleString()) for f in schema]
+
+
+def test_full_dag_materialized(spark, t, tmp_path, monkeypatch):
     """SURVEY §3: the five-stage DAG with parquet stage tables — every
     stage persists, reads back, and feeds the next; stage keys hold."""
-    from bigdatabowl2024_25_spark.pipelines.dag import run_dag
+    from bigdatabowl2024_25_spark.pipelines import dag
 
+    written = {}
+    write = dag.write_table
+
+    def recording_write(df, path, *args, partition_by=(), **kwargs):
+        written[os.path.basename(path)] = (df.schema, list(partition_by))
+        return write(df, path, *args, partition_by=partition_by, **kwargs)
+
+    monkeypatch.setattr(dag, "write_table", recording_write)
+    persisted = _persisted_rdds(spark)
     # run_dag writes its stages from builder threads: every job it
     # starts must still carry the caller's job group
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     ungrouped = set(tracker.getJobIdsForGroup(None))
     with job_group(sc, "test_run_dag") as jobs:
-        out = run_dag(spark, t, str(tmp_path / "stages"), density=3.0)
+        out = dag.run_dag(spark, t, str(tmp_path / "stages"), density=3.0)
     assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
     assert jobs()
+    # the play_context cut is released once press_data is written
+    assert not _persisted_rdds(spark) - persisted
+    # each stage reads back with the schema it was written with, its
+    # partition columns last (no schema inference: gameId stays bigint)
+    assert set(written) == set(out)
+    for name, df in out.items():
+        schema, parts = written[name]
+        want = [f for f in schema if f.name not in parts]
+        want += [schema[c] for c in parts]
+        assert _columns(df.schema) == _columns(want), name
+        if "gameId" in df.columns:
+            assert dict(df.dtypes)["gameId"] == "bigint", name
     expected = {
         "cleaned_player_data",
         "radius_data",
@@ -259,11 +294,40 @@ def test_full_dag_materialized(spark, t, tmp_path):
     assert_unique_key(out["dropback_timing"], ["gameId", "playId"])
     assert_unique_key(out["press_data"], ["nflId"])
     # partition layout: gameId directories exist for the frame tables
-    import os
     assert any(
         d.startswith("gameId=")
         for d in os.listdir(tmp_path / "stages" / "radius_data")
     )
+
+
+def test_run_dag_releases_its_cut_when_a_branch_raises(
+    spark, t, tmp_path, monkeypatch
+):
+    """A failing branch must not strand the dropback branch's
+    play_context cut: the scope releases it as the error propagates."""
+    from bigdatabowl2024_25_spark.boundary import BoundaryCaches
+    from bigdatabowl2024_25_spark.pipelines import dag
+
+    cuts = []
+    cut = BoundaryCaches.cut
+
+    def counting_cut(self, df, eager=True):
+        cuts.append(df)
+        return cut(self, df, eager)
+
+    def failing_build(*args):
+        raise RuntimeError("injected cleaned_player_data failure")
+
+    monkeypatch.setattr(BoundaryCaches, "cut", counting_cut)
+    monkeypatch.setattr(
+        openness_prep, "build_cleaned_player_data", failing_build
+    )
+    persisted = _persisted_rdds(spark)
+    with pytest.raises(RuntimeError, match="injected"):
+        dag.run_dag(spark, t, str(tmp_path / "stages"), density=3.0)
+    # the sibling branch finished (and cut) before the error surfaced
+    assert len(cuts) == 1
+    assert not _persisted_rdds(spark) - persisted
 
 
 def test_cover_threshold_disguise_data(spark):
